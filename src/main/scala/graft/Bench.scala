@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
 
@@ -63,31 +62,6 @@ import scala.jdk.CollectionConverters._
   * reader can see directly when a reading is GC-dominated.
   */
 object Bench {
-  // sink defeats dead-code elimination of the calibration spin
-  @volatile private var calibSink: Long = 0L
-
-  private def spin(iters: Long): Long = {
-    var x = 88172645463325252L; var i = 0L
-    while (i < iters) { x ^= x << 13; x ^= x >>> 7; x ^= x << 17; i += 1 }
-    x
-  }
-
-  /** Wall seconds for `nThreads` parallel fixed spins (400M xorshift
-    * steps each). Pure ALU, zero allocation: on an uncontended machine
-    * this is a constant for a given CPU model; inflation measures
-    * external pressure (SMT siblings, cgroup throttling, freq scaling).
-    */
-  private def calibSec(nThreads: Int): Double = {
-    val iters = 400000000L
-    calibSink ^= spin(iters / 8) // JIT warmup outside the timed region
-    val ts = (1 to nThreads).map(_ => new Thread(() => {
-      calibSink ^= spin(iters)
-    }))
-    val t0 = System.nanoTime
-    ts.foreach(_.start()); ts.foreach(_.join())
-    (System.nanoTime - t0) / 1e9
-  }
-
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     // Optional entry-name args: `runMain graft.Bench ms_a6_spw_regen ...`
@@ -102,24 +76,7 @@ object Bench {
         require(missing.isEmpty, s"unknown bench entries: ${missing.mkString(", ")}")
         only.toSeq.sorted
       }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      // Scan splits sized to COMPUTE cost, not bytes: MS visibility
-      // rows and media payloads carry ~100× the per-byte decode cost
-      // of flat columns, and at the fixture's MB sizes the 128 MB
-      // default pins whole array-heavy scans on 1-2 tasks (measured:
-      // the 10× MS averaging probes ran at parallelism ≈ 2). 2 MB
-      // keeps small flat tables at one split while letting dense
-      // scans fan out; on a real cluster this knob scales with
-      // bytes-per-core of the densest table.
-      .config("spark.sql.files.maxPartitionBytes", s"${2 * 1024 * 1024}")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session(Session.ComputeSizedSplits)
 
     // Opt-in state-store telemetry (GRAFT_STATE_METRICS=1) for the
     // streaming scale probes: track the max total state rows / bytes
@@ -243,7 +200,7 @@ object Bench {
 
     // environment sanity reading before any entry runs — recorded to the
     // JSON so a whole-run contamination is visible even without verdicts
-    val calibStart = calibSec(cpus.toInt)
+    val calibStart = CalibProbe.calibSec(Session.cpus)
     // Pin gate (VERDICT r11 #4): a committed BENCH pin must come from a
     // clean window. A start calibration more than 1.1× nominal means
     // the machine's effective CPU throughput is already degraded before
@@ -287,7 +244,7 @@ object Bench {
     // a real regression; an inflated one makes it unadjudicable
     // (round-9's st2 false positive — see the case5 scaladoc)
     val calibReprobe: Option[Double] =
-      if (candidates.isEmpty) None else Some(calibSec(cpus.toInt))
+      if (candidates.isEmpty) None else Some(CalibProbe.calibSec(Session.cpus))
     val envContaminated = (for {
       n <- calibNominal; c <- calibReprobe
     } yield c >= 1.35 * n).getOrElse(false)

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
 /** Dump `.explain("formatted")` for named SparkEntry queries to
@@ -13,8 +12,8 @@ import java.nio.file.{Files, Paths}
   *   dumps never silently land in a previous round's evidence dir
   *   (ADVICE r18).
   *
-  * Session config mirrors graft.Bench (same shuffle partitions, AQE,
-  * maxPartitionBytes) so the dumped plan is the plan the bench runs.
+  * The session is graft.Bench's (`Session(Session.ComputeSizedSplits)`)
+  * so the dumped plan is the plan the bench runs.
   * Entries that return an already-materialized local/checkpoint frame
   * (streaming sinks, pairs-style entries) dump the trivial scan of the
   * result — for those the interesting plans are internal; dump the
@@ -33,16 +32,7 @@ object PlanDump {
     val missing = names.filterNot(SparkEntry.queries.contains)
     require(missing.isEmpty, s"unknown entries: ${missing.mkString(", ")}")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.files.maxPartitionBytes", s"${2 * 1024 * 1024}")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session(Session.ComputeSizedSplits)
     val outDir = Paths.get(s"/root/repo/plans/$tag")
     Files.createDirectories(outDir)
     names.foreach { n =>

@@ -124,13 +124,7 @@ object ScaleFixtures {
       "usage: ScaleFixtures <srcSfDir> <outDir> <factor> [events|documents|embeddings|embeddings_reflect]")
     val Array(src, out, f) = args.take(3)
     val table = if (args.length == 4) args(3) else "events"
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session()
     import java.io.File
     import java.nio.file.Files
     val outDir = new File(out); outDir.mkdirs()

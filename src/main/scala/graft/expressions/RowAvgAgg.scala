@@ -27,7 +27,8 @@ final class RowBufN(
 
 /** Row-level dual-population averages (SURVEY §2.3 A1 row stage) as a
   * native `TypedImperativeAggregate` — same escalation as
-  * [[VisAvgAgg]], bit-identical to graft.ops.VisAggregator.RowAvg
+  * [[VisAvgAgg]], bit-identical to graft.ops.VisAggregator.RowAvg (the
+  * typed reference implementation in the test sources)
   * (equivalence-tested by RowAvgAggSpec and the shared oracles).
   * Semantics per reference averaging.py:125-173: TIME = mean(nom),
   * INTERVAL = sum(nom), TIME_CENTROID/EXPOSURE/UVW/WEIGHT/SIGMA over

@@ -24,7 +24,8 @@ final class VisBufN(
 
 /** The averaging kernel (SURVEY §2.3 A1/A2/A4) as a native
   * `TypedImperativeAggregate` — the §7.3 escalation path from the typed
-  * `Aggregator` (graft.ops.VisAggregator.VisAvg), which it matches
+  * `Aggregator` (graft.ops.VisAggregator.VisAvg, kept in the test
+  * sources as the reference implementation), which it matches
   * bit-for-bit (equivalence-tested by VisAvgAggSpec and the shared
   * oracle entries).
   *

@@ -191,7 +191,6 @@ object Bda {
                         sessionParts: Int): Option[Int] = {
     val target = s.conf
       .getOption("spark.graft.avg.statePartitionBytes")
-      .orElse(sys.env.get("GRAFT_AVG_STATE_PARTITION_BYTES"))
       .map(_.toLong).getOrElse(TargetStateBytesPerPartition)
     val derived = math.ceil(est.toDouble / target).toInt
     val chosen = if (derived > sessionParts) Some(derived) else None

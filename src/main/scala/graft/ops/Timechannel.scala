@@ -6,9 +6,9 @@ import graft.ms.MsWriter
 
 /** The `timechannel` pipeline end-to-end (SURVEY §3 E1, §7.2): read a
   * parquet MS, select + flag (P1–P4), bin time (W2), run the averaging
-  * kernel (A1/A2 via graft.ops.VisAggregator), assemble the output main
-  * table (P5–P7), rewrite SPECTRAL_WINDOW (A3), and write the output MS
-  * (S7–S10 via graft.ms.MsWriter).
+  * kernels (A1/A2 via graft.expressions.VisAvgAgg / RowAvgAgg), assemble
+  * the output main table (P5–P7), rewrite SPECTRAL_WINDOW (A3), and
+  * write the output MS (S7–S10 via graft.ms.MsWriter).
   *
   * Reference lifecycle: /root/reference/xova/apps/xova/app.py:59-159;
   * output assembly averaging.py:97-181; SPW rewrite averaging.py:357-406.
@@ -100,8 +100,9 @@ object Timechannel {
       col("TIME"), col("INTERVAL"), col("TIME_CENTROID"), col("EXPOSURE"),
       col("FROW"), col("UVW"), col("WEIGHT"), col("SIGMA")).as("R")
     // graft.expressions.VisAvgAgg = the native TypedImperativeAggregate
-    // kernel (flat buffers, zero per-row allocation); VisAggregator's
-    // typed Aggregator is the bit-identical reference implementation.
+    // kernel (flat buffers, zero per-row allocation); the typed
+    // Aggregator graft.ops.VisAggregator in the test sources is the
+    // bit-identical reference implementation.
     val visAggs = args.dataCols.map { case (from, to) =>
       graft.expressions.VisAvgAgg(hasWs, hasSs)(
         col("FROW"), col(from), col("FLAG"),

@@ -19,9 +19,10 @@ import graft.ops.{Flags, TimeAvg, Timechannel}
   * binary doubles).
   *
   * These entries run the averaging at exploded (row,chan,corr) grain so
-  * DuckDB can mirror them; the production path (graft.ops.VisAggregator)
-  * keeps the nested arrays and aggregates in a single shuffle — the
-  * explode here is oracle scaffolding, not the scale architecture.
+  * DuckDB can mirror them; the production path (the VisAvgAgg/RowAvgAgg
+  * kernels in graft.expressions) keeps the nested arrays and aggregates
+  * in a single shuffle — the explode here is oracle scaffolding, not the
+  * scale architecture.
   */
 object MsQueries {
   type Q = (SparkSession, String) => DataFrame
@@ -415,7 +416,7 @@ object MsQueries {
         .agg(count(lit(1)).as("n_rows"))),
 
     // S7 + E1: the PRODUCTION pipeline end-to-end — read fixture MS, run
-    // the real VisAggregator kernel (A1/A2, chan_bin=4), write a parquet
+    // the real VisAvgAgg/RowAvgAgg kernels (A1/A2, chan_bin=4), write a parquet
     // MS (S7/S8/S9/S10), read it back, and emit per-DDID exact stats.
     // The oracle recomputes the same stats from the INPUT tables alone,
     // so this hash-checks the whole lifecycle: binning, dual-population

@@ -18,56 +18,12 @@ import org.apache.spark.sql.functions._
 object StreamingQueries {
   type Q = (SparkSession, String) => DataFrame
 
-  /** Probe-sink dirs (data + checkpoint) registered for JVM-exit
-    * cleanup: the returned frame lazily reads `$dir/out`, so the dir
-    * must outlive the entry — but unlike every other streaming temp
-    * dir it has no in-entry rm() point. Probe runs are
-    * one-entry-per-JVM (the probe discipline), so a shutdown hook
-    * bounds the residue at one corpus-sized dir per process instead of
-    * accumulating across suite runs under /tmp.
-    */
-  private val probeSinkDirs =
-    new java.util.concurrent.ConcurrentLinkedQueue[java.io.File]()
-  private lazy val probeSinkHookInstalled: Boolean = {
-    def rmRec(f: java.io.File): Unit = {
-      Option(f.listFiles()).foreach(_.foreach(rmRec)); f.delete(); ()
-    }
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      var f = probeSinkDirs.poll()
-      while (f != null) { rmRec(f); f = probeSinkDirs.poll() }
-    }))
-    true
-  }
-
   /** Run `stream` to completion into a memory sink and return the sink
     * table MATERIALIZED as a local frame (the temp view dies when the
     * entry re-runs) — the tail every streaming entry shares.
     */
   private def sinkToLocal(s: SparkSession, name: String,
       stream: DataFrame, mode: String): DataFrame = {
-    // PROBE-ONLY file sink (GRAFT_STREAM_PROBE_SINK=parquet, append
-    // mode only): the memory sink accumulates every emitted row on the
-    // driver, so at the 100× st10 probe the HARNESS heap (~12.9 M
-    // boxed rows into 8 GB) becomes the wall long before the engine's
-    // horizon-bounded state does — measured: old-gen pinned at 100%
-    // while state held steady at 216 MB. A parquet sink streams output
-    // straight to disk, which is also what a production deployment of
-    // the append-mode kernel would do.
-    if (sys.env.get("GRAFT_STREAM_PROBE_SINK").contains("parquet")
-        && mode == "append") {
-      val dir = java.nio.file.Files
-        .createTempDirectory("graft_probe_sink").toFile
-      require(probeSinkHookInstalled); probeSinkDirs.add(dir)
-      withLocalCkpt(s) { ckpt =>
-        val q = stream.writeStream.format("parquet")
-          .option("path", s"$dir/out")
-          .option("checkpointLocation", ckpt)
-          .outputMode(mode).start()
-        try q.processAllAvailable()
-        finally q.stop()
-      }
-      return s.read.parquet(s"$dir/out")
-    }
     s.catalog.dropTempView(name)
     withLocalCkpt(s) { ckpt =>
       val q = stream.writeStream.format("memory").queryName(name)
@@ -76,21 +32,9 @@ object StreamingQueries {
       try q.processAllAvailable()
       finally q.stop()
     }
-    if (sys.env.contains("GRAFT_STREAM_PROBE_SINK"))
-      // PROBE-ONLY override (scale probes, never the graded/oracle
-      // path): hand back the sink-backed view itself — the caller's
-      // same-pass action (Bench's noop write) runs over it in-engine,
-      // so the probe measures the state machinery, not a driver-side
-      // collect + re-createDataFrame of the full sink (1.29 M boxed
-      // rows for st2 at 10×, 5–7 s of GC per pass billed to the state
-      // measurement). The graded path keeps the materializing collect
-      // because the temp view dies when the entry re-runs.
-      s.table(name)
-    else {
-      val out = s.table(name).collect()
-      s.createDataFrame(
-        java.util.Arrays.asList(out: _*), s.table(name).schema)
-    }
+    val out = s.table(name).collect()
+    s.createDataFrame(
+      java.util.Arrays.asList(out: _*), s.table(name).schema)
   }
 
   /** Stage `df` as `nFiles` parquet files in a fresh temp dir and open
@@ -254,7 +198,7 @@ object StreamingQueries {
     * Every entry here checkpoints to a LOCAL temp dir, and on a local
     * filesystem with no native hadoop library the checkpoint machinery
     * forks a PROCESS per file operation, twice over (r19 thread-dump +
-    * /proc/stat fork profiling, graft.StreamCkptProbe):
+    * /proc/stat fork profiling):
     *   - the default FileContext-based manager's symlink-aware rename
     *     execs `readlink` per file-status call
     *     (AbstractFileSystem.renameInternal → RawLocalFileSystem

@@ -8,8 +8,8 @@ import graft.pipeline.{Ann, Dedup}
 /** Physical-plan regression guards for the scale properties DESIGN.md
   * claims: fact-scan counts, no single-partition exchanges on fact
   * paths, and no all-pairs joins in the sublinear dedup/ANN paths.
-  * These lock in what `graft.PlanAudit` prints, so a plan regression
-  * fails the suite instead of waiting for a human to re-run the audit.
+  * A plan regression fails the suite instead of waiting for a human to
+  * re-read an explain dump.
   */
 class PlanShapeSpec extends SparkSpec {
 
@@ -53,6 +53,47 @@ class PlanShapeSpec extends SparkSpec {
       MsTables.ddid(spark), Bda.Args()))
     assert(mainScans(p) == 2, s"expected full + t0 passes, got:\n$p")
     assertNoGlobalSort(p, "bda")
+  }
+
+  test("BDA write plan: one averaging shuffle (one partial+final graft_vis_avg pair)") {
+    // The full outMain plan Bda.run hands to the writer — averaging +
+    // remap + output layout. With no cross-action persist, the proof
+    // that the averaging shuffle runs ONCE is exactly two graft_vis_avg
+    // ObjectHashAggregate nodes (the sizing pre-pass reads the pruned
+    // sizing frame, never the averaged table).
+    val args = graft.queries.BdaQueries.raggedArgs
+    val main = MsTables.main(spark)
+    val spw = MsTables.spw(spark); val ddid = MsTables.ddid(spark)
+    val chanls = Bda.channelisationsSized(main, spw, ddid, args).collect()
+      .map(r => (r.getInt(0), r.getInt(1), r.getInt(2), r.getInt(3))).toSeq
+    val (_, _, remapDf) = Bda.regenerate(spark, chanls, spw)
+    val p = plan(Bda.remap(Bda.averagedMain(main, spw, ddid, args), remapDf))
+    val aggs = p.linesIterator.count(l =>
+      l.contains("ObjectHashAggregate") && l.contains("graft_vis_avg"))
+    assert(aggs == 2, s"expected 2 graft_vis_avg aggregate nodes, got $aggs:\n$p")
+  }
+
+  test("FIELD_ID selection on a written output MS is a partition filter") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_plan_shape").toFile
+    try {
+      val out = s"${dir.getAbsolutePath}/tc_out"
+      Timechannel.run(spark, graft.ms.SyntheticMs.root, out, Timechannel.Args(
+        timeBinSecs = 60000.0, chanBinSize = 4,
+        dataCols = Seq("DATA" -> "DATA"), force = true, validate = false))
+      val p = plan(spark.read.parquet(s"$out/main")
+        .filter(org.apache.spark.sql.functions.col("FIELD_ID") === 0))
+      // the FileScan line also lists DataFilters: read the
+      // PartitionFilters list itself
+      val partFilters = """PartitionFilters: \[([^\]]*)\]""".r
+        .findAllMatchIn(p).map(_.group(1)).mkString(" ")
+      assert(partFilters.contains("FIELD_ID"),
+        s"field selection is not partition-pruned:\n$p")
+    } finally {
+      def rm(f: java.io.File): Unit = {
+        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
+      }
+      rm(dir)
+    }
   }
 
   // The public pairs ops return an eagerly-materialized scan (storage

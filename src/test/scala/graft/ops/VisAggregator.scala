@@ -4,7 +4,11 @@ import org.apache.spark.sql.{Column, Encoder, Encoders}
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions.udaf
 
-/** The averaging kernel (SURVEY §2.3 A1/A2): flag-aware, dual-population
+/** Typed-`Aggregator` reference implementation of the averaging kernel
+  * — test-only: production runs the native graft.expressions.VisAvgAgg /
+  * RowAvgAgg, which VisAvgAggSpec checks bit-for-bit against this.
+  *
+  * The averaging kernel (SURVEY §2.3 A1/A2): flag-aware, dual-population
   * (nominal vs effective), weighted complex average over nested
   * `(chan, corr)` visibility matrices, with channel re-binning — the
   * Spark-native replacement for the reference's numba kernel
