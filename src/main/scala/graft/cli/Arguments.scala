@@ -82,14 +82,9 @@ object Arguments {
   }
 
   sealed trait Command
-  /** `averageUvw` = --average-uvw-coordinates: keep the averaged UVWs
-    * instead of the fixvis recomputation post-pass
-    * (arguments.py:115-120, warning at app.py:126-128).
-    */
   case class TimechannelCmd(ms: String, output: String,
-      args: Timechannel.Args, averageUvw: Boolean = false) extends Command
-  case class BdaCmd(ms: String, output: String, args: Bda.Args,
-      averageUvw: Boolean = false) extends Command
+      args: Timechannel.Args) extends Command
+  case class BdaCmd(ms: String, output: String, args: Bda.Args) extends Command
   case class CheckCmd(ms: String) extends Command
 
   /** Parse a full command line (reference defaults throughout). */
@@ -155,12 +150,12 @@ object Arguments {
         respectFlagRow = boolFlag("-rfr", "--respect-flag-row"),
         includeAutoCorrs = boolFlag("--include-auto-correlations"),
         force = boolFlag("--force"),
+        averageUvw = boolFlag("--average-uvw-coordinates"),
         // accumulate-until-full walk, the reference kernel's default
         // (chunking.py:107-166); grid binning stays OUR default because
         // it needs no fact-table window (see Timechannel.Args)
         runningBins = boolFlag("--running-bins"),
-        rowChunks = rowChunks, groupRowChunks = groupRowChunks),
-        averageUvw = boolFlag("--average-uvw-coordinates"))
+        rowChunks = rowChunks, groupRowChunks = groupRowChunks))
       case "bda" => BdaCmd(ms, output, Bda.Args(
         decorrelation = flag("-d", "--decorrelation").map(_.toDouble).getOrElse(0.99),
         maxFovDeg = flag("-fov", "--max-fov").map(_.toDouble).getOrElse(15.0),
@@ -172,9 +167,9 @@ object Arguments {
         respectFlagRow = boolFlag("-rfr", "--respect-flag-row"),
         includeAutoCorrs = boolFlag("--include-auto-correlations"),
         force = boolFlag("--force"),
+        averageUvw = boolFlag("--average-uvw-coordinates"),
         runningBins = boolFlag("--running-bins"),
-        rowChunks = rowChunks, groupRowChunks = groupRowChunks),
-        averageUvw = boolFlag("--average-uvw-coordinates"))
+        rowChunks = rowChunks, groupRowChunks = groupRowChunks))
       case "check" => CheckCmd(ms)
       case other => throw new ArgumentException(s"unknown command $other")
     }

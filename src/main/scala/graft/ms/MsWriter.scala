@@ -1,36 +1,81 @@
 package graft.ms
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
-import java.nio.file.{Files, Path, Paths}
-import java.util.Comparator
+import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.util.{Comparator, UUID}
+import scala.concurrent.{Await, ExecutionContext, Future}
+import scala.concurrent.duration.Duration
+import scala.util.Try
 
 /** Parquet MS sink (SURVEY §2.1 S7–S10).
   *
   * Mirrors the reference's output lifecycle:
-  *  - S10 overwrite guard — refuse an existing output unless forced, then
-  *    remove it first (/root/reference/xova/apps/xova/app.py:152-159).
+  *  - S10 overwrite guard — refuse an existing output unless forced
+  *    (/root/reference/xova/apps/xova/app.py:152-159).
   *  - S7/S8 main + regenerated-subtable writes (app.py:107-118).
   *  - S9 verbatim passthrough of every untouched subtable
   *    (/root/reference/xova/apps/xova/subtables.py:9-37) — a parquet
   *    re-write (not a filesystem copy) so it works on any Hadoop-visible
   *    storage and keeps subtable data going through the same IO layer.
+  *
+  * The output MS is committed atomically: every table is written under
+  * a hidden sibling staging directory that one rename moves into place,
+  * so a failed run never leaves a partial MS at the output path, and a
+  * forced overwrite keeps the old output until the new one is complete.
   */
 object MsWriter {
 
-  /** Subtables the averaging pipeline regenerates itself. */
-  val Regenerated = Set("main", "SPECTRAL_WINDOW", "DATA_DESCRIPTION")
+  /** S10: returns normally iff writing may proceed (checked before any
+    * work; a forced overwrite is swapped in by [[writeMs]]).
+    */
+  def guard(outRoot: String, force: Boolean): Unit =
+    if (Files.exists(Paths.get(outRoot)) && !force)
+      throw new IllegalStateException(
+        s"output $outRoot exists; pass force=true to overwrite")
 
-  /** S10: returns normally iff writing may proceed. */
-  def guard(outRoot: String, force: Boolean): Unit = {
-    val p = Paths.get(outRoot)
-    if (Files.exists(p)) {
-      if (!force)
-        throw new IllegalStateException(
-          s"output $outRoot exists; pass force=true to overwrite")
-      Files.walk(p).sorted(Comparator.reverseOrder[Path]())
-        .forEach(f => Files.delete(f))
+  /** The whole output MS, staged and committed with one rename: `main`
+    * (hive-partitioned by `partitionCols`) overlapped by the concurrent
+    * `regenerated` + passthrough subtable writes. On failure the staging
+    * directory is removed (best effort) and `outRoot` is untouched.
+    * Returns the tables written.
+    */
+  def writeMs(spark: SparkSession, inRoot: String, outRoot: String,
+              force: Boolean, main: DataFrame, partitionCols: Seq[String],
+              maxRecordsPerFile: Long,
+              regenerated: Seq[(String, DataFrame)]): Seq[String] = {
+    val out = Paths.get(outRoot).toAbsolutePath.normalize
+    val stage = sibling(out, "staging")
+    implicit val ec: ExecutionContext = ExecutionContext.global
+    val side = Future(passthrough(spark, inRoot, stage.toString, regenerated))
+    try {
+      writeTable(main, stage.toString, "main", partitionCols, maxRecordsPerFile)
+      val tables = "main" +: Await.result(side, Duration.Inf)
+      if (!Files.exists(out)) move(stage, out)
+      else { // forced: set the old output aside until the new one is in
+        guard(outRoot, force)
+        val old = sibling(out, "old")
+        move(out, old)
+        try move(stage, out) catch { case e: Throwable => move(old, out); throw e }
+        Try(deleteTree(old))
+      }
+      tables
+    } catch {
+      case e: Throwable =>
+        Try(Await.ready(side, Duration.Inf))
+        Try(deleteTree(stage))
+        throw e
     }
   }
+
+  private def sibling(p: Path, tag: String): Path =
+    p.resolveSibling(s".${p.getFileName}.$tag-${UUID.randomUUID()}")
+
+  private def move(from: Path, to: Path): Unit =
+    Files.move(from, to, StandardCopyOption.ATOMIC_MOVE)
+
+  private def deleteTree(p: Path): Unit =
+    Files.walk(p).sorted(Comparator.reverseOrder[Path]())
+      .forEach(f => Files.delete(f))
 
   /** S7/S8: one table of the output MS. `partitionCols` hive-partitions
     * the layout (used for `main`: the reference's natural group key, so
@@ -49,26 +94,26 @@ object MsWriter {
       .parquet(s"$outRoot/$table")
   }
 
-  /** S9: copy through every subtable of the input MS that the pipeline
-    * did not regenerate. The ~9 subtables are tiny independent writes to
-    * distinct directories, so they run as CONCURRENT Spark jobs — on a
-    * cluster this collapses ~9 sequential driver→executor round-trips
-    * into one wave (and locally it hides per-job scheduling overhead).
+  /** S8 + S9: write the `regenerated` subtables and copy through every
+    * other subtable of the input MS. The ~9 subtables are tiny
+    * independent writes to distinct directories, so they run as
+    * CONCURRENT Spark jobs — on a cluster this collapses ~9 sequential
+    * driver→executor round-trips into one wave (and locally it hides
+    * per-job scheduling overhead). Returns the table names.
     */
-  def passthrough(spark: SparkSession, inRoot: String, outRoot: String): Seq[String] = {
-    val in = Paths.get(inRoot)
-    val tables = Files.list(in).toArray.toSeq.map(_.asInstanceOf[Path])
-      .filter(Files.isDirectory(_))
-      .map(_.getFileName.toString)
-      .filterNot(Regenerated)
-      .sorted
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration.Duration
+  def passthrough(spark: SparkSession, inRoot: String, outRoot: String,
+                  regenerated: Seq[(String, DataFrame)]): Seq[String] = {
+    val skip = regenerated.map(_._1).toSet + "main"
+    val copied = Files.list(Paths.get(inRoot)).toArray.toSeq
+      .map(_.asInstanceOf[Path]).filter(Files.isDirectory(_))
+      .map(_.getFileName.toString).filterNot(skip).sorted
     implicit val ec: ExecutionContext = ExecutionContext.global
-    val writes = tables.map { t =>
+    val writes = regenerated.map { case (t, df) =>
+      Future(writeTable(df, outRoot, t))
+    } ++ copied.map { t =>
       Future(writeTable(spark.read.parquet(s"$inRoot/$t"), outRoot, t))
     }
     Await.result(Future.sequence(writes), Duration.Inf)
-    tables
+    regenerated.map(_._1) ++ copied
   }
 }

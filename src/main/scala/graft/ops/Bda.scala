@@ -62,6 +62,8 @@ object Bda {
       includeAutoCorrs: Boolean = false,
       force: Boolean = false,
       validate: Boolean = true, // A7/W1 plan pass (reference default)
+      // keep averaged UVWs (see Timechannel.Args.averageUvw)
+      averageUvw: Boolean = false,
       // accumulate-until-full walk with the per-baseline bin width
       // (see Timechannel.Args.runningBins)
       runningBins: Boolean = false,
@@ -313,15 +315,6 @@ object Bda {
     Flags.flagCategory(out)
   }
 
-  /** A5: distinct channelisations over the output
-    * (averaging.py:409-433): (DATA_DESC_ID, SPECTRAL_WINDOW_ID,
-    * POLARIZATION_ID, NUM_CHAN).
-    */
-  def channelisations(out: DataFrame, ddid: DataFrame): DataFrame =
-    out.select("DATA_DESC_ID", "NUM_CHAN").distinct()
-      .join(broadcast(ddid), "DATA_DESC_ID")
-      .select("DATA_DESC_ID", "SPECTRAL_WINDOW_ID", "POLARIZATION_ID", "NUM_CHAN")
-
   /** A5 from the sizing frame alone. CHAN_BIN is by construction a
     * divisor of NUM_CHAN, so every output row of a baseline carries
     * exactly NUM_CHAN / CHAN_BIN channels — the distinct channelisation
@@ -392,7 +385,16 @@ object Bda {
       .drop("DATA_DESC_ID", "NUM_CHAN", "DECORR_CHAN_WIDTH")
       .withColumnRenamed("NEW_DDID", "DATA_DESC_ID")
 
-  /** Full E2 lifecycle. */
+  /** The output main table exactly as [[run]] writes it: averaged,
+    * DATA_DESC_IDs remapped (J2), UVW per [[Uvw.fixvis]], laid out.
+    */
+  def outputMain(main: DataFrame, spw: DataFrame, ddid: DataFrame,
+                 inRoot: String, args: Args, remapDf: DataFrame): DataFrame =
+    Timechannel.layout(Uvw.fixvis(
+      remap(averagedMain(main, spw, ddid, args), remapDf), inRoot,
+      args.averageUvw))
+
+  /** Full E2 lifecycle: returns the list of tables written. */
   def run(spark: SparkSession, inRoot: String, outRoot: String, args: Args): Seq[String] = {
     MsWriter.guard(outRoot, args.force)
     val main = spark.read.parquet(s"$inRoot/main")
@@ -419,24 +421,9 @@ object Bda {
     // exactly the channels that were averaged
     val (newSpw, newDdid, remapDf) = regenerate(spark, chanls,
       Timechannel.selectSpwChannels(spw, args.channels))
-
-    val outMain = remap(averagedMain(main, spw, ddid, args), remapDf)
-      .repartition(col("FIELD_ID"), col("DATA_DESC_ID"), col("SCAN_NUMBER"))
-      .sortWithinPartitions("FIELD_ID", "DATA_DESC_ID", "SCAN_NUMBER",
-        "TIME", "ANTENNA1", "ANTENNA2")
-    // tiny subtable writes overlap the big main write (distinct dirs)
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration.Duration
-    implicit val ec: ExecutionContext = ExecutionContext.global
-    val side = Future {
-      MsWriter.writeTable(newSpw, outRoot, "SPECTRAL_WINDOW")
-      MsWriter.writeTable(newDdid, outRoot, "DATA_DESCRIPTION")
-      MsWriter.passthrough(spark, inRoot, outRoot)
-    }
-    MsWriter.writeTable(outMain, outRoot, "main",
-      partitionCols = TimeAvg.GroupCols,
-      maxRecordsPerFile = args.rowChunks.toLong * args.groupRowChunks)
-    val passed = Await.result(side, Duration.Inf)
-    Seq("main", "SPECTRAL_WINDOW", "DATA_DESCRIPTION") ++ passed
+    MsWriter.writeMs(spark, inRoot, outRoot, args.force,
+      outputMain(main, spw, ddid, inRoot, args, remapDf), TimeAvg.GroupCols,
+      args.rowChunks.toLong * args.groupRowChunks,
+      Seq("SPECTRAL_WINDOW" -> newSpw, "DATA_DESCRIPTION" -> newDdid))
   }
 }

@@ -46,16 +46,6 @@ object Check {
         size(col("CORR_PRODUCT")) =!= col("NUM_CORR") ||
         exists(col("CORR_PRODUCT"), p => size(p) =!= 2))
 
-  def dataShapeViolations(main: DataFrame, ddid: DataFrame, spw: DataFrame,
-                          pol: DataFrame): Long =
-    dataShapeViolationRows(main, ddid, spw, pol).count()
-
-  def spwShapeViolations(spw: DataFrame): Long =
-    spwShapeViolationRows(spw).count()
-
-  def polShapeViolations(pol: DataFrame): Long =
-    polShapeViolationRows(pol).count()
-
   /** All three violation counts in ONE Spark action: each class
     * aggregates to a single tagged row and the rows union — mirroring
     * the oracle's single statement (MsQueries `ms_u2_check_full`) —

@@ -15,8 +15,10 @@ import org.apache.spark.sql.functions._
   * layout (SURVEY §4 O4), so here the pass keeps only its validation
   * and logging roles. Scale shape: projection pushdown means only
   * (keys, TIME, INTERVAL, UVW) leave the scan; the monotonicity window
-  * shuffles those ~50 bytes/row once, partitioned by baseline (high
-  * cardinality, balanced).
+  * shuffles those ~50 bytes/row once, partitioned by the group key
+  * (FIELD_ID, DATA_DESC_ID, SCAN_NUMBER) — one window partition per
+  * group, so the rows of a group are checked in their stored order
+  * across all its baselines.
   */
 object Chunking {
 
@@ -74,7 +76,7 @@ object Chunking {
       f"interval_mean=${s.intervalMean}%.3f max_uvw=${math.sqrt(s.maxUvw2)}%.1f")
     require(s.monotonicViolations == 0,
       s"${s.monotonicViolations} row(s) break the TIME-monotonicity " +
-        "invariant per (group, baseline) — the input MS is not " +
+        "invariant per (field, ddid, scan) group — the input MS is not " +
         "time-sorted (reference chunking.py:287-289)")
     s
   }

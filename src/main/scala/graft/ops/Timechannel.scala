@@ -7,15 +7,18 @@ import graft.ms.MsWriter
 /** The `timechannel` pipeline end-to-end (SURVEY §3 E1, §7.2): read a
   * parquet MS, select + flag (P1–P4), bin time (W2), run the averaging
   * kernels (A1/A2 via graft.expressions.VisAvgAgg / RowAvgAgg), assemble
-  * the output main table (P5–P7), rewrite SPECTRAL_WINDOW (A3), and
-  * write the output MS (S7–S10 via graft.ms.MsWriter).
+  * the output main table (P5–P7) with UVW recomputed at the averaged
+  * time centroids (U1, Uvw.fixvis), rewrite SPECTRAL_WINDOW (A3), and
+  * write the output MS once, committed atomically (S7–S10 via
+  * graft.ms.MsWriter).
   *
   * Reference lifecycle: /root/reference/xova/apps/xova/app.py:59-159;
   * output assembly averaging.py:97-181; SPW rewrite averaging.py:357-406.
   *
   * Scale notes: exactly one wide shuffle (the bin-key groupBy; map-side
   * partial aggregation via the Aggregator's reduce). The t0-per-group
-  * frame and the SPW rewrite are tiny broadcast/driver-side work. Output
+  * frame, the UVW position/phase-centre lookups and the SPW rewrite are
+  * tiny broadcast/driver-side work. Output
   * partition hygiene (the reference's A3′ row_concatenate,
   * averaging.py:39-77) falls out of AQE coalescing + the explicit
   * repartition before the write.
@@ -33,6 +36,8 @@ object Timechannel {
       includeAutoCorrs: Boolean = false,
       force: Boolean = false,
       validate: Boolean = true, // A7/W1 plan pass (reference default)
+      // --average-uvw-coordinates (arguments.py:115-120), see Uvw.fixvis
+      averageUvw: Boolean = false,
       // W2 variant: grid binning (broadcast t0, zero fact-table window)
       // matches the reference kernel for regular sampling; running
       // binning reproduces its accumulate-until-full walk exactly for
@@ -54,8 +59,12 @@ object Timechannel {
       Seq("FLAG", "WEIGHT_SPECTRUM", "SIGMA_SPECTRUM"))
       .distinct.filter(df.columns.contains)
 
-  /** The averaged main table as a DataFrame (no IO). */
-  def averagedMain(main: DataFrame, args: Args): DataFrame = {
+  /** The averaged main table as a DataFrame (no IO). `nRows`: the
+    * selected-row count if known (Chunking's plan stats count the same
+    * rows — channel selection and FROW drop none), else counted here.
+    */
+  def averagedMain(main: DataFrame, args: Args,
+                   nRows: Option[Long] = None): DataFrame = {
     var df = main
     if (!args.includeAutoCorrs) df = Flags.filterAutocorr(df)
     df = Flags.selectFields(df, args.fields)
@@ -67,9 +76,9 @@ object Timechannel {
     // Same computed exchange width as the BDA kernel (Bda
     // .widthFromEstimate), with the uniform kernel's cheaper upper
     // bound: output groups <= input rows (each row lands in exactly
-    // one bin), cells/group read from one (FLAG, WEIGHT) row. Two tiny
-    // column-pruned jobs on the PRE-bin frame (counting after binning
-    // would execute the runningBins window); below the threshold —
+    // one bin), cells/group read from one (FLAG, WEIGHT) row. Up to two
+    // tiny column-pruned jobs on the PRE-bin frame (counting after
+    // binning would execute the runningBins window); below the threshold —
     // every bench scale — the plan (and its map-side partial
     // aggregation) is untouched.
     val sessionParts =
@@ -81,7 +90,8 @@ object Timechannel {
       val nchanOut = (r.getInt(0) + args.chanBinSize - 1) / args.chanBinSize
       nchanOut.toLong * r.getInt(1)
     }.getOrElse(0L)
-    val est = df.count() * cells * args.dataCols.size * Bda.StateBytesPerCell
+    val est = nRows.getOrElse(df.count()) * cells * args.dataCols.size *
+      Bda.StateBytesPerCell
     val width = Bda.widthFromEstimate(
       main.sparkSession, "timechannel", est, sessionParts)
     df = if (args.runningBins) TimeAvg.assignRunning(df, args.timeBinSecs)
@@ -185,45 +195,40 @@ object Timechannel {
         .withColumn("NUM_CHAN", size(col("CHAN_FREQ")))
     }
 
+  /** Output layout of `main` (A3′ output-size hygiene): sorted with the
+    * partition columns as prefix, so the partitioned writer reuses the
+    * sort and TIME order survives within each file.
+    */
+  private[ops] def layout(out: DataFrame): DataFrame =
+    out.repartition(TimeAvg.GroupCols.map(col): _*)
+      .sortWithinPartitions((TimeAvg.GroupCols ++
+        Seq("TIME", "ANTENNA1", "ANTENNA2")).map(col): _*)
+
+  /** The output main table exactly as [[run]] writes it: averaged, UVW
+    * per [[Uvw.fixvis]], laid out. Runs only the sizing and UVW-gate jobs.
+    */
+  def outputMain(main: DataFrame, inRoot: String, args: Args,
+                 nRows: Option[Long] = None): DataFrame =
+    layout(Uvw.fixvis(averagedMain(main, args, nRows), inRoot, args.averageUvw))
+
   /** Full E1 lifecycle: returns the list of tables written. */
   def run(spark: SparkSession, inRoot: String, outRoot: String, args: Args): Seq[String] = {
     MsWriter.guard(outRoot, args.force)
     val main = spark.read.parquet(s"$inRoot/main")
     // E1 step 2 (app.py:74-75): eager plan-stats pass over the SELECTED
     // rows — logs A7 stats, hard-fails on non-monotonic TIME (W1)
-    if (args.validate) {
+    val stats = if (!args.validate) None else {
       var sel = main
       if (!args.includeAutoCorrs) sel = Flags.filterAutocorr(sel)
       sel = Flags.selectScans(Flags.selectFields(sel, args.fields), args.scans)
-      Chunking.validate(sel, "timechannel")
+      Some(Chunking.validate(sel, "timechannel"))
     }
-    // deterministic output order within files + A3′ output-size hygiene;
-    // the sort leads with the partition columns so the partitioned
-    // writer reuses it (no extra sort, TIME order survives per file)
-    val out = averagedMain(main, args)
-      .repartition(col("FIELD_ID"), col("DATA_DESC_ID"), col("SCAN_NUMBER"))
-      .sortWithinPartitions("FIELD_ID", "DATA_DESC_ID", "SCAN_NUMBER",
-        "TIME", "ANTENNA1", "ANTENNA2")
-    // The tiny regenerated-subtable + passthrough writes overlap the big
-    // main-table write as concurrent jobs (distinct directories).
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration.Duration
-    implicit val ec: ExecutionContext = ExecutionContext.global
-    val side = Future {
-      MsWriter.writeTable(
-        averagedSpw(
-          selectSpwChannels(
-            spark.read.parquet(s"$inRoot/SPECTRAL_WINDOW"), args.channels),
-          args.chanBinSize),
-        outRoot, "SPECTRAL_WINDOW")
-      MsWriter.writeTable(
-        spark.read.parquet(s"$inRoot/DATA_DESCRIPTION"), outRoot, "DATA_DESCRIPTION")
-      MsWriter.passthrough(spark, inRoot, outRoot)
-    }
-    MsWriter.writeTable(out, outRoot, "main",
-      partitionCols = TimeAvg.GroupCols,
-      maxRecordsPerFile = args.rowChunks.toLong * args.groupRowChunks)
-    val passed = Await.result(side, Duration.Inf)
-    Seq("main", "SPECTRAL_WINDOW", "DATA_DESCRIPTION") ++ passed
+    val spw = averagedSpw(selectSpwChannels(
+      spark.read.parquet(s"$inRoot/SPECTRAL_WINDOW"), args.channels),
+      args.chanBinSize)
+    MsWriter.writeMs(spark, inRoot, outRoot, args.force,
+      outputMain(main, inRoot, args, stats.map(_.nRows)), TimeAvg.GroupCols,
+      args.rowChunks.toLong * args.groupRowChunks,
+      Seq("SPECTRAL_WINDOW" -> spw))
   }
 }

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** UVW synthesis (SURVEY §2.7 F5, §2.10 U1): recompute baseline UVW
@@ -32,9 +32,11 @@ import org.apache.spark.sql.functions._
   * synthesis is a per-row projection inside whole-stage codegen — no
   * shuffle, trivially parallel at 100 TB (the reference is forced to
   * run this sequentially because casacore measures is not thread-safe,
-  * fixvis.py:129-131). The scalar [[gmstRad]]/[[baselineUvw]] remain as
-  * the spec'd reference semantics; the column form mirrors their
-  * association order term for term, and the oracle's 0.1 mm grid
+  * fixvis.py:129-131). [[fixvis]] applies it to the averaged frame of
+  * timechannel and BDA inside their one `main` write, so the output
+  * main table is written once. The scalar [[gmstRad]]/[[baselineUvw]]
+  * remain as the spec'd reference semantics; the column form mirrors
+  * their association order term for term, and the oracle's 0.1 mm grid
   * absorbs the ≤1 ulp libm-vs-JVM trig spread either way.
   */
 object Uvw {
@@ -183,39 +185,21 @@ object Uvw {
       .drop("_RA", "_DEC", "_P1", "_P2")
   }
 
-  /** U1 — the fixms pass (fixvis.py:196-265 / app.py:122-124): rewrite
-    * the main table of an output MS with synthesized UVW, IN PLACE like
-    * the reference. Parquet cannot update in place, so the fixed table
-    * is staged beside `main` and swapped in with a directory rename —
-    * the stage write materializes everything before the old `main` is
-    * touched, and the rename is a metadata operation on any
-    * Hadoop-compatible FS.
+  /** U1 on the averaged frame (fixvis.py:196-265, app.py:122-128): UVW
+    * recomputed at the averaged TIME_CENTROIDs from the FIELD/ANTENNA
+    * tables of the input MS at `inRoot` (the reference default; the
+    * gates run here, before any write), or with `averageUvw` the
+    * averaged UVWs kept, with the reference's warning.
     */
-  def fixms(spark: SparkSession, msRoot: String): DataFrame = {
-    val main = spark.read.parquet(s"$msRoot/main")
-    val fixed = withSynthUvw(main,
-        spark.read.parquet(s"$msRoot/FIELD"),
-        spark.read.parquet(s"$msRoot/ANTENNA"))
-      .withColumn("UVW", col("SYNTH_UVW")).drop("SYNTH_UVW")
-    val stage = s"$msRoot/main_fixed"
-    // preserve the group-partitioned layout (and its within-file TIME
-    // order) through the rewrite when the input main carries it
-    val partCols = TimeAvg.GroupCols.filter(fixed.columns.contains)
-    val sorted =
-      if (partCols == TimeAvg.GroupCols)
-        fixed.repartition(partCols.map(org.apache.spark.sql.functions.col): _*)
-          .sortWithinPartitions((partCols :+ "TIME")
-            .map(org.apache.spark.sql.functions.col): _*)
-      else fixed
-    val w = sorted.write.mode("overwrite")
-    (if (partCols == TimeAvg.GroupCols) w.partitionBy(partCols: _*) else w)
-      .parquet(stage)
-    val fs = org.apache.hadoop.fs.FileSystem
-      .get(spark.sparkContext.hadoopConfiguration)
-    val mainPath = new org.apache.hadoop.fs.Path(s"$msRoot/main")
-    fs.delete(mainPath, true)
-    require(fs.rename(new org.apache.hadoop.fs.Path(stage), mainPath),
-      s"fixms: rename $stage -> $mainPath failed")
-    spark.read.parquet(s"$msRoot/main")
-  }
+  def fixvis(avg: DataFrame, inRoot: String, averageUvw: Boolean): DataFrame =
+    if (averageUvw) {
+      println("[xova] WARNING: output UVWs are averaged coordinates, " +
+        "not recomputed at the new time centroids (app.py:126-128)")
+      avg
+    } else {
+      val read = avg.sparkSession.read
+      withSynthUvw(avg, read.parquet(s"$inRoot/FIELD"),
+        read.parquet(s"$inRoot/ANTENNA"))
+        .withColumn("UVW", col("SYNTH_UVW")).drop("SYNTH_UVW")
+    }
 }

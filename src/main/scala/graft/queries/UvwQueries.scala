@@ -51,16 +51,15 @@ object UvwQueries {
           (round(element_at(col("SYNTH_UVW"), 3), 4) + lit(0.0)).as("w"))
     }),
 
-    // U1: the fixms pass over a freshly averaged MS — recompute UVW
-    // from the averaged TIME_CENTROID and swap it into `main` IN PLACE
-    // (stage + rename). Reference: fixvis.py:196-265, app.py:122-124.
+    // U1: the fixms pass over a freshly averaged MS — UVW recomputed
+    // from the averaged TIME_CENTROID inside the single `main` write
+    // (Uvw.fixvis). Reference: fixvis.py:196-265, app.py:122-124.
     "ms_u1_fixms" -> ((s, _) => {
       val out = "/tmp/graft_out/tc_fixms"
       Timechannel.run(s, MS, out, Timechannel.Args(
         timeBinSecs = 60000.0, chanBinSize = 4,
         dataCols = Seq("DATA" -> "DATA"), force = true))
-      // fixms needs FIELD/ANTENNA beside main: passthrough provided them
-      Uvw.fixms(s, out)
+      s.read.parquet(s"$out/main")
         .select(col("DATA_DESC_ID"),
           round(element_at(col("UVW"), 1), 4).as("u"),
           round(element_at(col("UVW"), 2), 4).as("v"),

@@ -55,22 +55,63 @@ class PlanShapeSpec extends SparkSpec {
     assertNoGlobalSort(p, "bda")
   }
 
-  test("BDA write plan: one averaging shuffle (one partial+final graft_vis_avg pair)") {
-    // The full outMain plan Bda.run hands to the writer — averaging +
-    // remap + output layout. With no cross-action persist, the proof
-    // that the averaging shuffle runs ONCE is exactly two graft_vis_avg
-    // ObjectHashAggregate nodes (the sizing pre-pass reads the pruned
-    // sizing frame, never the averaged table).
+  /** The BDA output main table exactly as Bda.run writes it. */
+  private def bdaWritePlan(): DataFrame = {
     val args = graft.queries.BdaQueries.raggedArgs
     val main = MsTables.main(spark)
     val spw = MsTables.spw(spark); val ddid = MsTables.ddid(spark)
     val chanls = Bda.channelisationsSized(main, spw, ddid, args).collect()
       .map(r => (r.getInt(0), r.getInt(1), r.getInt(2), r.getInt(3))).toSeq
     val (_, _, remapDf) = Bda.regenerate(spark, chanls, spw)
-    val p = plan(Bda.remap(Bda.averagedMain(main, spw, ddid, args), remapDf))
+    Bda.outputMain(main, spw, ddid, graft.ms.SyntheticMs.root, args, remapDf)
+  }
+
+  /** One averaging shuffle: with no cross-action persist, the proof that
+    * it runs ONCE is exactly two graft_vis_avg ObjectHashAggregate
+    * nodes (partial + final; the sizing pre-pass reads the pruned
+    * sizing frame, never the averaged table).
+    */
+  private def assertOneAveragingShuffle(p: String): Unit = {
     val aggs = p.linesIterator.count(l =>
       l.contains("ObjectHashAggregate") && l.contains("graft_vis_avg"))
     assert(aggs == 2, s"expected 2 graft_vis_avg aggregate nodes, got $aggs:\n$p")
+  }
+
+  /** The fused fixvis adds only broadcast lookups to the write plan:
+    * the phase-centre (FIELD_ID) and both position (ANTENNA1/2) joins
+    * are BroadcastHashJoins, and nothing adds a sort-merge join, a Scala
+    * UDF or a global sort.
+    */
+  private def assertFusedUvwLookups(df: DataFrame, what: String): Unit = {
+    val p = plan(df)
+    Seq("FIELD_ID", "ANTENNA1", "ANTENNA2").foreach { k =>
+      assert(s"BroadcastHashJoin \\[$k#\\d+\\], \\[$k#\\d+\\]".r.findFirstIn(p).isDefined,
+        s"$what: the $k UVW lookup is not a broadcast join:\n$p")
+    }
+    assert(!p.contains("SortMergeJoin"), s"$what plans a sort-merge join:\n$p")
+    val udfs = df.queryExecution.optimizedPlan.collect { case n =>
+      n.expressions.flatMap(_.collect {
+        case u: org.apache.spark.sql.catalyst.expressions.ScalaUDF => u })
+    }.flatten
+    assert(udfs.isEmpty, s"$what evaluates Scala UDFs: $udfs")
+    assertNoGlobalSort(p, what)
+    assert(!p.contains("rangepartitioning") && !"Sort \\[[^\\]]*\\], true".r.findFirstIn(p).isDefined,
+      s"$what plans a global sort:\n$p")
+  }
+
+  test("BDA write plan: one averaging shuffle (one partial+final graft_vis_avg pair)") {
+    // The full output main table Bda.run hands to the writer — averaging
+    // + remap + fused fixvis + output layout.
+    assertOneAveragingShuffle(plan(bdaWritePlan()))
+  }
+
+  test("fused write plans: one averaging shuffle, UVW lookups broadcast, no SMJ/UDF/global sort") {
+    val tc = Timechannel.outputMain(MsTables.main(spark), graft.ms.SyntheticMs.root,
+      Timechannel.Args(timeBinSecs = 60000.0, chanBinSize = 4,
+        dataCols = Seq("DATA" -> "DATA")))
+    assertOneAveragingShuffle(plan(tc))
+    assertFusedUvwLookups(tc, "timechannel write")
+    assertFusedUvwLookups(bdaWritePlan(), "bda write")
   }
 
   test("FIELD_ID selection on a written output MS is a partition filter") {

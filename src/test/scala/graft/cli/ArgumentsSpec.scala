@@ -84,10 +84,10 @@ class ArgumentsSpec extends AnyFunSuite {
   test("--average-uvw-coordinates disables the fixms post-pass") {
     val on = Arguments.parse(Seq("timechannel", "x.ms",
       "--average-uvw-coordinates")).asInstanceOf[Arguments.TimechannelCmd]
-    assert(on.averageUvw)
+    assert(on.args.averageUvw)
     val off = Arguments.parse(Seq("bda", "x.ms"))
       .asInstanceOf[Arguments.BdaCmd]
-    assert(!off.averageUvw)
+    assert(!off.args.averageUvw)
   }
 
   test("--include-auto-correlations reaches both pipelines' Args") {

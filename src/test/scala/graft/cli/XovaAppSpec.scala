@@ -2,13 +2,15 @@ package graft.cli
 
 import graft.SparkSpec
 import graft.ms.SyntheticMs
+import graft.ops.{Timechannel, Uvw}
 import org.apache.spark.sql.functions._
 
 /** Application-level E2E smoke — the mirror of the reference's own
   * test_application.py:9-17, but with output assertions: each CLI
   * lifecycle (E1 timechannel, E2 bda, E3 check) runs end-to-end on the
   * fixture MS through `Arguments.parse` + `XovaApp.run`, including the
-  * fixms post-pass and its --average-uvw-coordinates opt-out.
+  * fixvis UVW recomputation fused into the main write and its
+  * --average-uvw-coordinates opt-out.
   */
 class XovaAppSpec extends SparkSpec {
 
@@ -18,6 +20,37 @@ class XovaAppSpec extends SparkSpec {
   private def exists(p: String) =
     fs.exists(new org.apache.hadoop.fs.Path(p))
 
+  /** Every written UVW equals [[Uvw.baselineUvw]] at that row's written
+    * TIME_CENTROID, from the input MS's antenna positions and phase
+    * centres; and the atomic commit left nothing beside the output.
+    */
+  private def assertUvwAtCentroids(out: String): Unit = {
+    val pos = spark.read.parquet(s"$ms/ANTENNA")
+      .select("ANTENNA_ID", "POSITION").collect()
+      .map(r => r.getInt(0) -> r.getSeq[Double](1)).toMap
+    val dir = spark.read.parquet(s"$ms/FIELD")
+      .select(col("FIELD_ID"), col("PHASE_DIR")(0)).collect()
+      .map(r => r.getInt(0) -> r.getSeq[Double](1)).toMap
+    val rows = spark.read.parquet(s"$out/main")
+      .select("FIELD_ID", "ANTENNA1", "ANTENNA2", "TIME_CENTROID", "UVW")
+      .collect()
+    assert(rows.nonEmpty)
+    val bad = rows.filter { r =>
+      val (p1, p2, d) = (pos(r.getInt(1)), pos(r.getInt(2)), dir(r.getInt(0)))
+      val expect = Uvw.baselineUvw(p1(0) - p2(0), p1(1) - p2(1),
+        p1(2) - p2(2), d(0), d(1), r.getDouble(3))
+      val got = r.getSeq[Double](4)
+      (0 until 3).exists(i => math.abs(got(i) - expect(i)) > 1e-9)
+    }
+    assert(bad.isEmpty, s"${bad.length} of ${rows.length} UVWs are not " +
+      s"re-synthesized at their centroid, e.g. ${bad.headOption}")
+    val name = new java.io.File(out).getName
+    val left = new java.io.File(out).getParentFile.list()
+      .filter(_.startsWith(s".$name."))
+    assert(left.isEmpty && !exists(s"$out/main_fixed"),
+      s"staging left behind: ${left.mkString(", ")}")
+  }
+
   test("E1: xova timechannel end-to-end with fixms post-pass") {
     val out = "/tmp/graft_test/app_tc"
     fs.delete(new org.apache.hadoop.fs.Path(out), true)
@@ -26,12 +59,12 @@ class XovaAppSpec extends SparkSpec {
       "-dc", "DATA:DATA", "-o", out, "--force")))
     Seq("main", "SPECTRAL_WINDOW", "DATA_DESCRIPTION", "ANTENNA", "FIELD",
       "POLARIZATION").foreach(t => assert(exists(s"$out/$t"), t))
-    assert(!exists(s"$out/main_fixed")) // fixms swapped in place
     val main = spark.read.parquet(s"$out/main")
     assert(main.count() > 0)
-    // fixms ran: UVWs match a direct re-synthesis at the written
-    // centroids (spot-check |uvw| <= max baseline length)
     assert(main.columns.contains("WEIGHT_SPECTRUM"))
+    // fixvis ran inside the write: UVWs match a direct re-synthesis at
+    // the written centroids
+    assertUvwAtCentroids(out)
   }
 
   test("E1 with --average-uvw-coordinates skips the fixms pass") {
@@ -43,10 +76,27 @@ class XovaAppSpec extends SparkSpec {
     // with the flag, the rerun keeps averaged UVWs — different values
     val out2 = "/tmp/graft_test/app_tc_avg2"
     fs.delete(new org.apache.hadoop.fs.Path(out2), true)
-    XovaApp.run(spark, Arguments.parse(Seq(
+    val cmd = Arguments.parse(Seq(
       "timechannel", ms, "-t", "60000", "-c", "8",
       "-dc", "DATA:DATA", "-f", "0", "-o", out2, "--force",
-      "--average-uvw-coordinates")))
+      "--average-uvw-coordinates")).asInstanceOf[Arguments.TimechannelCmd]
+    XovaApp.run(spark, cmd)
+    // the written UVWs are exactly the averaging kernel's
+    val key = Seq("FIELD_ID", "DATA_DESC_ID", "SCAN_NUMBER",
+      "ANTENNA1", "ANTENNA2", "TIME")
+    val averaged = Timechannel.averagedMain(
+        spark.read.parquet(s"$ms/main"), cmd.args)
+      .select((key.map(col) :+ col("UVW").as("AVG_UVW")): _*)
+    val written = spark.read.parquet(s"$out2/main")
+    val pairs = written.join(averaged, key)
+      .select("UVW", "AVG_UVW").collect()
+      .map(r => (r.getSeq[Double](0), r.getSeq[Double](1)))
+    assert(pairs.length == written.count() &&
+      pairs.length == averaged.count() && pairs.nonEmpty)
+    // the two runs sum the same rows, possibly in another order
+    assert(pairs.forall { case (w, a) =>
+      (0 until 3).forall(i => math.abs(w(i) - a(i)) <= 1e-9 * (1 + math.abs(a(i))))
+    }, "--average-uvw-coordinates output differs from the averaged UVWs")
     val a = spark.read.parquet(s"$out/main")
       .agg(sum(expr("abs(UVW[0])"))).collect()(0).getDouble(0)
     val b = spark.read.parquet(s"$out2/main")
@@ -69,7 +119,7 @@ class XovaAppSpec extends SparkSpec {
       .join(ddid, Seq("DATA_DESC_ID"), "left_anti").count()
     assert(unresolved == 0)
     assert(spw.count() == ddid.count())
-    assert(!exists(s"$out/main_fixed"))
+    assertUvwAtCentroids(out)
   }
 
   test("--running-bins changes binning on gapped sampling (E2E)") {

@@ -101,25 +101,41 @@ class UvwSpec extends SparkSpec {
     assert(Uvw.positionMap(bare)(0).toSeq == Seq(1.0, 2.0, 3.0))
   }
 
-  test("fixms replaces main in place — no main_fixed left behind") {
-    val root = "/tmp/graft_test/fixms_swap"
+  test("fused fixvis: the averaging write recomputes UVW, no staging or main_fixed left") {
+    val base = "/tmp/graft_test/fixvis_fused"
     val fs = org.apache.hadoop.fs.FileSystem
       .get(spark.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(root), true)
-    Seq((5.0e6, 0, 1, 0, Seq(999.0, 999.0, 999.0)))
-      .toDF("TIME_CENTROID", "ANTENNA1", "ANTENNA2", "FIELD_ID", "UVW")
-      .write.parquet(s"$root/main")
+    fs.delete(new org.apache.hadoop.fs.Path(base), true)
+    val ms = s"$base/in.ms"
+    // a one-row MS whose stored UVW is deliberately wrong
+    import VisAggregator.Cpx
+    Seq((5.0e6, 2.0, 5.0e6, 2.0, 0, 1, 0, 0, 0, Seq(999.0, 999.0, 999.0),
+      Seq(1.0), Seq(1.0), Seq(Seq(Cpx(1f, 0f))), Seq(Seq(false)), false))
+      .toDF("TIME", "INTERVAL", "TIME_CENTROID", "EXPOSURE", "ANTENNA1",
+        "ANTENNA2", "FIELD_ID", "DATA_DESC_ID", "SCAN_NUMBER", "UVW",
+        "WEIGHT", "SIGMA", "DATA", "FLAG", "FLAG_ROW")
+      .write.parquet(s"$ms/main")
+    Seq((0, 1, Seq(1.4e9), Seq(1.0e6), Seq(1.0e6), Seq(1.0e6)))
+      .toDF("SPECTRAL_WINDOW_ID", "NUM_CHAN", "CHAN_FREQ", "CHAN_WIDTH",
+        "EFFECTIVE_BW", "RESOLUTION")
+      .write.parquet(s"$ms/SPECTRAL_WINDOW")
+    Seq((0, 0, 0)).toDF("DATA_DESC_ID", "SPECTRAL_WINDOW_ID", "POLARIZATION_ID")
+      .write.parquet(s"$ms/DATA_DESCRIPTION")
     Seq((0, 0, Seq(Seq(0.7, 0.2)))).toDF("FIELD_ID", "NUM_POLY", "PHASE_DIR")
-      .write.parquet(s"$root/FIELD")
+      .write.parquet(s"$ms/FIELD")
     Seq((0, Seq(0.0, 0.0, 0.0)), (1, Seq(100.0, 0.0, 0.0)))
       .toDF("ANTENNA_ID", "POSITION")
-      .write.parquet(s"$root/ANTENNA")
-    Uvw.fixms(spark, root)
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$root/main_fixed")))
-    val uvw = spark.read.parquet(s"$root/main")
-      .select("UVW").as[Seq[Double]].collect()(0)
+      .write.parquet(s"$ms/ANTENNA")
+    val out = s"$base/out.ms"
+    Timechannel.run(spark, ms, out, Timechannel.Args(timeBinSecs = 2.0,
+      chanBinSize = 1, dataCols = Seq("DATA" -> "DATA")))
+    assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$out/main_fixed")))
+    assert(new java.io.File(base).list().sorted.toSeq == Seq("in.ms", "out.ms"))
+    val row = spark.read.parquet(s"$out/main")
+      .select("TIME_CENTROID", "UVW").as[(Double, Seq[Double])].collect()
+    assert(row.length == 1 && row(0)._1 == 5.0e6)
     val expect = Uvw.baselineUvw(-100.0, 0.0, 0.0, 0.7, 0.2, 5.0e6)
-    (0 until 3).foreach(i => assert(math.abs(uvw(i) - expect(i)) < 1e-9))
+    (0 until 3).foreach(i => assert(math.abs(row(0)._2(i) - expect(i)) < 1e-9))
   }
 
   test("subset invariance: synthesis from a row subset matches the full frame") {
