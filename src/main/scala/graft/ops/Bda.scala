@@ -36,9 +36,16 @@ import graft.ms.MsWriter
   * (the reference's "integer factorisation of the input channel count",
   * arguments.py:142-146), floored by min_nchan.
   *
-  * Scale: one wide shuffle (the groupBy), one tiny per-baseline stats
-  * aggregate broadcast back, driver-side work bounded by
-  * #SPWs x #channelisations.
+  * Selection, binning and averaging are Timechannel's ([[Flags.select]],
+  * [[TimeAvg.assign]], [[TimeAvg.averaged]]) with per-baseline bin
+  * columns in place of constants.
+  *
+  * Scale: the per-baseline sizing frame is one aggregate over the fact
+  * table, checkpointed once per run ([[sizing]]) and read by the
+  * channelisations, the exchange width and the broadcast bin join. The
+  * write then shuffles twice — the averaging groupBy and the output
+  * layout's repartition (Timechannel.layout). Driver-side work is
+  * bounded by #SPWs x #channelisations.
   */
 object Bda {
 
@@ -69,7 +76,7 @@ object Bda {
       runningBins: Boolean = false,
       // write-side chunk granularity (see Timechannel.Args.rowChunks)
       rowChunks: Int = 10000,
-      groupRowChunks: Int = 4)
+      groupRowChunks: Int = 4) extends Flags.Selection
 
   /** Solve sinc(x) = target on (0, pi) by bisection (sinc monotonically
     * decreases from 1 to 0 there). Driver-side, once per query.
@@ -90,7 +97,8 @@ object Bda {
   /** Per-(group, baseline) sizing frame — one TINY row per baseline with
     * NUM_CHAN (input), TIME_BIN_SECS and CHAN_BIN. Input must carry UVW,
     * INTERVAL and the J1-joined SPW metadata (NUM_CHAN, CHAN_WIDTH_0,
-    * FREQ_MAX). One column-pruned scan of the fact table.
+    * FREQ_MAX). Lazy: each action on it is a column-pruned scan of the
+    * fact table, so a run uses it only through [[sizing]].
     */
   def binParams(df: DataFrame, args: Args): DataFrame = {
     val xStar = sincInv(math.sqrt(args.decorrelation))
@@ -110,7 +118,7 @@ object Bda {
         first(col("CHAN_WIDTH_0")).as("CHAN_WIDTH_0"),
         first(col("NUM_CHAN")).as("NUM_CHAN"),
         // per-baseline TIME span: rides the same scan for free, feeds
-        // the output-group estimate behind avgExchangeWidth
+        // the output-group estimate behind the averaging exchange width
         (max(col("TIME")) - min(col("TIME"))).as("T_SPAN"))
       // Autocorrelations (|uv| = 0) don't smear: no decorrelation limit,
       // so both bounds degenerate to "unconstrained" (the time cap and
@@ -139,8 +147,8 @@ object Bda {
   }
 
   /** Join the per-baseline sizing back onto the fact table (NUM_CHAN is
-    * dropped from the broadcast side — the fact frame already has it;
-    * T_SPAN is sizing-internal).
+    * dropped from the broadcast side — the fact frame may already have
+    * it; T_SPAN is sizing-internal).
     */
   def withBinParams(df: DataFrame, args: Args): DataFrame =
     joinBinParams(df, binParams(df, args))
@@ -150,183 +158,62 @@ object Bda {
       broadcast(bp.drop("NUM_CHAN", "T_SPAN")),
       TimeAvg.GroupCols ++ Seq("ANTENNA1", "ANTENNA2"))
 
-  /** Estimated resident+serialized bytes per aggregation-state cell of
-    * [[graft.expressions.VisAvgAgg]]: 8 double stat arrays + 1 long
-    * count (72 B) plus one serialized copy alive on the merge path.
-    */
-  val StateBytesPerCell = 144L
-  /** Per-partition aggregation-state budget for the averaging shuffle
-    * (default; override with `spark.graft.avg.statePartitionBytes` —
-    * on a cluster this knob tracks executor memory per task slot).
-    */
-  val TargetStateBytesPerPartition: Long = 64L << 20
-
-  /** Derived exchange width for the averaging shuffle (the 100× scale
-    * boundary, DESIGN.md "100× point"): per-partition
-    * ObjectHashAggregate state must stay bounded as data grows, so the
-    * partition count is COMPUTED from the tiny per-baseline sizing
-    * frame — estimated state = Σ_baselines (span/bin + 1) ×
-    * (nchan/chan_bin) × ncorr × [[StateBytesPerCell]] per data column —
-    * instead of inherited from the session pin (which sizes partitions
-    * to cores, correct at bench SF and wrong at 100×). Returns None
-    * when the session default already bounds state: the bench-scale
-    * plan (and its map-side partial aggregation) stays untouched, and
-    * the repartition only appears at scales where per-group state
-    * dominates and map-side combine is ~1 row/group anyway.
-    */
-  def avgExchangeWidth(bp: DataFrame, ncorr: Int, nDataCols: Int,
-                       sessionParts: Int): Option[Int] = {
-    val estRow = bp.agg(sum(
-      (floor(col("T_SPAN") / col("TIME_BIN_SECS")) + 1) *
-        (col("NUM_CHAN") / col("CHAN_BIN")).cast("long") *
-        lit(ncorr.toLong * nDataCols * StateBytesPerCell)).as("est")).head()
-    if (estRow.isNullAt(0)) return None
-    widthFromEstimate(bp.sparkSession, "bda",
-      estRow.getAs[Number](0).longValue(), sessionParts)
-  }
-
-  /** The shared decision rule behind [[avgExchangeWidth]] — also used
-    * by the uniform (timechannel) kernel, whose estimate is a simpler
-    * rows × cells upper bound.
-    */
-  def widthFromEstimate(s: SparkSession, tag: String, est: Long,
-                        sessionParts: Int): Option[Int] = {
-    val target = s.conf
-      .getOption("spark.graft.avg.statePartitionBytes")
-      .map(_.toLong).getOrElse(TargetStateBytesPerPartition)
-    val derived = math.ceil(est.toDouble / target).toInt
-    val chosen = if (derived > sessionParts) Some(derived) else None
-    println(s"[xova] $tag averaging-exchange sizing: est_state=${est >> 20} MB " +
-      s"target/part=${target >> 20} MB derived=$derived " +
-      s"session=$sessionParts -> ${chosen.getOrElse(s"session ($sessionParts)")}")
-    chosen
-  }
-
-  /** J1 + selection/flag prep: join SPW channel metadata onto the main
-    * table (averaging.py:306-308) and derive FROW.
+  /** J1 + selection/flag prep: join SPW channel metadata onto the
+    * selected main table (averaging.py:306-308). P8 applies to main AND
+    * to the SPW metadata the sizing consumes.
     */
   def prepared(main: DataFrame, spw: DataFrame, ddid: DataFrame, args: Args): DataFrame = {
-    var df = if (args.includeAutoCorrs) main else Flags.filterAutocorr(main)
-    df = Flags.selectFields(df, args.fields)
-    df = Flags.selectScans(df, args.scans)
-    // P8 before FROW, on main AND the SPW metadata the sizing consumes
-    df = Flags.selectChannels(df, args.channels,
-      (args.dataCols.map(_._1) ++
-        Seq("FLAG", "WEIGHT_SPECTRUM", "SIGMA_SPECTRUM"))
-        .distinct.filter(df.columns.contains))
-    df = if (args.respectFlagRow) df.withColumn("FROW", col("FLAG_ROW"))
-         else df.withColumn("FROW", Flags.derivedFlagRow)
-    val spwSel = Timechannel.selectSpwChannels(spw, args.channels)
     val spwMeta = ddid.select("DATA_DESC_ID", "SPECTRAL_WINDOW_ID")
-      .join(spwSel.select(col("SPECTRAL_WINDOW_ID"), col("NUM_CHAN"),
-        col("TOTAL_BANDWIDTH"),
+      .join(Timechannel.selectSpwChannels(spw, args.channels).select(
+        col("SPECTRAL_WINDOW_ID"), col("NUM_CHAN"),
         element_at(col("CHAN_WIDTH"), 1).as("CHAN_WIDTH_0"),
         array_max(col("CHAN_FREQ")).as("FREQ_MAX")), "SPECTRAL_WINDOW_ID")
-    df.join(broadcast(spwMeta), "DATA_DESC_ID")
+    Flags.select(main, args).join(broadcast(spwMeta), "DATA_DESC_ID")
   }
 
-  /** A4: the ragged averaged main table (pre-remap: still carries the
-    * input DATA_DESC_ID plus transient NUM_CHAN_OUT / DECORR_CHAN_WIDTH,
-    * averaging.py:159-164).
+  /** The sizing frame of one run: [[binParams]] over [[prepared]],
+    * checkpointed — its fact-table aggregate executes here, once, and
+    * the channelisations, the exchange width and the broadcast bin join
+    * all read the k-row result.
     */
-  def averagedMain(main: DataFrame, spw: DataFrame, ddid: DataFrame, args: Args): DataFrame = {
-    val prep0 = prepared(main, spw, ddid, args)
-    // The sizing frame is consumed TWICE — eagerly by avgExchangeWidth
-    // (a .head() over its aggregate) and again as the broadcast side of
-    // joinBinParams — so materialize it once (tiny: one row per
-    // (group, baseline)); without this the full fact-table sizing
-    // groupBy executes twice per run, an unconditional extra
-    // corpus-scale job at any SF.
-    val bp = graft.pipeline.Caches.materialize(binParams(prep0, args))
-    val prep = joinBinParams(prep0, bp)
-    // grid binning anchored at the group t0, per-baseline bin width.
-    // t0 is computed from the PRE-sizing frame: anchoring it on `prep`
-    // would nest a second copy of the withBinParams subtree (and its
-    // fact-table scan) inside the tiny t0 aggregate (plan-audited:
-    // graft.PlanAudit showed 4 main-table scans originally; with bp
-    // checkpointed the final plan carries 2 — full pass + t0, the
-    // designed shape, PlanShapeSpec-locked).
-    val t0 = prep0.groupBy(TimeAvg.GroupCols.map(col): _*).agg(min("TIME").as("_T0"))
-    val binned =
-      if (args.runningBins)
-        TimeAvg.assignRunning(prep, col("TIME_BIN_SECS"))
-      else prep.join(broadcast(t0), TimeAvg.GroupCols)
-        .withColumn("BIN",
-          floor((col("TIME") - col("_T0")) / col("TIME_BIN_SECS")).cast("int"))
+  def sizing(main: DataFrame, spw: DataFrame, ddid: DataFrame, args: Args): DataFrame =
+    graft.pipeline.Caches.materialize(binParams(prepared(main, spw, ddid, args), args))
 
-    // Optional spectrum columns — same handling as Timechannel.
-    val hasWs = binned.columns.contains("WEIGHT_SPECTRUM")
-    val hasSs = binned.columns.contains("SIGMA_SPECTRUM")
-    val absent = lit(null).cast("array<array<double>>")
+  /** A4: the ragged averaged main table (pre-remap: still carries the
+    * input DATA_DESC_ID plus the transient per-row output channel count
+    * NUM_CHAN, averaging.py:159-164). Sizes its own [[sizing]] frame.
+    */
+  def averagedMain(main: DataFrame, spw: DataFrame, ddid: DataFrame, args: Args): DataFrame =
+    averagedMain(main, sizing(main, spw, ddid, args), args)
 
-    val rowAgg = graft.expressions.RowAvgAgg(
-      col("TIME"), col("INTERVAL"), col("TIME_CENTROID"), col("EXPOSURE"),
-      col("FROW"), col("UVW"), col("WEIGHT"), col("SIGMA")).as("R")
-    // native TypedImperativeAggregate kernel (see Timechannel)
-    val visAggs = args.dataCols.map { case (from, to) =>
-      graft.expressions.VisAvgAgg(hasWs, hasSs)(
-        col("FROW"), col(from), col("FLAG"),
-        if (hasWs) col("WEIGHT_SPECTRUM") else absent,
-        if (hasSs) col("SIGMA_SPECTRUM") else absent,
-        col("WEIGHT"), col("CHAN_BIN")).as(s"_V_$to")
-    }
-    val firstTo = args.dataCols.head._2
-
-    // Averaging-exchange width derived from the sizing frame (see
-    // avgExchangeWidth): when the estimated aggregation state outgrows
-    // the session's shuffle-partition pin, pre-hash-partition on the
-    // FULL bin key at the derived width — the aggregate's distribution
-    // requirement is then already satisfied, so this IS the averaging
-    // shuffle (one exchange either way), just wide enough that
-    // per-partition state stays under the budget. ncorr read from one
-    // WEIGHT row (tiny column-pruned job).
-    val sessionParts =
-      main.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
-    val ncorr = main.select(size(col("WEIGHT")).as("n")).limit(1)
-      .collect().headOption.map(_.getInt(0)).getOrElse(4)
-    val width = avgExchangeWidth(bp, ncorr, args.dataCols.size, sessionParts)
-    val toAgg =
-      width.fold(binned)(n => binned.repartition(n, TimeAvg.BinKey.map(col): _*))
-
-    val agged = toAgg
-      .groupBy(TimeAvg.BinKey.map(col): _*)
-      .agg(rowAgg, (visAggs :+
-        first(col("TOTAL_BANDWIDTH")).as("_TBW")): _*)
-
-    val out = agged.select(
-      Seq(
-        col("FIELD_ID"), col("DATA_DESC_ID"), col("SCAN_NUMBER"),
-        col("ANTENNA1"), col("ANTENNA2"),
-        col("R.TIME").as("TIME"), col("R.INTERVAL").as("INTERVAL"),
-        col("R.TIME_CENTROID").as("TIME_CENTROID"),
-        col("R.EXPOSURE").as("EXPOSURE"),
-        col("R.FLAG_ROW").as("FLAG_ROW"),
-        col("R.UVW").as("UVW"), col("R.WEIGHT").as("WEIGHT"),
-        col("R.SIGMA").as("SIGMA"),
-        lit(0).as("ARRAY_ID"), lit(0).as("OBSERVATION_ID"),
-        lit(0).as("PROCESSOR_ID"), lit(0).as("STATE_ID"),
-        col(s"_V_$firstTo.FLAG").as("FLAG"),
-        // W3: per-row output channel count is just the array length
-        size(col(s"_V_$firstTo.DATA")).as("NUM_CHAN"),
-        (col("_TBW") / size(col(s"_V_$firstTo.DATA"))).as("DECORR_CHAN_WIDTH")) ++
-      (if (hasWs) Seq(col(s"_V_$firstTo.WEIGHT_SPECTRUM").as("WEIGHT_SPECTRUM")) else Nil) ++
-      (if (hasSs) Seq(col(s"_V_$firstTo.SIGMA_SPECTRUM").as("SIGMA_SPECTRUM")) else Nil) ++
-      args.dataCols.map { case (_, to) => col(s"_V_$to.DATA").as(to) }: _*)
-    Flags.flagCategory(out)
+  /** [[averagedMain]] over a run's sizing frame `bp`. Selection, the
+    * cell-shape probe and the grid t0 read `main` directly: after sizing,
+    * the averaging needs only the per-baseline bin columns, not the SPW
+    * metadata. With `bp` checkpointed the plan scans main twice — the
+    * full pass and the t0 aggregate.
+    */
+  private def averagedMain(main: DataFrame, bp: DataFrame, args: Args): DataFrame = {
+    val sel = Flags.select(main, args)
+    val binned = TimeAvg.assign(joinBinParams(sel, bp), col("TIME_BIN_SECS"),
+      args.runningBins, sel)
+    TimeAvg.averaged(sel, binned, col("CHAN_BIN"), args.dataCols, "bda") { _ =>
+      // Σ_baselines (span/bin + 1) x nchan/chan_bin, from the k-row frame
+      val est = bp.agg(sum((floor(col("T_SPAN") / col("TIME_BIN_SECS")) + 1) *
+        (col("NUM_CHAN") / col("CHAN_BIN")).cast("long"))).head()
+      if (est.isNullAt(0)) 0L else est.getLong(0)
+    }.withColumn("NUM_CHAN", size(col(args.dataCols.head._2))) // W3, for J2
   }
 
   /** A5 from the sizing frame alone. CHAN_BIN is by construction a
     * divisor of NUM_CHAN, so every output row of a baseline carries
     * exactly NUM_CHAN / CHAN_BIN channels — the distinct channelisation
-    * set is fully determined by the per-baseline sizing frame. This
-    * avoids materialising the averaged DATA/WEIGHT_SPECTRUM/
-    * SIGMA_SPECTRUM arrays just to read their lengths: one column-pruned
-    * fact scan + a tiny distinct instead of the full averaging shuffle.
+    * set is fully determined by the per-baseline sizing frame `bp`
+    * ([[sizing]]). This avoids materialising the averaged DATA/
+    * WEIGHT_SPECTRUM/SIGMA_SPECTRUM arrays just to read their lengths,
+    * and reads no fact-table rows: a tiny distinct over the checkpoint.
     */
-  def channelisationsSized(main: DataFrame, spw: DataFrame, ddid: DataFrame,
-                           args: Args): DataFrame =
-    binParams(prepared(main, spw, ddid, args), args)
-      .select(col("DATA_DESC_ID"),
+  def channelisationsSized(bp: DataFrame, ddid: DataFrame): DataFrame =
+    bp.select(col("DATA_DESC_ID"),
         (col("NUM_CHAN") / col("CHAN_BIN")).cast("int").as("NUM_CHAN"))
       .distinct()
       .join(broadcast(ddid), "DATA_DESC_ID")
@@ -382,17 +269,17 @@ object Bda {
     */
   def remap(out: DataFrame, remapDf: DataFrame): DataFrame =
     out.join(broadcast(remapDf), Seq("DATA_DESC_ID", "NUM_CHAN"))
-      .drop("DATA_DESC_ID", "NUM_CHAN", "DECORR_CHAN_WIDTH")
+      .drop("DATA_DESC_ID", "NUM_CHAN")
       .withColumnRenamed("NEW_DDID", "DATA_DESC_ID")
 
-  /** The output main table exactly as [[run]] writes it: averaged,
-    * DATA_DESC_IDs remapped (J2), UVW per [[Uvw.fixvis]], laid out.
+  /** The output main table exactly as [[run]] writes it: averaged over
+    * the run's sizing frame `bp`, DATA_DESC_IDs remapped (J2), UVW per
+    * [[Uvw.fixvis]], laid out.
     */
-  def outputMain(main: DataFrame, spw: DataFrame, ddid: DataFrame,
-                 inRoot: String, args: Args, remapDf: DataFrame): DataFrame =
+  def outputMain(main: DataFrame, bp: DataFrame, inRoot: String, args: Args,
+                 remapDf: DataFrame): DataFrame =
     Timechannel.layout(Uvw.fixvis(
-      remap(averagedMain(main, spw, ddid, args), remapDf), inRoot,
-      args.averageUvw))
+      remap(averagedMain(main, bp, args), remapDf), inRoot, args.averageUvw))
 
   /** Full E2 lifecycle: returns the list of tables written. */
   def run(spark: SparkSession, inRoot: String, outRoot: String, args: Args): Seq[String] = {
@@ -401,28 +288,22 @@ object Bda {
     val spw = spark.read.parquet(s"$inRoot/SPECTRAL_WINDOW")
     val ddid = spark.read.parquet(s"$inRoot/DATA_DESCRIPTION")
     // E2 step 2 (app.py:74-75): eager plan-stats + monotonicity gate
-    if (args.validate) {
-      var sel = main
-      if (!args.includeAutoCorrs) sel = Flags.filterAutocorr(sel)
-      Chunking.validate(
-        Flags.selectScans(Flags.selectFields(sel, args.fields), args.scans),
-        "bda")
-    }
+    if (args.validate) Chunking.validate(Flags.select(main, args), "bda")
 
     // A5 from the sizing frame (channelisationsSized): the distinct
     // channelisation set is determined by the tiny per-baseline sizing
-    // frame, so the expensive averaging shuffle runs exactly ONCE — at
-    // write time — and nothing forces the full averaged table into the
-    // storage layer (the old path persisted `avg` across two actions,
-    // which at 100 TB means caching the whole output MS).
-    val chanls = channelisationsSized(main, spw, ddid, args).collect()
+    // frame, sized once here, so the expensive averaging shuffle runs
+    // exactly ONCE — at write time — and nothing forces the full
+    // averaged table into the storage layer.
+    val bp = sizing(main, spw, ddid, args)
+    val chanls = channelisationsSized(bp, ddid).collect()
       .map(r => (r.getInt(0), r.getInt(1), r.getInt(2), r.getInt(3))).toSeq
     // regenerate from the channel-selected SPW so the new grids span
     // exactly the channels that were averaged
     val (newSpw, newDdid, remapDf) = regenerate(spark, chanls,
       Timechannel.selectSpwChannels(spw, args.channels))
     MsWriter.writeMs(spark, inRoot, outRoot, args.force,
-      outputMain(main, spw, ddid, inRoot, args, remapDf), TimeAvg.GroupCols,
+      outputMain(main, bp, inRoot, args, remapDf), TimeAvg.GroupCols,
       args.rowChunks.toLong * args.groupRowChunks,
       Seq("SPECTRAL_WINDOW" -> newSpw, "DATA_DESCRIPTION" -> newDdid))
   }

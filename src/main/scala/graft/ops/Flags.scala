@@ -10,6 +10,34 @@ import org.apache.spark.sql.functions._
   */
 object Flags {
 
+  /** The selection options both averaging commands carry
+    * (Timechannel.Args, Bda.Args).
+    */
+  trait Selection {
+    def dataCols: Seq[(String, String)]
+    def fields: Seq[Int]
+    def scans: Seq[Int]
+    def channels: Seq[Int]
+    def respectFlagRow: Boolean
+    def includeAutoCorrs: Boolean
+  }
+
+  /** P1–P4 and P8 as both commands apply them: autocorr, field and scan
+    * filters, channel selection of every (chan, corr) matrix column, then
+    * the row flag FROW — P8 first, so a derived row flag reflects the
+    * KEPT channels. Plans that read neither FROW nor the matrix columns
+    * (the validate pass) prune both projections away.
+    */
+  def select(df: DataFrame, s: Selection): DataFrame = {
+    val rows = selectScans(selectFields(
+      if (s.includeAutoCorrs) df else filterAutocorr(df), s.fields), s.scans)
+    val matrixCols = (s.dataCols.map(_._1) ++
+      Seq("FLAG", "WEIGHT_SPECTRUM", "SIGMA_SPECTRUM"))
+      .distinct.filter(rows.columns.contains)
+    selectChannels(rows, s.channels, matrixCols).withColumn("FROW",
+      if (s.respectFlagRow) col("FLAG_ROW") else derivedFlagRow)
+  }
+
   /** P1 — drop autocorrelations (reference default; TAQL
     * `ANTENNA1 != ANTENNA2`, xova/apps/xova/arguments.py:219-220).
     * A plain filter: Catalyst pushes it into the parquet scan.
@@ -38,16 +66,11 @@ object Flags {
   def selectScans(df: DataFrame, scans: Seq[Int]): DataFrame =
     if (scans.isEmpty) df else df.filter(col("SCAN_NUMBER").isin(scans: _*))
 
-  /** P4 — FLAG_ROW := all(FLAG over chan,corr) unless the caller asked to
-    * respect the stored column (xova/apps/xova/averaging.py:224-225).
-    * `forall(flatten(...))` is a codegen'd higher-order expression — no
-    * explode, no shuffle.
+  /** P4 — the derived row flag: all(FLAG over chan,corr), used unless
+    * the caller asked to respect the stored FLAG_ROW
+    * (xova/apps/xova/averaging.py:224-225). `forall(flatten(...))` is a
+    * codegen'd higher-order expression — no explode, no shuffle.
     */
-  def deriveFlagRow(df: DataFrame, respectFlagRow: Boolean = false): DataFrame =
-    if (respectFlagRow) df
-    else df.withColumn("FLAG_ROW", derivedFlagRow)
-
-  /** The P4 expression itself (usable in selects). */
   def derivedFlagRow: Column = forall(flatten(col("FLAG")), x => x)
 
   /** P7 — FLAG_CATEGORY = FLAG with a singleton leading category axis
@@ -58,7 +81,8 @@ object Flags {
 
   /** P8 — channel selection (parsed by the reference at
     * arguments.py:42-74; applied here as a native array slice of every
-    * (chan, corr) matrix column). `channels` are 0-based kept indices
+    * channel-major column: main's (chan, corr) matrices, SPECTRAL_WINDOW's
+    * per-channel metadata). `channels` are 0-based kept indices
     * (graft.cli.Arguments.expandChannels); indices beyond a column's
     * channel count are ignored, so mixed-SPW frames work.
     */

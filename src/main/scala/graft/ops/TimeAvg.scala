@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
@@ -33,12 +33,28 @@ object TimeAvg {
   /** Grid binning: broadcast-join the per-group min(TIME) back, then a
     * pure projection. Adds column BIN (int).
     */
-  def assignGrid(df: DataFrame, binSecs: Double): DataFrame = {
-    val t0 = df.groupBy(GroupCols.map(col): _*).agg(min("TIME").as("_T0"))
+  def assignGrid(df: DataFrame, binSecs: Double): DataFrame =
+    assignGrid(df, lit(binSecs), df)
+
+  /** Column form: per-row (in practice per-baseline — BDA's
+    * decorrelation-derived widths) bin size, with t0 taken from `t0Of`:
+    * the same rows as `df` before any bin-width join. BDA's widths come
+    * from its checkpointed sizing frame, whose size estimate is the
+    * planner's (huge) estimate of the aggregate behind it; a t0
+    * aggregate reading it attracts runtime bloom-filter subqueries that
+    * rescan the fact table (5 main-table scans instead of 2).
+    */
+  def assignGrid(df: DataFrame, binSecs: Column, t0Of: DataFrame): DataFrame = {
+    val t0 = t0Of.groupBy(GroupCols.map(col): _*).agg(min("TIME").as("_T0"))
     df.join(broadcast(t0), GroupCols)
-      .withColumn("BIN", floor((col("TIME") - col("_T0")) / lit(binSecs)).cast("int"))
+      .withColumn("BIN", floor((col("TIME") - col("_T0")) / binSecs).cast("int"))
       .drop("_T0")
   }
+
+  /** W2 as both commands choose it: grid or running binning. */
+  def assign(df: DataFrame, binSecs: Column, running: Boolean,
+             t0Of: DataFrame): DataFrame =
+    if (running) assignRunning(df, binSecs) else assignGrid(df, binSecs, t0Of)
 
   /** Accumulate-until-full binning per (group, baseline). */
   def assignRunning(df: DataFrame, binSecs: Double): DataFrame =
@@ -62,4 +78,119 @@ object TimeAvg {
     */
   val BinKey: Seq[String] =
     GroupCols ++ Seq("ANTENNA1", "ANTENNA2", "BIN")
+
+  /** Estimated resident+serialized bytes per aggregation-state cell of
+    * [[graft.expressions.VisAvgAgg]]: 8 double stat arrays + 1 long
+    * count (72 B) plus one serialized copy alive on the merge path.
+    */
+  val StateBytesPerCell = 144L
+  /** Per-partition aggregation-state budget for the averaging shuffle
+    * (default; override with `spark.graft.avg.statePartitionBytes` —
+    * on a cluster this knob tracks executor memory per task slot).
+    */
+  val TargetStateBytesPerPartition: Long = 64L << 20
+
+  /** Derived exchange width for the averaging shuffle (the 100× scale
+    * boundary, DESIGN.md "100× point"): per-partition
+    * ObjectHashAggregate state must stay bounded as data grows, so the
+    * partition count is COMPUTED from the estimated state instead of
+    * inherited from the session pin (which sizes partitions to cores,
+    * correct at bench SF and wrong at 100×). Returns None when the
+    * session default already bounds state: the bench-scale plan (and
+    * its map-side partial aggregation) stays untouched, and the
+    * repartition only appears at scales where per-group state dominates
+    * and map-side combine is ~1 row/group anyway.
+    */
+  def widthFromEstimate(s: SparkSession, tag: String, est: Long): Option[Int] = {
+    val sessionParts = s.conf.get("spark.sql.shuffle.partitions").toInt
+    val target = s.conf
+      .getOption("spark.graft.avg.statePartitionBytes")
+      .map(_.toLong).getOrElse(TargetStateBytesPerPartition)
+    val derived = math.ceil(est.toDouble / target).toInt
+    val chosen = if (derived > sessionParts) Some(derived) else None
+    println(s"[xova] $tag averaging-exchange sizing: est_state=${est >> 20} MB " +
+      s"target/part=${target >> 20} MB derived=$derived " +
+      s"session=$sessionParts -> ${chosen.getOrElse(s"session ($sessionParts)")}")
+    chosen
+  }
+
+  /** A1/A2 + P5–P7, the averaging core of both commands (the
+    * reference's output_dataset, xova/apps/xova/averaging.py:97-181):
+    * one aggregate over [[BinKey]] running the RowAvgAgg and VisAvgAgg
+    * kernels, the output projection and FLAG_CATEGORY.
+    *
+    *  - `binned`: the selected frame with BIN and whatever `chanBin`
+    *    reads; `sel`: the same frame before binning, probed once
+    *    (limit 1) for the input cell shape — probing `binned` would run
+    *    the t0 aggregate or the running-bin window.
+    *  - `outChanRows(nchan)`: the expected Σ output channels over output
+    *    rows, given the input channel count; times the correlation count
+    *    and [[StateBytesPerCell]] per data column it is the state
+    *    estimate behind [[widthFromEstimate]]. When the derived width
+    *    exceeds the session's, the frame is pre-hash-partitioned on the
+    *    FULL bin key: the aggregate's distribution requirement is then
+    *    already met, so that exchange IS the averaging shuffle.
+    *
+    * WEIGHT_SPECTRUM / SIGMA_SPECTRUM are optional MS columns: WS is the
+    * averaging weight and both spectra are averaged through when
+    * present; per-corr WEIGHT is the fallback (and the outputs are
+    * omitted) when absent — the reference's try/except optional-column
+    * handling (averaging.py:241-248, output 167-173).
+    */
+  def averaged(sel: DataFrame, binned: DataFrame, chanBin: Column,
+               dataCols: Seq[(String, String)], tag: String)(
+      outChanRows: Int => Long): DataFrame = {
+    val est = sel.select(size(col("FLAG")), size(col("WEIGHT"))).limit(1)
+      .collect().headOption
+      .map(r => outChanRows(r.getInt(0)) * r.getInt(1)).getOrElse(0L) *
+      dataCols.size * StateBytesPerCell
+    val width = widthFromEstimate(sel.sparkSession, tag, est)
+
+    val hasWs = binned.columns.contains("WEIGHT_SPECTRUM")
+    val hasSs = binned.columns.contains("SIGMA_SPECTRUM")
+    val absent = lit(null).cast("array<array<double>>")
+    val rowAgg = graft.expressions.RowAvgAgg(
+      col("TIME"), col("INTERVAL"), col("TIME_CENTROID"), col("EXPOSURE"),
+      col("FROW"), col("UVW"), col("WEIGHT"), col("SIGMA")).as("R")
+    // VisAvgAgg = the native TypedImperativeAggregate kernel (flat
+    // buffers, zero per-row allocation); the typed Aggregator
+    // graft.ops.VisAggregator in the test sources is the bit-identical
+    // reference implementation.
+    val visAggs = dataCols.map { case (from, to) =>
+      graft.expressions.VisAvgAgg(hasWs, hasSs)(
+        col("FROW"), col(from), col("FLAG"),
+        if (hasWs) col("WEIGHT_SPECTRUM") else absent,
+        if (hasSs) col("SIGMA_SPECTRUM") else absent,
+        col("WEIGHT"), chanBin).as(s"_V_$to")
+    }
+    val agged =
+      width.fold(binned)(n => binned.repartition(n, BinKey.map(col): _*))
+        .groupBy(BinKey.map(col): _*)
+        .agg(rowAgg, visAggs: _*)
+
+    // Output FLAG (and spectra) come from the first data column's
+    // aggregator: they are weight/flag-derived, the same for every data
+    // column.
+    val firstTo = dataCols.head._2
+    val out = agged.select(
+      Seq(
+        col("FIELD_ID"), col("DATA_DESC_ID"), col("SCAN_NUMBER"),
+        col("ANTENNA1"), col("ANTENNA2"),
+        col("R.TIME").as("TIME"), col("R.INTERVAL").as("INTERVAL"),
+        col("R.TIME_CENTROID").as("TIME_CENTROID"),
+        col("R.EXPOSURE").as("EXPOSURE"),
+        col("R.FLAG_ROW").as("FLAG_ROW"),
+        col("R.UVW").as("UVW"), col("R.WEIGHT").as("WEIGHT"),
+        col("R.SIGMA").as("SIGMA"),
+        // P6: constant ids (xova/apps/xova/utils.py:7-14)
+        lit(0).as("ARRAY_ID"), lit(0).as("OBSERVATION_ID"),
+        lit(0).as("PROCESSOR_ID"), lit(0).as("STATE_ID"),
+        col(s"_V_$firstTo.FLAG").as("FLAG")) ++
+      (if (hasWs) Seq(col(s"_V_$firstTo.WEIGHT_SPECTRUM").as("WEIGHT_SPECTRUM")) else Nil) ++
+      (if (hasSs) Seq(col(s"_V_$firstTo.SIGMA_SPECTRUM").as("SIGMA_SPECTRUM")) else Nil) ++
+      dataCols.map { case (_, to) => col(s"_V_$to.DATA").as(to) }: _*)
+
+    // P7: FLAG_CATEGORY = FLAG behind a singleton category axis.
+    Flags.flagCategory(out)
+  }
 }

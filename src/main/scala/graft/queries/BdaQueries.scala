@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.ms.MsTables
+import graft.ms.{MsTables, SyntheticMs}
 import graft.ops.Bda
 
 /** BDA operators (SURVEY A4/A5/A6/J2) over the parquet MS fixture, each
@@ -22,8 +22,7 @@ import graft.ops.Bda
 object BdaQueries {
   type Q = (SparkSession, String) => DataFrame
 
-  private val MS = sys.env.getOrElse("GRAFT_MS_ROOT",
-    "/root/repo/fixtures/ms") // scale-probe override, see MsQueries
+  private val MS = SyntheticMs.root
   private def rp(t: String) = s"read_parquet('$MS/$t/*.parquet')"
 
   val sizingArgs = Bda.Args(decorrelation = 0.99, maxFovDeg = 0.056,
@@ -94,6 +93,11 @@ object BdaQueries {
   private def sparkSized(s: SparkSession, a: Bda.Args): DataFrame =
     Bda.withBinParams(
       Bda.prepared(MsTables.main(s), MsTables.spw(s), MsTables.ddid(s), a), a)
+
+  /** A5 at [[sizingArgs]], from a freshly sized frame. */
+  private def channelisations(s: SparkSession): DataFrame = Bda.channelisationsSized(
+    Bda.sizing(MsTables.main(s), MsTables.spw(s), MsTables.ddid(s), sizingArgs),
+    MsTables.ddid(s))
 
   /** Per-DDID exact stats over the ragged averaged main table (A4 stage
     * 2), shared by the ragged and autocorr entries. `n_autocorr_rows`
@@ -176,15 +180,12 @@ object BdaQueries {
     // NUM_CHAN / CHAN_BIN — no need to materialize the averaged arrays;
     // the oracle computes the same way, NCHAN_IN // chan_bin).
     // Reference: xova/apps/xova/averaging.py:409-433.
-    "ms_a5_bda_channelisations" -> ((s, _) =>
-      Bda.channelisationsSized(MsTables.main(s), MsTables.spw(s),
-        MsTables.ddid(s), sizingArgs)),
+    "ms_a5_bda_channelisations" -> ((s, _) => channelisations(s)),
 
     // A6 + F3: regenerated SPECTRAL_WINDOW rows — linspace grid scalars.
     // Reference: xova/apps/xova/averaging.py:436-542.
     "ms_a6_spw_regen" -> ((s, _) => {
-      val chanls = Bda.channelisationsSized(MsTables.main(s), MsTables.spw(s),
-        MsTables.ddid(s), sizingArgs).collect()
+      val chanls = channelisations(s).collect()
         .map(r => (r.getInt(0), r.getInt(1), r.getInt(2), r.getInt(3))).toSeq
       val (newSpw, _, _) = Bda.regenerate(s, chanls, MsTables.spw(s))
       newSpw.select(

@@ -27,11 +27,10 @@ import graft.ops.{Flags, TimeAvg, Timechannel}
 object MsQueries {
   type Q = (SparkSession, String) => DataFrame
 
-  // follows SyntheticMs.root's env override so a scale probe's N×
-  // fixture (GRAFT_MS_ROOT + GRAFT_MS_NTIME) is oracle-checked against
-  // ITSELF — with the override unset this is the committed fixture
-  private val MS = sys.env.getOrElse("GRAFT_MS_ROOT",
-    "/root/repo/fixtures/ms")
+  // SyntheticMs.root, so a scale probe's N× fixture (GRAFT_MS_ROOT +
+  // GRAFT_MS_NTIME) is oracle-checked against ITSELF — with the override
+  // unset this is the committed fixture
+  private val MS = graft.ms.SyntheticMs.root
   private def rp(t: String) = s"read_parquet('$MS/$t/*.parquet')"
 
   private val keys =

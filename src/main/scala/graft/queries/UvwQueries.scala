@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.ms.MsTables
+import graft.ms.{MsTables, SyntheticMs}
 import graft.ops.{Timechannel, Uvw}
 
 /** UVW synthesis operators (SURVEY F1/F5/U1) with DuckDB oracles.
@@ -15,8 +15,7 @@ import graft.ops.{Timechannel, Uvw}
 object UvwQueries {
   type Q = (SparkSession, String) => DataFrame
 
-  private val MS = sys.env.getOrElse("GRAFT_MS_ROOT",
-    "/root/repo/fixtures/ms") // scale-probe override, see MsQueries
+  private val MS = SyntheticMs.root
   private def rp(t: String) = s"read_parquet('$MS/$t/*.parquet')"
 
   /** SQL fragment: (u,v,w) of (lx,ly,lz) toward (ra,dec) at mjd-sec t —

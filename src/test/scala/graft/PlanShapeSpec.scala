@@ -60,10 +60,22 @@ class PlanShapeSpec extends SparkSpec {
     val args = graft.queries.BdaQueries.raggedArgs
     val main = MsTables.main(spark)
     val spw = MsTables.spw(spark); val ddid = MsTables.ddid(spark)
-    val chanls = Bda.channelisationsSized(main, spw, ddid, args).collect()
+    val bp = Bda.sizing(main, spw, ddid, args)
+    val chanls = Bda.channelisationsSized(bp, ddid).collect()
       .map(r => (r.getInt(0), r.getInt(1), r.getInt(2), r.getInt(3))).toSeq
     val (_, _, remapDf) = Bda.regenerate(spark, chanls, spw)
-    Bda.outputMain(main, spw, ddid, graft.ms.SyntheticMs.root, args, remapDf)
+    Bda.outputMain(main, bp, graft.ms.SyntheticMs.root, args, remapDf)
+  }
+
+  test("BDA channelisations read the checkpointed sizing frame: 0 main-table scans") {
+    // Bda.run sizes once: the channelisation frame it collects is a
+    // distinct over the k-row checkpoint, never a fact-table re-plan
+    val args = graft.queries.BdaQueries.raggedArgs
+    val ddid = MsTables.ddid(spark)
+    val bp = Bda.sizing(MsTables.main(spark), MsTables.spw(spark), ddid, args)
+    val p = plan(Bda.channelisationsSized(bp, ddid))
+    assert(mainScans(p) == 0, s"channelisations re-scan main:\n$p")
+    assert(p.contains("Scan ExistingRDD"), s"expected the checkpointed sizing frame:\n$p")
   }
 
   /** One averaging shuffle: with no cross-action persist, the proof that

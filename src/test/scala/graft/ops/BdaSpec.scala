@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.SparkSpec
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 /** BDA sizing-model laws: sinc inversion, baseline monotonicity
@@ -147,6 +148,49 @@ class BdaSpec extends SparkSpec {
     assert(grid.count() == runn.count())
     assert(runn.join(grid, runn.columns.toSeq).count() == grid.count(),
       "running-bin BDA diverges from grid binning on regular sampling")
+  }
+
+  /** Equal up to 1e-9 relative on floating values, exact elsewhere. */
+  private def close(x: Any, y: Any): Boolean = (x, y) match {
+    case (p: Double, q: Double) => java.lang.Double.compare(p, q) == 0 ||
+      math.abs(p - q) <= 1e-9 * math.max(math.abs(p), math.abs(q))
+    case (p: Float, q: Float) => close(p.toDouble, q.toDouble)
+    case (p: Row, q: Row) =>
+      p.length == q.length && (0 until p.length).forall(i => close(p.get(i), q.get(i)))
+    case (p: scala.collection.Seq[_], q: scala.collection.Seq[_]) =>
+      p.length == q.length && p.zip(q).forall { case (u, v) => close(u, v) }
+    case _ => x == y
+  }
+
+  test("BDA with constant bins degenerates to timechannel") {
+    // a vanishing field of view lifts both decorrelation limits: every
+    // baseline's time bin is the cap t (>= every INTERVAL, the floor) and
+    // its channel bin the largest divisor minNchan = NUM_CHAN / c allows,
+    // which is c. One DDID per run: minNchan is one number per run.
+    val main = graft.ms.MsTables.main(spark)
+    val spw = graft.ms.MsTables.spw(spark)
+    val ddid = graft.ms.MsTables.ddid(spark)
+    val (t, c) = (60000.0, 4)
+    assert(main.agg(max("INTERVAL")).head().getDouble(0) <= t)
+    val key = Seq("FIELD_ID", "DATA_DESC_ID", "SCAN_NUMBER", "ANTENNA1",
+      "ANTENNA2", "TIME")
+    for ((dd, nchan, _) <- graft.ms.SyntheticMs.ddidShape) {
+      val m = main.filter(col("DATA_DESC_ID") === dd)
+      val a = Bda.Args(maxFovDeg = 1e-9, timeBinCapSecs = t,
+        minNchan = nchan / c, dataCols = Seq("DATA" -> "DATA"))
+      assert(Bda.sizing(m, spw, ddid, a).select("TIME_BIN_SECS", "CHAN_BIN")
+        .distinct().collect().map(r => (r.getDouble(0), r.getInt(1))).toSeq ==
+        Seq((t, c)))
+      val tc = Timechannel.averagedMain(m, Timechannel.Args(timeBinSecs = t,
+        chanBinSize = c, dataCols = Seq("DATA" -> "DATA")))
+      val bda = Bda.averagedMain(m, spw, ddid, a)
+      assert(tc.columns.forall(bda.columns.contains))
+      def rows(df: DataFrame) = df.select(tc.columns.toSeq.map(col): _*)
+        .orderBy(key.map(col): _*).collect()
+      val (x, y) = (rows(tc), rows(bda))
+      assert(x.nonEmpty && x.length == y.length && x.length < m.count())
+      x.zip(y).foreach { case (u, v) => assert(close(u, v), s"$u\n!=\n$v") }
+    }
   }
 
   test("regenerate emits uniform linspace grids over the original span") {

@@ -68,7 +68,7 @@ class TimeAvgFlagsSpec extends SparkSpec {
       (2, Seq(Seq(true, false), Seq(true, true))),
       (3, Seq(Seq(false, false), Seq(false, false))))
       .toDF("id", "FLAG")
-    val got = Flags.deriveFlagRow(df).orderBy("id")
+    val got = df.withColumn("FLAG_ROW", Flags.derivedFlagRow).orderBy("id")
       .select("FLAG_ROW").as[Boolean].collect().toSeq
     assert(got == Seq(true, false, false))
   }
