@@ -8,8 +8,9 @@ import scala.jdk.CollectionConverters._
   * `noop` sink (not `.count()`, which lets Catalyst prune all real work
   * for projection-only queries), each query runs twice and the WARM pass
   * is reported (isolates JVM/parquet-footer warmup), and the JSON line is
-  * written to /root/repo/BENCH.json as well as stdout so the driver never
-  * has to fish it out of sbt log noise.
+  * written to BENCH.json in the working directory (the checkout root
+  * under sbt) as well as stdout, so a reader never has to fish it out
+  * of sbt log noise.
   *
   * Self-adjudication (VERDICT r8 #1): per-entry performance bands live
   * in committed BANDS.json (`entry → {wall: [lo,hi], cpu: [lo,hi]}`,
@@ -81,24 +82,26 @@ object Bench {
     // Opt-in state-store telemetry (GRAFT_STATE_METRICS=1) for the
     // streaming scale probes: track the max total state rows / bytes
     // any micro-batch of any query reports since the last reset. The
-    // listener bus is async, so readers sleep briefly before sampling.
+    // entries run their streams in child sessions, whose progress
+    // events reach this context-wide listener, not `spark.streams`
+    // listeners. The bus is async, so readers sleep briefly before
+    // sampling.
     val stateRowsMax = new java.util.concurrent.atomic.AtomicLong(0)
     val stateBytesMax = new java.util.concurrent.atomic.AtomicLong(0)
     if (sys.env.contains("GRAFT_STATE_METRICS"))
-      spark.streams.addListener(
-        new org.apache.spark.sql.streaming.StreamingQueryListener {
-          import org.apache.spark.sql.streaming.StreamingQueryListener._
-          override def onQueryStarted(e: QueryStartedEvent): Unit = ()
-          override def onQueryTerminated(e: QueryTerminatedEvent): Unit = ()
-          override def onQueryProgress(e: QueryProgressEvent): Unit = {
-            val ops = e.progress.stateOperators
-            if (ops.nonEmpty) {
+      spark.sparkContext.addSparkListener(
+        new org.apache.spark.scheduler.SparkListener {
+          import org.apache.spark.sql.streaming.StreamingQueryListener.QueryProgressEvent
+          override def onOtherEvent(
+              e: org.apache.spark.scheduler.SparkListenerEvent): Unit = e match {
+            case p: QueryProgressEvent if p.progress.stateOperators.nonEmpty =>
+              val ops = p.progress.stateOperators
               val rows = ops.map(_.numRowsTotal).sum
               val bytes = ops.map(_.memoryUsedBytes).sum
               stateRowsMax.updateAndGet(m => math.max(m, rows))
               stateBytesMax.updateAndGet(m => math.max(m, bytes))
               ()
-            }
+            case _ => ()
           }
         })
 
@@ -171,7 +174,7 @@ object Bench {
 
     // ---- bands (committed BANDS.json; suite-context basis) ----
     case class Band(wallHi: Double, cpuHi: Double)
-    val bandsPath = Paths.get("/root/repo/BANDS.json")
+    val bandsPath = Paths.get("BANDS.json")
     val (bands, bandLoadMax, calibNominal): (Map[String, Band], Double, Option[Double]) =
       if (!Files.exists(bandsPath)) (Map.empty, 8.0, None)
       else {
@@ -304,7 +307,7 @@ object Bench {
     // Single-entry runs are bisection probes; never clobber the pinned
     // full-suite BENCH.json with a partial result.
     if (only.isEmpty)
-      Files.writeString(Paths.get("/root/repo/BENCH.json"), json + "\n")
+      Files.writeString(Paths.get("BENCH.json"), json + "\n")
     println(json)
     spark.stop()
   }

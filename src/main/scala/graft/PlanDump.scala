@@ -33,7 +33,7 @@ object PlanDump {
     require(missing.isEmpty, s"unknown entries: ${missing.mkString(", ")}")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = Session(Session.ComputeSizedSplits)
-    val outDir = Paths.get(s"/root/repo/plans/$tag")
+    val outDir = Paths.get(s"plans/$tag")
     Files.createDirectories(outDir)
     names.foreach { n =>
       val df = SparkEntry.queries(n)(spark, sfDir)

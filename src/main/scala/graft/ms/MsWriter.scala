@@ -15,13 +15,16 @@ import scala.util.Try
   *  - S7/S8 main + regenerated-subtable writes (app.py:107-118).
   *  - S9 verbatim passthrough of every untouched subtable
   *    (/root/reference/xova/apps/xova/subtables.py:9-37) — a parquet
-  *    re-write (not a filesystem copy) so it works on any Hadoop-visible
-  *    storage and keeps subtable data going through the same IO layer.
+  *    re-write (not a filesystem copy) that keeps subtable data going
+  *    through the same IO layer as `main`.
   *
   * The output MS is committed atomically: every table is written under
   * a hidden sibling staging directory that one rename moves into place,
   * so a failed run never leaves a partial MS at the output path, and a
   * forced overwrite keeps the old output until the new one is complete.
+  * The guard, staging, commit and cleanup use `java.nio.file` on local
+  * paths, so the output MS must live on a local filesystem; moving them
+  * to Hadoop `FileSystem` is ROADMAP item 3(b).
   */
 object MsWriter {
 

@@ -5,7 +5,8 @@ import org.apache.spark.sql.functions._
 import java.nio.file.{Files, Paths}
 
 /** Deterministic synthetic Measurement Set fixture, written as parquet
-  * tables under `/root/repo/fixtures/ms/`.
+  * tables under `fixtures/ms/` of the working directory (the checkout
+  * root under sbt).
   *
   * Structure mirrors the reference's synthetic MS factory
   * (/root/reference/xova/testing_data.py:9-166; spec in FIXTURES.md):
@@ -33,7 +34,8 @@ object SyntheticMs {
   // generate an N-times fixture under /tmp without touching the
   // committed one. Defaults reproduce the committed fixture bit for bit
   // (nTime = 4 keeps `t / (nTime / 2)` == the original `t / 2`).
-  val root = sys.env.getOrElse("GRAFT_MS_ROOT", "/root/repo/fixtures/ms")
+  val root = sys.env.getOrElse("GRAFT_MS_ROOT",
+    Paths.get("fixtures/ms").toAbsolutePath.toString)
 
   val nAnt   = 64
   val nTime  = {

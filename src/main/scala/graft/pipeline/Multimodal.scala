@@ -33,7 +33,8 @@ object Multimodal {
   // the committed fixture. Defaults reproduce it bit for bit — rows are
   // generated per media_id, so a larger count simply extends the id
   // range.
-  val root = sys.env.getOrElse("GRAFT_MEDIA_ROOT", "/root/repo/fixtures/media")
+  val root = sys.env.getOrElse("GRAFT_MEDIA_ROOT",
+    Paths.get("fixtures/media").toAbsolutePath.toString)
   val nRows: Int = {
     val n = sys.env.get("GRAFT_MEDIA_ROWS").map(_.toInt).getOrElse(2000)
     require(n >= 1, s"GRAFT_MEDIA_ROWS must be >= 1, got $n")

@@ -6,11 +6,11 @@ import org.apache.hadoop.fs.{Path, RawLocalFileSystem}
 import org.apache.hadoop.fs.permission.FsPermission
 
 /** Local filesystem for streaming CHECKPOINT dirs only, registered
-  * under the private `graftckpt://` scheme (per-entry session conf
-  * `fs.graftckpt.impl`, scoped by StreamingQueries.withLocalCkpt).
+  * under the private `graftckpt://` scheme (`fs.graftckpt.impl`, set on
+  * each streaming entry's child session by StreamingQueries.scoped).
   *
-  * Why it exists (r19 fork profiling, see StreamingQueries
-  * .withLocalCkpt): with no native hadoop library, BOTH hot local-FS
+  * Why it exists (r19 fork profiling, see StreamingQueries.scoped):
+  * with no native hadoop library, BOTH hot local-FS
   * paths fork a process per call — `FileContext.rename`'s
   * symlink-aware status check execs `readlink`, and every
   * `create()`/`mkdirs()` carrying an FsPermission execs `chmod`
@@ -22,8 +22,8 @@ import org.apache.hadoop.fs.permission.FsPermission
   *
   * Two deliberate properties:
   *   - `setPermission` is a no-op: checkpoint files keep the JVM's
-  *     umask defaults instead of paying a fork per file. The dirs are
-  *     per-entry temp dirs deleted in the entry's own finally.
+  *     umask defaults instead of paying a fork per file. The dirs sit
+  *     in each entry's scope temp dir, deleted when the entry returns.
   *   - It extends RAW RawLocalFileSystem, not ChecksumFileSystem: no
   *     Hadoop `.crc` shadow per file. Integrity of checkpoint files
   *     stays covered by Spark 4.1's OWN checkpoint checksum layer

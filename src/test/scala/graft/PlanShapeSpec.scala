@@ -767,18 +767,16 @@ class PlanShapeSpec extends SparkSpec {
       cust, "graft_test_cust_b", "c_custkey", 4,
       "/tmp/graft_test_bucketed/cust")
     // disable broadcast so the plan must rely on the bucket layout —
-    // the property under test is "no shuffle", not "small side wins"
-    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
-      val p = plan(graft.ops.BucketedLayout.coLocatedJoin(spark,
-        "graft_test_ev_b", "graft_test_cust_b", "user_id", "c_custkey"))
-      assert(p.contains("SortMergeJoin"),
-        s"expected a sort-merge join over bucketed scans, got:\n$p")
-      assert(!p.contains("Exchange"),
-        s"co-located join must not plan any exchange:\n$p")
-    } finally
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    // the property under test is "no shuffle", not "small side wins";
+    // a session of its own keeps the setting off the shared one
+    val s = spark.newSession()
+    s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    val p = plan(graft.ops.BucketedLayout.coLocatedJoin(s,
+      "graft_test_ev_b", "graft_test_cust_b", "user_id", "c_custkey"))
+    assert(p.contains("SortMergeJoin"),
+      s"expected a sort-merge join over bucketed scans, got:\n$p")
+    assert(!p.contains("Exchange"),
+      s"co-located join must not plan any exchange:\n$p")
   }
 
   test("grouped HLL: map-side combine on both aggs, two keyed shuffles") {

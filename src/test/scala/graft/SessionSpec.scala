@@ -11,4 +11,19 @@ class SessionSpec extends SparkSpec {
     assert(spark.conf.get("spark.sql.shuffle.partitions").toInt ==
       spark.sparkContext.defaultParallelism)
   }
+
+  test("a child session reuses the caller's generated classes") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    import org.apache.spark.sql.SparkSession
+    import org.apache.spark.sql.functions.col
+    def q(s: SparkSession): Unit = {
+      s.range(0, 1000, 1, 4).groupBy((col("id") % 7).as("k")).count().collect()
+      ()
+    }
+    q(spark)
+    val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    q(org.apache.spark.sql.GraftSqlBridge.cloneSession(spark))
+    assert(CodegenMetrics.METRIC_COMPILATION_TIME.getCount == compiled,
+      "the child recompiled classes the caller had already compiled")
+  }
 }
