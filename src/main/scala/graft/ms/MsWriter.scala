@@ -5,7 +5,7 @@ import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import java.util.{Comparator, UUID}
 import scala.concurrent.{Await, ExecutionContext, Future}
 import scala.concurrent.duration.Duration
-import scala.util.Try
+import scala.util.{Try, Using}
 
 /** Parquet MS sink (SURVEY §2.1 S7–S10).
   *
@@ -77,8 +77,8 @@ object MsWriter {
     Files.move(from, to, StandardCopyOption.ATOMIC_MOVE)
 
   private def deleteTree(p: Path): Unit =
-    Files.walk(p).sorted(Comparator.reverseOrder[Path]())
-      .forEach(f => Files.delete(f))
+    Using.resource(Files.walk(p))(
+      _.sorted(Comparator.reverseOrder[Path]()).forEach(f => Files.delete(f)))
 
   /** S7/S8: one table of the output MS. `partitionCols` hive-partitions
     * the layout (used for `main`: the reference's natural group key, so
@@ -107,7 +107,7 @@ object MsWriter {
   def passthrough(spark: SparkSession, inRoot: String, outRoot: String,
                   regenerated: Seq[(String, DataFrame)]): Seq[String] = {
     val skip = regenerated.map(_._1).toSet + "main"
-    val copied = Files.list(Paths.get(inRoot)).toArray.toSeq
+    val copied = Using.resource(Files.list(Paths.get(inRoot)))(_.toArray.toSeq)
       .map(_.asInstanceOf[Path]).filter(Files.isDirectory(_))
       .map(_.getFileName.toString).filterNot(skip).sorted
     implicit val ec: ExecutionContext = ExecutionContext.global

@@ -3,6 +3,7 @@ package graft.pipeline
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import TextOps.hash60
+import graft.expressions.{Centroids, NearestCentroids}
 
 /** Similarity search over an embedding column (`Array[Float]`):
   * brute-force cosine top-k as the correctness baseline, plus two
@@ -78,30 +79,20 @@ object Ann {
 
   /** Squared distance of scaled vector `iv` to centroid (sum `sv`,
     * count `n`): exact rational (Σ(n·x−s)²)/n² while n ≤ ExactNMax,
-    * double fallback above.
+    * double fallback above — the Column form of
+    * [[graft.expressions.Centroids.d2]], for the joins that pair a row
+    * with a centroid table (annIvf's probes, the PQ lookup table).
     */
   private def ratD2(iv: Column, sv: Column, n: Column): Column = {
     // Σ_d(n·x−s)² expanded to n²·Σx² − 2n·Σxs + Σs²: the SAME exact
     // integer (bit-identical double after /n², so the DuckDB oracle's
-    // summed form needs no change), but three native codegen
-    // DotProductL loops instead of an interpreted zip_with+aggregate
-    // per (row, centroid) — the training hot path of a4/a5/a6 (10×
-    // probes: pl_a5 7.3→3.7 s, pl_a6 16.4→9.9 s). Intermediates stay
-    // in int64 for n ≤ ExactNMax: n²Σx² ≤ 2⁶¹, |2nΣxs| ≤ 2⁶²,
-    // Σs² ≤ 2⁶¹, every partial sum < 2⁶³ (no ANSI overflow).
-    ratD2Pre(iv, sv, n, doti(iv, iv), doti(sv, sv))
-  }
-
-  /** [[ratD2]] with the two self-dot invariants hoisted: in an
-    * assignment join each row's Σx² and each centroid's Σs² are
-    * constant across the n×k pairing, so callers on the training hot
-    * path (kmeansModel, pqModel) compute them ONCE per side and pass
-    * them in, leaving one 8/64-dim native dot per pair.
-    */
-  private def ratD2Pre(iv: Column, sv: Column, n: Column,
-                       ivNorm: Column, svNorm: Column): Column = {
-    val exact = (n * n * ivNorm - lit(2L) * n * doti(iv, sv) + svNorm)
-      .cast("double") / (n * n)
+    // summed form needs no change), but native codegen DotProductL
+    // loops instead of an interpreted zip_with+aggregate per
+    // (row, centroid). Intermediates stay in int64 for n ≤ ExactNMax:
+    // n²Σx² ≤ 2⁶¹, |2nΣxs| ≤ 2⁶², Σs² ≤ 2⁶¹, every partial sum < 2⁶³
+    // (no ANSI overflow).
+    val exact = (n * n * doti(iv, iv) - lit(2L) * n * doti(iv, sv) +
+      doti(sv, sv)).cast("double") / (n * n)
     val approx = aggregate(zip_with(iv, sv, (x, s) => {
         val d = x.cast("double") - s.cast("double") / n.cast("double")
         d * d
@@ -111,125 +102,25 @@ object Ann {
 
   /** The k-row centroid frame collected driver-side as
     * (c_id, n, sv) rows — the Bda-sizing collect discipline; feeds
-    * [[centCands]]/[[assignLiteral]]. Callers collect per Lloyd round:
-    * the frame is k tiny rows and already eagerly materialized there.
+    * [[assign]]. Callers collect per Lloyd round: the frame is k tiny
+    * rows and already eagerly materialized there.
     */
   private def collectCent(cent: DataFrame): Array[(Int, Long, Array[Long])] =
     cent.select("c_id", "n", "sv").collect()
       .map(r => (r.getInt(0), r.getLong(1), r.getSeq[Long](2).toArray))
       .sortBy(_._1)
 
-  /** Per-centroid literal candidate structs (d2, c_id) for a row with
-    * scaled vector `iv` and hoisted self-dot `ivNorm`: d2 is the SAME
-    * [[ratD2Pre]] expression the broadcast-join form evaluated, with
-    * the centroid's (sv, n, Σs²) inlined as literals — constant
-    * folding picks the exact/approx branch per centroid from the
-    * literal n, so the value is bit-identical to the join form on
-    * every row.
+  /** Centroid assignment as a pure projection: the k collected centroid
+    * rows become a [[graft.expressions.NearestCentroids]] table and each
+    * row's cluster is its (d2 asc, c_id asc) argmin — ONE corpus scan
+    * and ZERO exchanges, where a join against the centroid frame would
+    * shuffle the exploded N×k-row frame per Lloyd round.
     */
-  /** Plan-size bound for the literal candidate family: the assignment
-    * expression holds k×Dim literal cells plus a branch pair per
-    * centroid, so its cost is paid at plan/codegen time, per plan. The
-    * r16 100× grid ran k=800 × Dim=64 (51k cells) comfortably; the
-    * bound is set a decade above that and exists to fail LOUDLY with
-    * the remedy — at k ∝ corpus the flat literal form is the wrong
-    * rung, [[hierAssign]]'s b ≈ √k two-stage routing bounds the
-    * literal count at (b + k/b)×Dim ≈ 2√k·Dim for any k.
-    */
-  val LiteralAssignMaxCells = 1 << 19
-
-  private def centCands(cents: Array[(Int, Long, Array[Long])],
-                        iv: Column, ivNorm: Column): Seq[Column] = {
-    val cells = cents.length.toLong *
-      cents.headOption.map(_._3.length.toLong).getOrElse(0L)
-    require(cells <= LiteralAssignMaxCells,
-      s"literal-argmin assignment over ${cents.length} centroids × " +
-        s"${cents.headOption.map(_._3.length).getOrElse(0)} dims = " +
-        s"$cells literal cells exceeds $LiteralAssignMaxCells — at " +
-        "k ∝ corpus route hierarchically (hierAssign: b ≈ √k bounds " +
-        "the inline table at ~2√k·Dim cells)")
-    cents.toIndexedSeq.map { case (cid, n, sv) =>
-      struct(
-        ratD2Pre(iv, typedLit(sv.toSeq), lit(n), ivNorm,
-          lit(sv.map(x => x * x).sum)).as("d"),
-        lit(cid).as("id"))
-    }
+  private def assign(cents: Array[(Int, Long, Array[Long])],
+                     iv: Column, ivNorm: Column): Column = {
+    require(cents.nonEmpty, "centroid assignment needs >= 1 centroid")
+    NearestCentroids.argmin(Centroids.rational(cents, ExactNMax), iv, ivNorm)
   }
-
-  /** Literal-argmin centroid assignment — the shared replacement (r16)
-    * for `crossJoin(broadcast(cent))` +
-    * `row_number().over(partitionBy(id))`, the pattern r15 eradicated
-    * from hierAssign and whose last habitats were every
-    * [[kmeansModel]] Lloyd round and [[annIvfSq8]]'s full-corpus
-    * assignment. The centroid table is k tiny rows (collected by
-    * [[collectCent]]); `array_min` over the literal candidate structs
-    * compares field-by-field, so the min IS the (d2 asc, c_id asc)
-    * argmin with the window's exact tie-break — bit-identical
-    * assignments, but the plan is a pure projection: ONE corpus scan
-    * and ZERO exchanges, where the join form shuffled the exploded
-    * N×k-row frame through a hashpartitioning(id) Exchange per round.
-    * coalesce(-1) marks the column non-nullable (it never is — the
-    * candidate array is a non-empty literal): without it an inner
-    * list-join on `cluster` infers isnotnull(cluster) and predicate
-    * pushdown drags the whole argmin into the scan filter, re-running
-    * it per row (the hierAssign lesson, r15).
-    */
-  private def assignLiteral(cents: Array[(Int, Long, Array[Long])],
-                            iv: Column, ivNorm: Column): Column = {
-    require(cents.nonEmpty, "assignLiteral needs >= 1 centroid")
-    // r19 (VERDICT r18 #3): the argmin is ONE native expression with
-    // the centroid table as codegen REFERENCE OBJECTS instead of
-    // array_min over k literal (d2, id) structs. Same ratD2Pre
-    // distances, same (d2 asc, id asc) rule — bit-identical ids — but
-    // the generated Java source no longer embeds the centroid values,
-    // so every Lloyd round and every entry (same Dim) hits the codegen
-    // cache instead of paying a fresh driver-side Janino compile of a
-    // k×Dim-literal tree (pl_a6's measured wall), and the per-row cost
-    // drops to a primitive loop (no k struct allocations per row).
-    // The k×Dim plan-size guard moves with the remaining literal
-    // candidates ([[centCands]], the probeCells path).
-    coalesce(
-      graft.expressions.ArgminRatD2(cents, iv, ivNorm, ExactNMax),
-      lit(-1))
-  }
-
-  /** Top-`p` nearest centroids as a sorted literal-candidate slice —
-    * the multi-probe generalization of [[assignLiteral]] (array_sort
-    * on structs = ascending (d2, id), so element 1 is exactly the
-    * single-probe argmin); the probe-side twin of hierAssign's
-    * stage-1 routing, over UNquantized centroids.
-    */
-  private def probeCells(cents: Array[(Int, Long, Array[Long])],
-                         iv: Column, ivNorm: Column, p: Int): Column =
-    slice(array_sort(array(centCands(cents, iv, ivNorm): _*)),
-      1, math.min(p, cents.length))
-
-  /** QUANTIZED-centroid candidate struct (d2, id) for a row carrying
-    * `iv`/`norm2` columns: d2 = norm2 − 2·⟨iv,qv⟩ + ⟨qv,qv⟩ =
-    * Σ(iv−qv)², pure int64, with ⟨qv,qv⟩ folded to a driver-side
-    * literal. ONE definition for every quantized routing stage —
-    * hierAssignModel's coarse/fine argmins, the batch hier-IVF probe
-    * cells, and the streaming serve router: the st16 contract (batch
-    * oracle gates the stream) requires these to stay bit-identical,
-    * so they must share the expression (r16 review #8), the same
-    * single-definition rule [[centCands]] plays for the unquantized
-    * family.
-    */
-  private def quantCand(id: Int, qv: Array[Long]): Column = {
-    val qq = qv.map(x => x * x).sum
-    struct(
-      (col("norm2") - lit(2L) * doti(col("iv"), typedLit(qv.toSeq))
-        + lit(qq)).as("d"),
-      lit(id).as("id"))
-  }
-
-  /** The sorted top-`p` quantized cells ([[quantCand]] over the whole
-    * table, array_sort, slice) — [[probeCells]]' quantized twin.
-    */
-  private def quantCells(cents: Seq[(Int, Array[Long])], p: Int): Column =
-    slice(array_sort(
-      array(cents.map { case (id, qv) => quantCand(id, qv) }: _*)),
-      1, math.min(p, cents.length))
 
   /** Deterministic hyperplane coefficients in [-1000, 1000], computed
     * driver-side with the same md5 formula the oracle uses and shipped
@@ -380,8 +271,8 @@ object Ann {
     *
     * Scale: each round's assignment is a PURE PROJECTION — the k
     * centroid rows (eagerly materialized anyway) collect driver-side
-    * and inline as literal (d2, c_id) candidates, [[assignLiteral]] —
-    * so the corpus is scanned once per round with ZERO exchanges;
+    * into a NearestCentroids table, [[assign]] — so the corpus is
+    * scanned once per round with ZERO exchanges;
     * centroid recompute is a (cluster, dim) partial aggregation.
     * (r15 and earlier shipped crossJoin(broadcast) + a
     * row_number().over(partitionBy(vec_id)) window here — an Exchange
@@ -389,7 +280,7 @@ object Ann {
     * pl_a4/a5/a10/a11 and pl_d14's clustering. VERDICT r15 #1.)
     */
   def kmeansClusters(vectors: DataFrame, k: Int, rounds: Int): DataFrame = {
-    // the assignment is a literal projection (r16) — the centroid
+    // the assignment is a pure projection (r16) — the centroid
     // checkpoint has no consumer once training returns, release it
     val (assigned, cent, _) = kmeansModelRows(vectors, k, rounds)
     Caches.releaseQuiet(cent)
@@ -407,9 +298,9 @@ object Ann {
   }
 
   /** [[kmeansModel]] plus the final centroid table ALREADY collected —
-    * the rows the last Lloyd round's literal assignment inlined.
+    * the rows the last Lloyd round's assignment routed against.
     * Callers that only need driver-side centroids (every r16
-    * literal-argmin path) take the rows and `releaseQuiet` the frame
+    * projection-argmin path) take the rows and `releaseQuiet` the frame
     * instead of re-collecting it: the re-collect was a redundant k-row
     * job for rounds ≥ 2 and, for rounds = 1, re-ran the corpus-wide
     * TakeOrdered seed scan (the returned frame is the un-materialized
@@ -447,11 +338,11 @@ object Ann {
       // round 0 collects the seed (one TakeOrdered job over the
       // corpus); later rounds read back the just-materialized k-row
       // checkpoint — either way k tiny rows on the driver, and the
-      // assignment is a zero-exchange literal-argmin projection
+      // assignment is a zero-exchange argmin projection
       val centRows = collectCent(cent)
       // the train-then-assign CONTRACT (r16 review #6): an empty
       // training input fails loudly here, with a domain message —
-      // never an unclustered corpus or a cryptic literal-arity error
+      // never an unclustered corpus or a cryptic empty-table error
       // (the pre-r16 join form silently produced an empty result;
       // emptiness at train time is an upstream bug, not a state to
       // propagate). Spec-pinned in PipelineSpec.
@@ -461,7 +352,7 @@ object Ann {
       lastRows = centRows
       assigned = vN
         .withColumn("cluster",
-          assignLiteral(centRows, col("iv"), col("_ivn")))
+          assign(centRows, col("iv"), col("_ivn")))
         .select(col("vec_id"), col("iv"), col("cluster"))
       // materialize each INTERMEDIATE centroid table (k tiny rows):
       // round r+1 and every downstream consumer then build on a
@@ -508,11 +399,10 @@ object Ann {
     *    parents/assignments are integer argmins with c_id tie-break.
     * The centroid table is k tiny rows — quantization, coarse pick,
     * and parenting run driver-side (the Bda-sizing collect
-    * discipline) and ship back as LITERAL candidate arrays inside a
-    * single projection: both routing stages are per-row
-    * `array_min(struct(d2, id))` argmins over inlined centroids, so
-    * the corpus is touched by exactly ONE scan and the whole
-    * assignment plans ZERO exchanges (PlanShapeSpec-locked).
+    * discipline) and ship back as NearestCentroids tables inside a
+    * single projection: both routing stages are per-row (d2, id)
+    * argmins, so the corpus is touched by exactly ONE scan and the
+    * whole assignment plans ZERO exchanges (PlanShapeSpec-locked).
     * Returns (vec_id, iv, norm2, cluster).
     */
   def hierAssign(vectors: DataFrame, k: Int, b: Int, rounds: Int,
@@ -522,14 +412,14 @@ object Ann {
       trainedCoarse)._1
 
   /** [[hierAssign]] plus the quantized fine-centroid table it routed
-    * against ((c_id, qv) driver-side rows) — the model a hier-routed
+    * against — the model a hier-routed
     * index ([[annIvfSq8Hier]]) needs: probe-side assignment must
     * quantize against the SAME integer centroids that built the lists.
     */
   private[graft] def hierAssignModel(vectors: DataFrame, k: Int, b: Int,
       rounds: Int, trainPpm: Long = 1000000L, probes: Int = 1,
       trainedCoarse: Boolean = false)
-      : (DataFrame, Array[(Int, Array[Long])]) = {
+      : (DataFrame, Centroids) = {
     require(b >= 1 && b <= k, s"need 1 <= b <= k, got b=$b k=$k")
     require(probes >= 1 && probes <= b,
       s"need 1 <= probes <= b, got probes=$probes b=$b")
@@ -597,63 +487,21 @@ object Ann {
     // crossJoin(broadcast)+row_number().over(partitionBy(vec_id)) —
     // an Exchange of the exploded N×b then N×(k/b) frame, ~2N√k
     // shuffled rows at k∝N, for a per-row argmin that needs no
-    // shuffle at all). The centroids are k tiny driver-side rows
-    // already, so each candidate set is inlined as a literal
-    // `struct(d2, id)` array and the argmin is `array_min`: Spark's
-    // struct ordering compares field-by-field, so min over
-    // (d2, id) structs IS the (d2 asc, id asc) argmin with the same
-    // c_id tie-break the window gave — bit-identical assignments,
-    // zero exchanges, one corpus scan for BOTH stages.
-    // Σ(iv−qv)² = norm2 − 2·⟨iv,qv⟩ + ⟨qv,qv⟩; ⟨qv,qv⟩ folds to a
-    // driver-side literal per centroid ([[quantCand]] — the shared
-    // definition every quantized routing stage uses).
-    // Stage 1 generalizes to MULTI-PROBE (r15): the `probes` nearest
-    // coarse cells are the first p elements of the sorted candidate
-    // array (array_sort on structs = ascending (d2, id), so element 0
-    // is exactly the single-probe argmin — probes=1 is bit-identical
-    // to the original routing). Stage 2 takes the best fine candidate
-    // across all probed cells with `least` over the per-cell argmin
-    // structs — comparing (d2, id) structs keeps the same c_id
-    // tie-break a global argmin would give. Zero exchanges at any p.
-    // The sorted probe array is STAGED as its own projection column:
-    // the stage-2 branch conditions reference it b times, and an
-    // inlined (collapsed) form re-ran the b-candidate sort+dots per
-    // condition — measured 3× wall at 10×/p=2. CollapseProject keeps
-    // a non-cheap multi-referenced alias staged, so `_shc` is
-    // computed once per row and the conditions are O(1) array reads.
-    val probed = quantCells(routable.toSeq, nProbes)
-    val byParent = cents.groupBy { case (id, _) => parentOf(id) }
-    // struct-valued per-cell best: min (d2, id) among the cell's children
-    val branchStruct = routable.toSeq.map { case (hc, _) =>
-      hc -> array_min(array(
-        byParent(hc).toSeq.map { case (id, qv) => quantCand(id, qv) }: _*))
-    }
-    // a probed id ranges over exactly the routable coarse ids (each
-    // has >=1 child by construction), so the last branch is the
-    // total `otherwise`
-    def cellBest(hcId: Column): Column =
-      branchStruct.init.foldRight(branchStruct.last._2) {
-        case ((hc, e), rest) => when(hcId === lit(hc), e).otherwise(rest)
-      }
-    // coalesce(-1) marks the expression NON-NULLABLE (it never is: the
-    // candidate arrays are non-empty literal structs and the when-chain
-    // is total). Without it, an inner join on `cluster` infers an
-    // isnotnull(cluster) constraint, and predicate pushdown drags the
-    // WHOLE routing expression — withScaled's transform() re-inlined
-    // per candidate — into the parquet scan filter: measured 10× on
-    // the pair-join wall at sf0.1 fixtures. With the non-nullable
-    // mark, no constraint is inferred and routing runs once per row
-    // in the projection.
-    val cluster = coalesce(
-      (0 until nProbes)
-        .map(i => cellBest(element_at(col("_shc"), i + 1).getField("id")))
-        .reduce(least(_, _))
-        .getField("id"),
-      lit(-1))
+    // shuffle at all). The integer tables route through the same
+    // NearestCentroids kernel as the rational ones (n = 1: its exact
+    // branch is Σ(iv−qv)² = norm2 − 2·⟨iv,qv⟩ + ⟨qv,qv⟩), with the
+    // same (d2 asc, id asc) rule — the c_id tie-break the window gave.
+    // Stage 1 is MULTI-PROBE (r15): the `probes` nearest coarse cells;
+    // probes=1 is the single argmin. Stage 2 is the best fine
+    // centroid parented to any probed cell — the kernel skips every
+    // other centroid before computing its distance, so a row still
+    // pays b + probes·k/b dots. Zero exchanges at any p.
+    val probed = NearestCentroids.topP(Centroids.quantized(routable),
+      col("iv"), col("norm2"), nProbes)
+    val fine = Centroids.quantized(cents, parentOf)
     (withScaled(vectors).select("vec_id", "iv", "norm2")
-      .withColumn("_shc", probed)
-      .withColumn("cluster", cluster)
-      .select("vec_id", "iv", "norm2", "cluster"), cents)
+      .withColumn("cluster", NearestCentroids.argmin(fine, col("iv"),
+        col("norm2"), Some(probed))), fine)
   }
 
   /** IVF over the TRAINED k-means quantizer — the end-to-end form that
@@ -669,7 +517,7 @@ object Ann {
                    k: Int = 8, rounds: Int = 2): DataFrame = {
     val v = withScaled(vectors)
     val (assigned, cent, centRows) = kmeansModelRows(vectors, k, rounds)
-    // centroids live on as literals only — release the checkpoint
+    // centroids live on as driver-side rows only — release the checkpoint
     Caches.releaseQuiet(cent)
     // the model's assignment is itself a pure projection over the
     // corpus (vec_id, iv, cluster) — compose the list table ON TOP of
@@ -680,10 +528,10 @@ object Ann {
     val probes = v.filter(probeFilter)
       .select(col("vec_id").as("probe_id"), col("iv").as("p_iv"),
         col("norm2").as("p_norm2"))
-    // probe assignment via the same literal argmin (P tiny rows; the
-    // old crossJoin+window shape planned an Exchange even for these)
+    // probe assignment via the same argmin (P tiny rows; the old
+    // crossJoin+window shape planned an Exchange even for these)
     val pAssigned = probes.withColumn("assigned_cluster",
-      assignLiteral(centRows, col("p_iv"), col("p_norm2")))
+      assign(centRows, col("p_iv"), col("p_norm2")))
     val scored = lists.join(broadcast(pAssigned),
         col("cluster") === col("assigned_cluster") &&
           col("vec_id") =!= col("probe_id"))
@@ -699,8 +547,8 @@ object Ann {
     * exact rational distances — the [[kmeansModel]] contract) trains
     * PqCodes centroids. ALL subspaces assign in the SAME projection
     * (r16): the M×K codebook collects driver-side per round and every
-    * subspace's code is a literal-argmin ([[assignLiteral]]) over its
-    * K candidates — zero exchanges per Lloyd round except the
+    * subspace's code is an argmin ([[assign]]) over its K
+    * centroids — zero exchanges per Lloyd round except the
     * (m, code, d)-keyed centroid recompute aggregation, and the
     * compressed-corpus output is a pure projection (no
     * groupBy(vec_id) round-trip).
@@ -739,7 +587,7 @@ object Ann {
       df.withColumn(s"_siv$m", slice(col("iv"), m * PqSubDim + 1, PqSubDim))
         .withColumn(s"_sivn$m", doti(col(s"_siv$m"), col(s"_siv$m")))
     }
-    // the collected codebook, split by subspace — feeds assignLiteral
+    // the collected codebook, split by subspace — feeds assign
     def byM(cent: DataFrame): Map[Int, Array[(Int, Long, Array[Long])]] =
       cent.select("m", "c_id", "n", "sv").collect()
         .map(r => (r.getInt(0),
@@ -749,11 +597,10 @@ object Ann {
     for (rd <- 0 until rounds) {
       lastCent = cent
       // assignment is a PURE PROJECTION (r16 — the kmeansModel
-      // literal-argmin discipline, per subspace): the M×K codebook
-      // collects driver-side and each subspace's code is an
-      // array_min over K literal (d2, c_id) candidates — the same
-      // lexicographic (d2 asc, c_id asc) rule the old
-      // partial-aggregated min(struct) used, with the SAME ratD2Pre
+      // argmin discipline, per subspace): the M×K codebook collects
+      // driver-side and each subspace's code is the (d2 asc,
+      // c_id asc) argmin over its K centroids — the rule the old
+      // partial-aggregated min(struct) used, with the SAME rational
       // distances, so codes are bit-identical; the per-round
       // N×M-row groupBy exchange is gone.
       codebook = byM(cent)
@@ -768,7 +615,7 @@ object Ann {
       if (rd < rounds - 1) {
         val enc = vS.select(col("vec_id") +: (0 until PqSubspaces).map { m =>
           struct(
-            assignLiteral(codebook(m), col(s"_siv$m"), col(s"_sivn$m"))
+            assign(codebook(m), col(s"_siv$m"), col(s"_sivn$m"))
               .as("code"),
             col(s"_siv$m").as("siv")).as(s"_e$m")
         }: _*)
@@ -794,7 +641,7 @@ object Ann {
     // old groupBy(vec_id)+collect_list round-trip is gone too
     val codes = vS.select(col("vec_id"),
       array((0 until PqSubspaces).map { m =>
-        assignLiteral(codebook(m), col(s"_siv$m"), col(s"_sivn$m"))
+        assign(codebook(m), col(s"_siv$m"), col(s"_sivn$m"))
       }: _*).as("codes"))
     (codes, lastCent)
   }
@@ -999,9 +846,9 @@ object Ann {
     * sublinearities — the list assignment cuts candidates to
     * ~corpus/k per probe (annIvfKmeans's contract) and the scan
     * reads 1-byte/dim codes instead of raw floats (annSq8's
-    * contract). Grid + centroids are tiny and ship as literals;
+    * contract). Grid + centroids are tiny and ship inside the plan;
     * the list build is a zero-exchange corpus projection
-    * (assignment = [[assignLiteral]], r16 — r15 shipped an N×k-row
+    * (assignment = [[assign]], r16 — r15 shipped an N×k-row
     * crossJoin+window Exchange here) and the only corpus-wide
     * exchange in the whole query is the per-probe top-k. Returns
     * (probe_id, assigned_cluster, rank, neighbor_id, sqd, cos).
@@ -1023,8 +870,8 @@ object Ann {
         vectors, col("vec_id"), trainPpm, salt = "kmt")
     // One assignment form for BOTH train regimes (r16): the final
     // centroid table collects driver-side (k tiny rows) and the
-    // full corpus assigns against it as a zero-exchange literal
-    // argmin — for full train this IS the model's own final-round
+    // full corpus assigns against it as a zero-exchange argmin
+    // projection — for full train this IS the model's own final-round
     // assignment (same argmin against the same table), for sampled
     // train it extends the sample's contract to every corpus row.
     // r15 shipped crossJoin(broadcast)+window here — the N×k-row
@@ -1038,23 +885,19 @@ object Ann {
     // argmin needs; it exists in v already)
     val lists = v
       .withColumn("cluster",
-        assignLiteral(centRows, col("iv"), col("norm2")))
+        assign(centRows, col("iv"), col("norm2")))
       .select(col("vec_id"), sq8Cr(minsL, rngsL).as("cr"), col("cluster"))
       .withColumn("crn", doti(col("cr"), col("cr")))
-    // probe side: the `probes` nearest lists as a sorted literal
-    // candidate slice (hierAssign's stage-1 pattern over UNquantized
-    // centroids) — same (d2 asc, c_id asc) order and keep-rank as the
-    // old window, zero exchanges
+    // probe side: the `probes` nearest lists (hierAssign's stage-1
+    // routing over UNquantized centroids) — same (d2 asc, c_id asc)
+    // order and keep-rank as the old window, zero exchanges
     val pAssigned = v.filter(probeFilter)
       .select(col("vec_id").as("probe_id"), col("iv").as("p_iv"),
         col("norm2").as("p_norm2"), sq8Pm(minsL).as("pm"))
       .withColumn("pmn", doti(col("pm"), col("pm")))
-      .withColumn("_pc",
-        probeCells(centRows, col("p_iv"), col("p_norm2"), probes))
-      .withColumn("_pce", explode(col("_pc")))
-      .withColumn("assigned_cluster", col("_pce").getField("id"))
-      .select(col("probe_id"), col("p_iv"), col("p_norm2"), col("pm"),
-        col("pmn"), col("assigned_cluster"))
+      .withColumn("assigned_cluster", explode(NearestCentroids.topP(
+        Centroids.rational(centRows, ExactNMax), col("p_iv"),
+        col("p_norm2"), probes)))
     val scored = lists.join(broadcast(pAssigned),
         col("cluster") === col("assigned_cluster") &&
           col("vec_id") =!= col("probe_id"))
@@ -1077,13 +920,13 @@ object Ann {
 
   /** The 10⁹-vector IVF-SQ8: inverted lists built by the
     * ZERO-EXCHANGE hierarchical router ([[hierAssignModel]] — sampled
-    * training caps the Lloyd wall, coarse→fine literal-argmin routing
+    * training caps the Lloyd wall, coarse→fine projection routing
     * costs N·(b + k/b) dots and no shuffle) over SQ8-compressed
     * vectors. Probes take their `listProbes` nearest QUANTIZED fine
     * centroids — the same integer table the lists were routed
-    * against, as a staged sorted literal array (exact over all k
-    * cells; probes are few) — and scan those lists with the pure-
-    * int64 asymmetric distance before the exact rerank. Every stage
+    * against, ranked over all k cells (probes are few) — and scan
+    * those lists with the pure-int64 asymmetric distance before the
+    * exact rerank. Every stage
     * is integer/deterministic, so the composition is oracle-
     * replayable end to end. This fixes both walls the AnnProbe grid
     * measures on the flat composition at k ∝ corpus: full-train
@@ -1140,20 +983,16 @@ object Ann {
     val lists = assigned
       .select(col("vec_id"), sq8Cr(minsL, rngsL).as("cr"), col("cluster"))
       .withColumn("crn", doti(col("cr"), col("cr")))
-    // probe cells: (d2, id) structs over the quantized centroids,
-    // sorted and sliced — the hierAssign stage-1 pattern via the
-    // SHARED [[quantCand]]/[[quantCells]] definition (st16's
-    // batch-oracle-gates-the-stream contract rides on the three
-    // routing sites never drifting).
+    // probe cells: the `listProbes` nearest quantized fine centroids
+    // through the same NearestCentroids kernel as the router (st16's
+    // batch-oracle-gates-the-stream contract rides on every routing
+    // site sharing it).
     val pcells = v.filter(probeFilter)
       .select(col("vec_id").as("probe_id"), col("iv").as("p_iv"),
         col("norm2").as("p_norm2"), sq8Pm(minsL).as("pm"),
-        quantCells(cents.toSeq, listProbes).as("_pc"))
+        explode(NearestCentroids.topP(cents, col("iv"), col("norm2"),
+          listProbes)).as("assigned_cluster"))
       .withColumn("pmn", doti(col("pm"), col("pm")))
-      .withColumn("_pce", explode(col("_pc")))
-      .withColumn("assigned_cluster", col("_pce").getField("id"))
-      .select("probe_id", "p_iv", "p_norm2", "pm", "pmn",
-        "assigned_cluster")
     val scored = lists.join(broadcast(pcells),
         col("cluster") === col("assigned_cluster") &&
           col("vec_id") =!= col("probe_id"))
@@ -1408,8 +1247,8 @@ object Ann {
     * quantized centroid table, grid literals) builds ONCE from the
     * static corpus; probe vectors arrive on `probeStream`, route to
     * their `listProbes` nearest quantized cells as a PURE PROJECTION
-    * on the stream (the staged sorted literal array — no per-batch
-    * training, no stream-side shuffle before the join), and
+    * on the stream (the batch entry's NearestCentroids top-p — no
+    * per-batch training, no stream-side shuffle before the join), and
     * candidates come from a stream-static EQUI-join on the list key —
     * the shape that stays bounded when the corpus doesn't broadcast:
     * each micro-batch touches ~listProbes·corpus/k candidate rows per
@@ -1462,11 +1301,9 @@ object Ann {
     val probes = withScaled(probeStream)
       .select(col("vec_id").as("probe_id"), col("iv").as("p_iv"),
         col("norm2").as("p_norm2"), sq8Pm(minsL).as("pm"),
-        quantCells(cents.toSeq, listProbes).as("_pc"))
+        explode(NearestCentroids.topP(cents, col("iv"), col("norm2"),
+          listProbes)).as("cluster"))
       .withColumn("pmn", doti(col("pm"), col("pm")))
-      .withColumn("_pce", explode(col("_pc")))
-      .withColumn("cluster", col("_pce").getField("id"))
-      .select("probe_id", "p_iv", "p_norm2", "pm", "pmn", "cluster")
     val scored = probes.join(lists, "cluster")
       .filter(col("neighbor_id") =!= col("probe_id"))
       .withColumn("sqd",

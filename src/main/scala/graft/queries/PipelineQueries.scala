@@ -996,9 +996,9 @@ object PipelineQueries {
 
     // The 10^9-vector shape: lists built by the ZERO-EXCHANGE
     // hierarchical router (pl_d17's trained-coarse multi-probe
-    // config — sampled train + literal-argmin routing), storing SQ8
-    // codes; probes take their 2 nearest quantized fine cells from a
-    // staged sorted literal array. Fixes both measured walls of the
+    // config — sampled train + projection-argmin routing), storing
+    // SQ8 codes; probes take their 2 nearest quantized fine cells
+    // through the same routing kernel. Fixes both measured walls of the
     // flat composition at k ∝ corpus (full Lloyd, N·k assignment).
     "pl_a12_ann_ivf_sq8_hier" -> ((s, d) =>
       Ann.annIvfSq8Hier(Tables.embeddings(s, d), probeF, K, 8, 3, 2,

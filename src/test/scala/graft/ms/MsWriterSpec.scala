@@ -103,6 +103,20 @@ class MsWriterSpec extends SparkSpec {
     assert(spark.read.parquet(s"$out/main").count() > 0 && leftovers.isEmpty)
   }
 
+  test("passthrough closes its directory listing: no descriptor leak") {
+    // an input holding only `main` copies nothing, so no Spark job runs
+    // and any descriptor growth is the listing itself
+    val os = java.lang.management.ManagementFactory.getOperatingSystemMXBean
+      .asInstanceOf[com.sun.management.UnixOperatingSystemMXBean]
+    val root = s"$base/main_only.ms"
+    rm(root)
+    Files.createDirectories(Paths.get(s"$root/main"))
+    val before = os.getOpenFileDescriptorCount
+    (1 to 50).foreach(_ => MsWriter.passthrough(spark, root, s"$base/unused", Nil))
+    val grown = os.getOpenFileDescriptorCount - before
+    assert(grown < 10, s"$grown descriptors stayed open after 50 passthrough calls")
+  }
+
   test("a UVW gate failure throws before anything is staged") {
     // time-variable phase centres are rejected (fixvis.py:213-218)
     val root = brokenCopy("poly_field.ms", "FIELD",

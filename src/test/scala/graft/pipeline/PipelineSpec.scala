@@ -1201,6 +1201,34 @@ class PipelineSpec extends SparkSpec {
     assert(pairs == exact.filter { case (a, b) => clusters(a) == clusters(b) })
   }
 
+  test("a new centroid model reuses the compiled routing classes") {
+    // two disjoint halves of the corpus train two different centroid
+    // tables; read through identical plans (only the path differs),
+    // so the second model must compile nothing: the routing kernel's
+    // source carries no centroid value
+    import org.apache.spark.metrics.source.CodegenMetrics
+    import org.apache.spark.sql.DataFrame
+    val dir = "/tmp/graft_test/codegen_reuse"
+    val halves = Seq(0, 1).map { r =>
+      vecs.filter(col("vec_id") % 2 === r)
+        .write.mode("overwrite").parquet(s"$dir/half$r")
+      spark.read.parquet(s"$dir/half$r")
+    }
+    def compiled(df: DataFrame): Long = {
+      val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      df.collect()
+      CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
+    }
+    for ((what, model) <- Seq[(String, DataFrame => DataFrame)](
+        "hierAssign" -> (v => Ann.hierAssign(v, 8, 3, 2, probes = 2,
+          trainedCoarse = true)),
+        "kmeansClusters" -> (v => Ann.kmeansClusters(v, 8, 2)))) {
+      compiled(model(halves(0)))
+      val again = compiled(model(halves(1)))
+      assert(again == 0, s"$what recompiled $again classes for a new model")
+    }
+  }
+
   test("bigram LM: hand-computed corpus counts, common/rare rules, no-bigram docs") {
     val df = Seq((1L, "a b a b"), (2L, "a b c"), (3L, "solo"))
       .toDF("doc_id", "text")
