@@ -29,7 +29,8 @@ final class RowBufN(
   * native `TypedImperativeAggregate` — same escalation as
   * [[VisAvgAgg]], bit-identical to graft.ops.VisAggregator.RowAvg (the
   * typed reference implementation in the test sources)
-  * (equivalence-tested by RowAvgAggSpec and the shared oracles).
+  * (equivalence-tested by VisAvgAggSpec and the shared oracles).
+  * Its shuffle image carries one population, as [[VisAvgAgg]]'s does.
   * Semantics per reference averaging.py:125-173: TIME = mean(nom),
   * INTERVAL = sum(nom), TIME_CENTROID/EXPOSURE/UVW/WEIGHT/SIGMA over
   * the effective population with nominal fallback, FLAG_ROW = no
@@ -148,20 +149,28 @@ case class RowAvgAgg(
       b.nNom, b.nEff)
   }
 
+  // Image: nc, both counts, the nominal TIME and INTERVAL sums (eval
+  // always reads them), then tc, exp, wRow, uvw(3), weight(nc) and
+  // sigma(nc) of the one population eval reads — effective iff nEff > 0
+  // (counts only grow under merge). The absent population comes back
+  // zero-filled, so a no-effective-row partial still merges its exact
+  // +0.0 eff sums, as in [[VisAvgAgg]].
   override def serialize(b: RowBufN): Array[Byte] = {
     if (b.uvwEff == null) return Array.emptyByteArray
     val nc = b.wEff.length
-    val buf = ByteBuffer.allocate(4 + 16 + 64 + (6 + nc * 4) * 8)
+    val eff = b.nEff > 0
+    val buf = ByteBuffer.allocate(4 + 16 + 16 + (6 + 2 * nc) * 8) // 148 B at nc = 4
     buf.putInt(nc).putLong(b.nNom).putLong(b.nEff)
     buf.putDouble(b.timeSum).putDouble(b.intervalSum)
-    buf.putDouble(b.tcEff).putDouble(b.tcNom)
-    buf.putDouble(b.expEff).putDouble(b.expNom)
-    buf.putDouble(b.wRowEff).putDouble(b.wRowNom)
+    buf.putDouble(if (eff) b.tcEff else b.tcNom)
+    buf.putDouble(if (eff) b.expEff else b.expNom)
+    buf.putDouble(if (eff) b.wRowEff else b.wRowNom)
     def putD(a: Array[Double]): Unit = {
       var i = 0; while (i < a.length) { buf.putDouble(a(i)); i += 1 }
     }
-    putD(b.uvwEff); putD(b.uvwNom)
-    putD(b.wEff); putD(b.wNom); putD(b.sigEff); putD(b.sigNom)
+    putD(if (eff) b.uvwEff else b.uvwNom)
+    putD(if (eff) b.wEff else b.wNom)
+    putD(if (eff) b.sigEff else b.sigNom)
     buf.array()
   }
 
@@ -172,17 +181,24 @@ case class RowAvgAgg(
     val b = new RowBufN()
     b.nNom = buf.getLong; b.nEff = buf.getLong
     b.timeSum = buf.getDouble; b.intervalSum = buf.getDouble
-    b.tcEff = buf.getDouble; b.tcNom = buf.getDouble
-    b.expEff = buf.getDouble; b.expNom = buf.getDouble
-    b.wRowEff = buf.getDouble; b.wRowNom = buf.getDouble
+    val tc = buf.getDouble; val exp = buf.getDouble; val wRow = buf.getDouble
     def getD(k: Int): Array[Double] = {
       val a = new Array[Double](k)
       var i = 0; while (i < k) { a(i) = buf.getDouble; i += 1 }
       a
     }
-    b.uvwEff = getD(3); b.uvwNom = getD(3)
-    b.wEff = getD(nc); b.wNom = getD(nc)
-    b.sigEff = getD(nc); b.sigNom = getD(nc)
+    val uvw = getD(3); val w = getD(nc); val sig = getD(nc)
+    if (b.nEff > 0) {
+      b.tcEff = tc; b.expEff = exp; b.wRowEff = wRow
+      b.uvwEff = uvw; b.wEff = w; b.sigEff = sig
+      b.uvwNom = new Array[Double](3)
+      b.wNom = new Array[Double](nc); b.sigNom = new Array[Double](nc)
+    } else {
+      b.tcNom = tc; b.expNom = exp; b.wRowNom = wRow
+      b.uvwNom = uvw; b.wNom = w; b.sigNom = sig
+      b.uvwEff = new Array[Double](3)
+      b.wEff = new Array[Double](nc); b.sigEff = new Array[Double](nc)
+    }
     b
   }
 

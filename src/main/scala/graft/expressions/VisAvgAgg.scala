@@ -34,8 +34,11 @@ final class VisBufN(
   * row — and every partial buffer through Product-encoder ser/de. Here
   * `update` reads the incoming `ArrayData` in place (primitive loops,
   * zero per-row allocation) and the shuffle buffer is one flat byte
-  * image of the double arrays. Same ObjectHashAggregate plan shape, one
-  * wide shuffle, map-side partials — only the constant factor changes.
+  * image holding, per cell, only the population `eval` can still read
+  * (effective where the cell has an effective sample, else nominal) —
+  * 32 B/cell instead of both populations' 72. Same ObjectHashAggregate
+  * plan shape, one wide shuffle, map-side partials — only the constant
+  * factor changes.
   *
   * Semantics (identical to VisAvg; reference averaging.py:125-173):
   * dual-population weighted complex mean per output cell with per-cell
@@ -176,44 +179,71 @@ case class VisAvgAgg(
       else new GenericArrayData(Array.empty[Any]))
   }
 
-  // Flat binary image: header (nchanOut, ncorr, hasSig) + the primitive
-  // arrays back to back — no per-element object ser/de on the shuffle.
+  // Flat binary image of the population eval can still read: header
+  // (nchanOut, ncorr, hasSig), a bitmap of `nEffCell(i) > 0`, then per
+  // cell re, im, w (and sig) from eff where the bit is set, else nom.
+  // Exact, not lossy: counts only grow under merge, so a cell with an
+  // effective sample ends with nEff > 0 and its nom sums are never read;
+  // a cell without one has eff sums that are exactly +0.0 (never
+  // incremented), which deserialize restores.
   override def serialize(b: VisBufN): Array[Byte] = {
     if (b.effRe == null) return Array.emptyByteArray
     val n = b.effRe.length
     val hasSig = b.effSig != null
-    val nDoubles = n * (if (hasSig) 8 else 6)
-    val buf = ByteBuffer.allocate(9 + nDoubles * 8 + n * 8)
+    val buf = ByteBuffer.allocate(9 + (n + 7) / 8 + n * (if (hasSig) 32 else 24))
     buf.putInt(b.nchanOut).putInt(b.ncorr).put(if (hasSig) 1.toByte else 0.toByte)
-    def putD(a: Array[Double]): Unit = { var i = 0; while (i < n) { buf.putDouble(a(i)); i += 1 } }
-    putD(b.effRe); putD(b.effIm); putD(b.effW)
-    putD(b.nomRe); putD(b.nomIm); putD(b.nomW)
-    if (hasSig) { putD(b.effSig); putD(b.nomSig) }
+    val bits = new Array[Byte]((n + 7) / 8)
     var i = 0
-    while (i < n) { buf.putLong(b.nEffCell(i)); i += 1 }
+    while (i < n) {
+      if (b.nEffCell(i) > 0) bits(i >> 3) = (bits(i >> 3) | (1 << (i & 7))).toByte
+      i += 1
+    }
+    buf.put(bits)
+    i = 0
+    while (i < n) {
+      val eff = b.nEffCell(i) > 0
+      buf.putDouble(if (eff) b.effRe(i) else b.nomRe(i))
+      buf.putDouble(if (eff) b.effIm(i) else b.nomIm(i))
+      buf.putDouble(if (eff) b.effW(i) else b.nomW(i))
+      if (hasSig) buf.putDouble(if (eff) b.effSig(i) else b.nomSig(i))
+      i += 1
+    }
     buf.array()
   }
 
+  // The absent population is zero-filled: merge still adds the +0.0 eff
+  // of a no-effective-sample partial, exactly as it did before the image
+  // dropped it (-0.0 + +0.0 = +0.0, so skipping the add is not neutral).
+  // nEffCell comes back as 1 or 0; only `> 0` is ever read.
   override def deserialize(bytes: Array[Byte]): VisBufN = {
     if (bytes.isEmpty) return new VisBufN()
     val buf = ByteBuffer.wrap(bytes)
     val nchanOut = buf.getInt; val ncorr = buf.getInt
     val hasSig = buf.get() == 1
     val n = nchanOut * ncorr
-    def getD(): Array[Double] = {
-      val a = new Array[Double](n)
-      var i = 0; while (i < n) { a(i) = buf.getDouble; i += 1 }
-      a
-    }
-    val effRe = getD(); val effIm = getD(); val effW = getD()
-    val nomRe = getD(); val nomIm = getD(); val nomW = getD()
-    val effSig = if (hasSig) getD() else null
-    val nomSig = if (hasSig) getD() else null
-    val nEff = new Array[Long](n)
+    val bits = new Array[Byte]((n + 7) / 8)
+    buf.get(bits)
+    val b = new VisBufN(nchanOut, ncorr,
+      new Array[Double](n), new Array[Double](n), new Array[Double](n),
+      new Array[Double](n), new Array[Double](n), new Array[Double](n),
+      if (hasSig) new Array[Double](n) else null,
+      if (hasSig) new Array[Double](n) else null,
+      new Array[Long](n))
     var i = 0
-    while (i < n) { nEff(i) = buf.getLong; i += 1 }
-    new VisBufN(nchanOut, ncorr, effRe, effIm, effW, nomRe, nomIm, nomW,
-      effSig, nomSig, nEff)
+    while (i < n) {
+      if ((bits(i >> 3) & (1 << (i & 7))) != 0) {
+        b.nEffCell(i) = 1
+        b.effRe(i) = buf.getDouble; b.effIm(i) = buf.getDouble
+        b.effW(i) = buf.getDouble
+        if (hasSig) b.effSig(i) = buf.getDouble
+      } else {
+        b.nomRe(i) = buf.getDouble; b.nomIm(i) = buf.getDouble
+        b.nomW(i) = buf.getDouble
+        if (hasSig) b.nomSig(i) = buf.getDouble
+      }
+      i += 1
+    }
+    b
   }
 
   override def withNewMutableAggBufferOffset(offset: Int): VisAvgAgg =

@@ -1,6 +1,6 @@
 package graft.ms
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SaveMode}
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import java.util.{Comparator, UUID}
 import scala.concurrent.{Await, ExecutionContext, Future}
@@ -14,9 +14,9 @@ import scala.util.{Try, Using}
   *    (/root/reference/xova/apps/xova/app.py:152-159).
   *  - S7/S8 main + regenerated-subtable writes (app.py:107-118).
   *  - S9 verbatim passthrough of every untouched subtable
-  *    (/root/reference/xova/apps/xova/subtables.py:9-37) — a parquet
-  *    re-write (not a filesystem copy) that keeps subtable data going
-  *    through the same IO layer as `main`.
+  *    (/root/reference/xova/apps/xova/subtables.py:9-37) — a recursive
+  *    filesystem copy of its directory: no Spark job, and the copied
+  *    files are byte-identical to the input's.
   *
   * The output MS is committed atomically: every table is written under
   * a hidden sibling staging directory that one rename moves into place,
@@ -42,14 +42,14 @@ object MsWriter {
     * directory is removed (best effort) and `outRoot` is untouched.
     * Returns the tables written.
     */
-  def writeMs(spark: SparkSession, inRoot: String, outRoot: String,
+  def writeMs(inRoot: String, outRoot: String,
               force: Boolean, main: DataFrame, partitionCols: Seq[String],
               maxRecordsPerFile: Long,
               regenerated: Seq[(String, DataFrame)]): Seq[String] = {
     val out = Paths.get(outRoot).toAbsolutePath.normalize
     val stage = sibling(out, "staging")
     implicit val ec: ExecutionContext = ExecutionContext.global
-    val side = Future(passthrough(spark, inRoot, stage.toString, regenerated))
+    val side = Future(passthrough(inRoot, stage.toString, regenerated))
     try {
       writeTable(main, stage.toString, "main", partitionCols, maxRecordsPerFile)
       val tables = "main" +: Await.result(side, Duration.Inf)
@@ -98,25 +98,40 @@ object MsWriter {
   }
 
   /** S8 + S9: write the `regenerated` subtables and copy through every
-    * other subtable of the input MS. The ~9 subtables are tiny
+    * other subtable of the input MS. The regenerated subtables are tiny
     * independent writes to distinct directories, so they run as
-    * CONCURRENT Spark jobs — on a cluster this collapses ~9 sequential
+    * CONCURRENT Spark jobs — on a cluster this collapses sequential
     * driver→executor round-trips into one wave (and locally it hides
-    * per-job scheduling overhead). Returns the table names.
+    * per-job scheduling overhead); the untouched ones are copied file by
+    * file on the driver meanwhile. Returns the table names.
     */
-  def passthrough(spark: SparkSession, inRoot: String, outRoot: String,
+  def passthrough(inRoot: String, outRoot: String,
                   regenerated: Seq[(String, DataFrame)]): Seq[String] = {
     val skip = regenerated.map(_._1).toSet + "main"
-    val copied = Using.resource(Files.list(Paths.get(inRoot)))(_.toArray.toSeq)
+    val in = Paths.get(inRoot)
+    val copied = Using.resource(Files.list(in))(_.toArray.toSeq)
       .map(_.asInstanceOf[Path]).filter(Files.isDirectory(_))
       .map(_.getFileName.toString).filterNot(skip).sorted
     implicit val ec: ExecutionContext = ExecutionContext.global
     val writes = regenerated.map { case (t, df) =>
       Future(writeTable(df, outRoot, t))
-    } ++ copied.map { t =>
-      Future(writeTable(spark.read.parquet(s"$inRoot/$t"), outRoot, t))
     }
+    val out = Paths.get(outRoot)
+    // a failed copy still waits for the writes, so the caller's cleanup
+    // never races them
+    val copy = Try(copied.foreach(t => copyTree(in.resolve(t), out.resolve(t))))
     Await.result(Future.sequence(writes), Duration.Inf)
+    copy.get
     regenerated.map(_._1) ++ copied
   }
+
+  /** Recursive verbatim copy of the directory `from` to `to` (which must
+    * not exist yet), directories before their contents.
+    */
+  private def copyTree(from: Path, to: Path): Unit =
+    Using.resource(Files.walk(from))(_.forEach { f =>
+      val dst = to.resolve(from.relativize(f).toString)
+      if (Files.isDirectory(f)) Files.createDirectories(dst)
+      else Files.copy(f, dst)
+    })
 }

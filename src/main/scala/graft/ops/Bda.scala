@@ -302,7 +302,7 @@ object Bda {
     // exactly the channels that were averaged
     val (newSpw, newDdid, remapDf) = regenerate(spark, chanls,
       Timechannel.selectSpwChannels(spw, args.channels))
-    MsWriter.writeMs(spark, inRoot, outRoot, args.force,
+    MsWriter.writeMs(inRoot, outRoot, args.force,
       outputMain(main, bp, inRoot, args, remapDf), TimeAvg.GroupCols,
       args.rowChunks.toLong * args.groupRowChunks,
       Seq("SPECTRAL_WINDOW" -> newSpw, "DATA_DESCRIPTION" -> newDdid))

@@ -81,9 +81,11 @@ object TimeAvg {
 
   /** Estimated resident+serialized bytes per aggregation-state cell of
     * [[graft.expressions.VisAvgAgg]]: 8 double stat arrays + 1 long
-    * count (72 B) plus one serialized copy alive on the merge path.
+    * count (72 B resident) plus one serialized image alive on the merge
+    * path, which carries one population: 4 doubles and a bitmap bit
+    * (32⅛ B, rounded up to 33).
     */
-  val StateBytesPerCell = 144L
+  val StateBytesPerCell = 105L
   /** Per-partition aggregation-state budget for the averaging shuffle
     * (default; override with `spark.graft.avg.statePartitionBytes` —
     * on a cluster this knob tracks executor memory per task slot).

@@ -135,7 +135,7 @@ object Timechannel {
     val spw = averagedSpw(selectSpwChannels(
       spark.read.parquet(s"$inRoot/SPECTRAL_WINDOW"), args.channels),
       args.chanBinSize)
-    MsWriter.writeMs(spark, inRoot, outRoot, args.force,
+    MsWriter.writeMs(inRoot, outRoot, args.force,
       outputMain(main, inRoot, args, stats.map(_.nRows)), TimeAvg.GroupCols,
       args.rowChunks.toLong * args.groupRowChunks,
       Seq("SPECTRAL_WINDOW" -> spw))

@@ -19,21 +19,23 @@ class AdcSumSpec extends SparkSpec {
     // lut position m*K + c: M=3 subspaces, K=4 codes
     val lut = Seq(0.5, 1.0, 2.0, 4.0, /* m=1 */ 8.0, 16.0, 32.0, 64.0,
       /* m=2 */ 128.0, 256.0, 512.0, 1024.0)
-    val df = Seq(
+    val rows = Seq(
       (Seq(0, 0, 0), lut), // 0.5 + 8 + 128
       (Seq(3, 2, 1), lut), // 4 + 32 + 256
       (Seq(1, 3, 3), lut)) // 1 + 64 + 1024
-      .toDF("codes", "lut")
-    val got = df.select(AdcSum(col("codes"), col("lut"), K).as("adc"))
-      .as[Double].collect().toSeq
-    assert(got == Seq(136.5, 292.0, 1089.0))
+    val got = spark.sparkContext.parallelize(rows, 2).toDF("codes", "lut")
+      .select(AdcSum(col("codes"), col("lut"), K).as("adc"))
+    assertCodegenProject(got, classOf[AdcSum])
+    assert(got.as[Double].collect().toSeq == Seq(136.5, 292.0, 1089.0))
   }
 
   test("codegen and interpreted eval agree") {
     val codes = Seq(2, 0, 3)
     val lut = (0 until 12).map(_.toDouble * 1.25)
-    val fromPlan = Seq((codes, lut)).toDF("codes", "lut")
-      .select(AdcSum(col("codes"), col("lut"), K)).collect()(0).getDouble(0)
+    val planned = spark.sparkContext.parallelize(Seq((codes, lut)), 1)
+      .toDF("codes", "lut").select(AdcSum(col("codes"), col("lut"), K))
+    assertCodegenProject(planned, classOf[AdcSum])
+    val fromPlan = planned.collect()(0).getDouble(0)
     val interpreted = AdcSum(
       Literal(ArrayData.toArrayData(codes.toArray),
         ArrayType(IntegerType, containsNull = false)),

@@ -1,6 +1,8 @@
 package graft.expressions
 
 import graft.SparkSpec
+import org.apache.spark.sql.catalyst.expressions.Literal
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions._
 
 /** Native byte-values expression: interpreted + codegen paths agree
@@ -11,10 +13,13 @@ class ByteValuesSpec extends SparkSpec {
   private lazy val s = spark
   import s.implicits._
 
-  private val df = Seq(
+  private val payloads = Seq(
     Array[Byte](0, 1, 127, -128, -1), // signedness: -128 -> 128, -1 -> 255
     Array.emptyByteArray,
-    Array[Byte](42)).toDF("payload")
+    Array[Byte](42))
+  // from an RDD, so a projection without higher-order functions runs
+  // through whole-stage codegen
+  private lazy val df = spark.sparkContext.parallelize(payloads, 2).toDF("payload")
 
   test("matches the hex/conv composition on every non-empty row") {
     // non-empty only: on an EMPTY payload the old composition's
@@ -32,6 +37,14 @@ class ByteValuesSpec extends SparkSpec {
     assert(df.select(ByteValues(col("payload"))).as[Seq[Int]]
       .collect().toSeq ==
       Seq(Seq(0, 1, 127, 128, 255), Seq.empty, Seq(42)))
+  }
+
+  test("codegen and interpreted eval agree") {
+    val fromPlan = df.select(ByteValues(col("payload")))
+    assertCodegenProject(fromPlan, classOf[ByteValues])
+    val interpreted = payloads.map(p =>
+      ByteValues(Literal(p)).eval(null).asInstanceOf[ArrayData].toIntArray().toSeq)
+    assert(fromPlan.as[Seq[Int]].collect().toSeq == interpreted)
   }
 
   test("null payload yields null") {

@@ -1,7 +1,10 @@
 package graft.expressions
 
 import graft.SparkSpec
+import org.apache.spark.sql.catalyst.expressions.Literal
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, LongType}
 
 /** Native dot-product expression: interpreted + codegen paths agree
   * with the higher-order-function composition, SQL registration works.
@@ -10,10 +13,13 @@ class DotProductLSpec extends SparkSpec {
   private lazy val s = spark
   import s.implicits._
 
-  private val df = Seq(
+  private val rows = Seq(
     (Seq(1L, 2L, 3L), Seq(4L, 5L, 6L)),
     (Seq(-7L, 0L, 9L), Seq(2L, 100L, -3L)),
-    (Seq.empty[Long], Seq.empty[Long])).toDF("a", "b")
+    (Seq.empty[Long], Seq.empty[Long]))
+  // from an RDD, so a projection without higher-order functions runs
+  // through whole-stage codegen
+  private lazy val df = spark.sparkContext.parallelize(rows, 2).toDF("a", "b")
 
   test("matches the zip_with composition on every row") {
     val both = df.select(
@@ -23,6 +29,15 @@ class DotProductLSpec extends SparkSpec {
     assert(both.filter(col("native") =!= col("hof")).count() == 0)
     assert(both.select("native").as[Long].collect().toSeq ==
       Seq(32L, -41L, 0L))
+  }
+
+  test("codegen and interpreted eval agree") {
+    val fromPlan = df.select(DotProductL(col("a"), col("b")))
+    assertCodegenProject(fromPlan, classOf[DotProductL])
+    val arr = (xs: Seq[Long]) => Literal(ArrayData.toArrayData(xs.toArray),
+      ArrayType(LongType, containsNull = false))
+    val interpreted = rows.map { case (a, b) => DotProductL(arr(a), arr(b)).eval(null) }
+    assert(fromPlan.collect().map(_.getLong(0)).toSeq == interpreted)
   }
 
   test("null in either side yields null") {

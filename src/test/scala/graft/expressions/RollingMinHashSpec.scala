@@ -28,16 +28,20 @@ class RollingMinHashSpec extends SparkSpec {
       "aaaaaaaaaaaaaaaa", // single window, all-same bytes
       "abcdefghijklmnop", // exactly one window
       (1 to 40).map(i => s"tok$i").mkString(" "))
-    val got = texts.toDF("text")
+    val planned = spark.sparkContext.parallelize(texts, 2).toDF("text")
       .select(RollingMinHash(col("text"), 16).as("fp"))
+    assertCodegenProject(planned, classOf[RollingMinHash])
+    val got = planned
       .collect().map(r => if (r.isNullAt(0)) None else Some(r.getLong(0)))
     assert(got.toSeq == texts.map(brute(_, 16)))
   }
 
   test("codegen and interpreted eval agree") {
     val text = "rolling hashes roll exactly once per byte"
-    val fromPlan = Seq(text).toDF("text")
-      .select(RollingMinHash(col("text"), 16)).collect()(0).getLong(0)
+    val planned = spark.sparkContext.parallelize(Seq(text), 1).toDF("text")
+      .select(RollingMinHash(col("text"), 16))
+    assertCodegenProject(planned, classOf[RollingMinHash])
+    val fromPlan = planned.collect()(0).getLong(0)
     val interpreted = RollingMinHash(
       org.apache.spark.sql.catalyst.expressions.Literal(
         org.apache.spark.unsafe.types.UTF8String.fromString(text)), 16)

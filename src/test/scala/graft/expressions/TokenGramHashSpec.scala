@@ -17,10 +17,15 @@ class TokenGramHashSpec extends SparkSpec {
     else (0 to toks.length - k).map(i => toks.slice(i, i + k).mkString("_"))
   }
 
-  private def hashes(text: String, k: Int): Seq[Seq[Byte]] =
-    Seq(text).toDF("text")
+  /** One text's gram hashes, from an RDD so the projection runs through
+    * whole-stage codegen (asserted).
+    */
+  private def hashes(text: String, k: Int): Seq[Seq[Byte]] = {
+    val df = spark.sparkContext.parallelize(Seq(text), 1).toDF("text")
       .select(TokenGramHash(col("text"), k).as("h"))
-      .collect()(0).getSeq[Array[Byte]](0).map(_.toSeq)
+    assertCodegenProject(df, classOf[TokenGramHash])
+    df.collect()(0).getSeq[Array[Byte]](0).map(_.toSeq)
+  }
 
   test("hash equality classes equal gram-string equality classes") {
     val texts = Seq(

@@ -58,6 +58,16 @@ class MsWriterSpec extends SparkSpec {
       }.toMap
   }
 
+  /** Relative path -> file identity (device + inode) under `root`. */
+  private def fileKeys(root: String): Map[String, AnyRef] = {
+    val p = Paths.get(root)
+    Files.walk(p).toArray.map(_.asInstanceOf[Path])
+      .filter(Files.isRegularFile(_)).map { f =>
+        p.relativize(f).toString -> Files.readAttributes(f,
+          classOf[java.nio.file.attribute.BasicFileAttributes]).fileKey()
+      }.toMap
+  }
+
   /** Staging or set-aside directories left beside the output. */
   private def leftovers: Seq[String] =
     new java.io.File(base).list().toSeq.filter(_.startsWith(".out.ms."))
@@ -92,14 +102,21 @@ class MsWriterSpec extends SparkSpec {
     rm(out)
     Timechannel.run(spark, SyntheticMs.root, out, args)
     val before = snapshot(out)
+    val beforeKeys = fileKeys(out)
     intercept[IllegalStateException](
       Timechannel.run(spark, SyntheticMs.root, out, args))
     assert(snapshot(out) == before && leftovers.isEmpty)
     Timechannel.run(spark, SyntheticMs.root, out, args.copy(force = true))
     val after = snapshot(out)
-    // a complete new MS (fresh part files) replaced the old one
+    val afterKeys = fileKeys(out)
+    // a complete new MS replaced the old one: fresh main part files, and
+    // every file — the verbatim subtable copies keep their names — is a
+    // new file, not the old one left in place
     assert(after.keySet.map(_.split('/').head) == before.keySet.map(_.split('/').head))
-    assert(after.keySet.intersect(before.keySet).forall(!_.endsWith(".parquet")))
+    assert(after.keySet.intersect(before.keySet)
+      .forall(k => !(k.startsWith("main/") && k.endsWith(".parquet"))))
+    assert(afterKeys.forall { case (k, id) =>
+      id != null && !beforeKeys.get(k).contains(id) })
     assert(spark.read.parquet(s"$out/main").count() > 0 && leftovers.isEmpty)
   }
 
@@ -112,9 +129,23 @@ class MsWriterSpec extends SparkSpec {
     rm(root)
     Files.createDirectories(Paths.get(s"$root/main"))
     val before = os.getOpenFileDescriptorCount
-    (1 to 50).foreach(_ => MsWriter.passthrough(spark, root, s"$base/unused", Nil))
+    (1 to 50).foreach(_ => MsWriter.passthrough(root, s"$base/unused", Nil))
     val grown = os.getOpenFileDescriptorCount - before
     assert(grown < 10, s"$grown descriptors stayed open after 50 passthrough calls")
+  }
+
+  test("passthrough copies every untouched subtable byte for byte") {
+    MsTables.main(spark) // materialize the fixture
+    val dst = s"$base/copied"
+    rm(dst)
+    Files.createDirectories(Paths.get(dst))
+    val tables = MsWriter.passthrough(SyntheticMs.root, dst, Nil)
+    assert(tables.nonEmpty && !tables.contains("main"))
+    tables.foreach { t =>
+      val src = snapshot(s"${SyntheticMs.root}/$t")
+      assert(src.nonEmpty && snapshot(s"$dst/$t") == src, s"$t differs from its input")
+    }
+    assert(!Files.exists(Paths.get(s"$dst/main")))
   }
 
   test("a UVW gate failure throws before anything is staged") {
