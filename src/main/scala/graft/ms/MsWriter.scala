@@ -14,7 +14,7 @@ import scala.util.{Try, Using}
   *    (/root/reference/xova/apps/xova/app.py:152-159).
   *  - S7/S8 main + regenerated-subtable writes (app.py:107-118).
   *  - S9 verbatim passthrough of every untouched subtable
-  *    (/root/reference/xova/apps/xova/subtables.py:9-37) — a recursive
+  *    (reference xova/apps/xova/subtables.py:9-37) — a recursive
   *    filesystem copy of its directory: no Spark job, and the copied
   *    files are byte-identical to the input's.
   *
