@@ -40,12 +40,14 @@ import graft.ms.MsWriter
   * [[TimeAvg.assign]], [[TimeAvg.averaged]]) with per-baseline bin
   * columns in place of constants.
   *
-  * Scale: the per-baseline sizing frame is one aggregate over the fact
-  * table, checkpointed once per run ([[sizing]]) and read by the
-  * channelisations, the exchange width and the broadcast bin join. The
-  * write then shuffles twice — the averaging groupBy and the output
-  * layout's repartition (Timechannel.layout). Driver-side work is
-  * bounded by #SPWs x #channelisations.
+  * Scale: Timechannel's narrow plan pass ([[Chunking.planStats]])
+  * validates and gives t0 and the cell shape; the per-baseline sizing
+  * frame is one aggregate over the fact table, checkpointed once per run
+  * ([[sizing]]) and read by the channelisations, the exchange width and
+  * the broadcast bin join. The write then scans `main` once and
+  * shuffles twice — the averaging groupBy and the output layout's
+  * repartition (Timechannel.layout). Driver-side work is bounded by
+  * #SPWs x #channelisations.
   */
 object Bda {
 
@@ -68,7 +70,7 @@ object Bda {
       // sizing guards the BL_MAX = 0 divide (see binParams).
       includeAutoCorrs: Boolean = false,
       force: Boolean = false,
-      validate: Boolean = true, // A7/W1 plan pass (reference default)
+      validate: Boolean = true, // A7/W1 stats log + monotonicity gate (reference default)
       // keep averaged UVWs (see Timechannel.Args.averageUvw)
       averageUvw: Boolean = false,
       // accumulate-until-full walk with the per-baseline bin width
@@ -181,22 +183,23 @@ object Bda {
 
   /** A4: the ragged averaged main table (pre-remap: still carries the
     * input DATA_DESC_ID plus the transient per-row output channel count
-    * NUM_CHAN, averaging.py:159-164). Sizes its own [[sizing]] frame.
+    * NUM_CHAN, averaging.py:159-164). Runs the plan pass and sizes its
+    * own [[sizing]] frame.
     */
   def averagedMain(main: DataFrame, spw: DataFrame, ddid: DataFrame, args: Args): DataFrame =
-    averagedMain(main, sizing(main, spw, ddid, args), args)
+    averagedMain(main, sizing(main, spw, ddid, args),
+      Chunking.planStats(Flags.select(main, args)), args)
 
-  /** [[averagedMain]] over a run's sizing frame `bp`. Selection, the
-    * cell-shape probe and the grid t0 read `main` directly: after sizing,
-    * the averaging needs only the per-baseline bin columns, not the SPW
-    * metadata. With `bp` checkpointed the plan scans main twice — the
-    * full pass and the t0 aggregate.
+  /** [[averagedMain]] over a run's sizing frame `bp` and plan pass
+    * `plan`. Selection reads `main` directly: after sizing, the averaging
+    * needs only the per-baseline bin columns, not the SPW metadata. With
+    * `bp` checkpointed and t0 a local relation, the plan scans main once.
     */
-  private def averagedMain(main: DataFrame, bp: DataFrame, args: Args): DataFrame = {
-    val sel = Flags.select(main, args)
-    val binned = TimeAvg.assign(joinBinParams(sel, bp), col("TIME_BIN_SECS"),
-      args.runningBins, sel)
-    TimeAvg.averaged(sel, binned, col("CHAN_BIN"), args.dataCols, "bda") { _ =>
+  private def averagedMain(main: DataFrame, bp: DataFrame, plan: Chunking.PlanStats,
+                           args: Args): DataFrame = {
+    val binned = TimeAvg.assign(joinBinParams(Flags.select(main, args), bp),
+      col("TIME_BIN_SECS"), args.runningBins, plan.t0)
+    TimeAvg.averaged(binned, col("CHAN_BIN"), args.dataCols, "bda", plan.cellShape) { _ =>
       // Σ_baselines (span/bin + 1) x nchan/chan_bin, from the k-row frame
       val est = bp.agg(sum((floor(col("T_SPAN") / col("TIME_BIN_SECS")) + 1) *
         (col("NUM_CHAN") / col("CHAN_BIN")).cast("long"))).head()
@@ -273,13 +276,13 @@ object Bda {
       .withColumnRenamed("NEW_DDID", "DATA_DESC_ID")
 
   /** The output main table exactly as [[run]] writes it: averaged over
-    * the run's sizing frame `bp`, DATA_DESC_IDs remapped (J2), UVW per
-    * [[Uvw.fixvis]], laid out.
+    * the run's sizing frame `bp` and plan pass `plan`, DATA_DESC_IDs
+    * remapped (J2), UVW per [[Uvw.fixvis]], laid out.
     */
-  def outputMain(main: DataFrame, bp: DataFrame, inRoot: String, args: Args,
-                 remapDf: DataFrame): DataFrame =
+  def outputMain(main: DataFrame, bp: DataFrame, plan: Chunking.PlanStats,
+                 inRoot: String, args: Args, remapDf: DataFrame): DataFrame =
     Timechannel.layout(Uvw.fixvis(
-      remap(averagedMain(main, bp, args), remapDf), inRoot, args.averageUvw))
+      remap(averagedMain(main, bp, plan, args), remapDf), inRoot, args.averageUvw))
 
   /** Full E2 lifecycle: returns the list of tables written. */
   def run(spark: SparkSession, inRoot: String, outRoot: String, args: Args): Seq[String] = {
@@ -287,8 +290,9 @@ object Bda {
     val main = spark.read.parquet(s"$inRoot/main")
     val spw = spark.read.parquet(s"$inRoot/SPECTRAL_WINDOW")
     val ddid = spark.read.parquet(s"$inRoot/DATA_DESCRIPTION")
-    // E2 step 2 (app.py:74-75): eager plan-stats + monotonicity gate
-    if (args.validate) Chunking.validate(Flags.select(main, args), "bda")
+    // E2 step 2 (app.py:74-75): the eager plan pass + monotonicity gate
+    val plan = Chunking.planStats(Flags.select(main, args))
+    if (args.validate) Chunking.validate(plan, "bda")
 
     // A5 from the sizing frame (channelisationsSized): the distinct
     // channelisation set is determined by the tiny per-baseline sizing
@@ -303,7 +307,7 @@ object Bda {
     val (newSpw, newDdid, remapDf) = regenerate(spark, chanls,
       Timechannel.selectSpwChannels(spw, args.channels))
     MsWriter.writeMs(inRoot, outRoot, args.force,
-      outputMain(main, bp, inRoot, args, remapDf), TimeAvg.GroupCols,
+      outputMain(main, bp, plan, inRoot, args, remapDf), TimeAvg.GroupCols,
       args.rowChunks.toLong * args.groupRowChunks,
       Seq("SPECTRAL_WINDOW" -> newSpw, "DATA_DESCRIPTION" -> newDdid))
   }

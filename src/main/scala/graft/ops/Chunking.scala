@@ -1,77 +1,170 @@
 package graft.ops
 
+import scala.collection.mutable
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 
 /** The reference's eager chunk-planning pass (SURVEY §2.3 A7, §2.5 W1,
   * §2.10 U4), run at the top of both pipeline lifecycles: one
   * column-pruned scan computing the per-MS plan statistics the
-  * reference logs (chunking.py:295-313) and the TIME-monotonicity
-  * invariant it hard-fails on (chunking.py:287-289).
+  * reference logs (chunking.py:295-313), the TIME-monotonicity
+  * invariant it hard-fails on (chunking.py:287-289), and what the
+  * averaging plan needs from the data: the per-group grid origin t0 and
+  * the input cell shape.
   *
   * The reference needs this pass to size dask chunks so no time bin
   * spans two of them; Spark's shuffle routes rows to bins regardless of
-  * layout (SURVEY §4 O4), so here the pass keeps only its validation
-  * and logging roles. Scale shape: projection pushdown means only
-  * (keys, TIME, INTERVAL, UVW) leave the scan; the monotonicity window
-  * shuffles those ~50 bytes/row once, partitioned by the group key
-  * (FIELD_ID, DATA_DESC_ID, SCAN_NUMBER) — one window partition per
-  * group, so the rows of a group are checked in their stored order
-  * across all its baselines.
+  * layout (SURVEY §4 O4), so here the pass keeps its validation,
+  * logging and sizing roles. Like the reference's (chunking.py:13-65,
+  * 217-314) it is NARROW: each split summarizes its rows in plain Scala
+  * — one summary per constant-TIME run of rows of a (group, file) —
+  * and the driver stitches the summaries. No shuffle, window or
+  * aggregate plan: the scan (keys, TIME, INTERVAL, UVW and the FLAG /
+  * WEIGHT sizes) is the pass's only generated code, and the driver holds
+  * about rows / #baselines summaries.
   */
 object Chunking {
 
+  /** (FIELD_ID, DATA_DESC_ID, SCAN_NUMBER), [[TimeAvg.GroupCols]]. */
+  type Group = (Int, Int, Int)
+
+  /** `t0`: per-group min TIME, the grid-binning origin
+    * ([[TimeAvg.assignGrid]]). `cellShape`: (size(FLAG), size(WEIGHT))
+    * of the first row in scan order, i.e. (channels, correlations) —
+    * None for an empty frame or one without those columns.
+    */
   case class PlanStats(
       nRows: Long, nTimes: Long, intervalMean: Double, maxUvw2: Double,
-      monotonicViolations: Long)
+      monotonicViolations: Long, t0: Map[Group, Double],
+      cellShape: Option[(Int, Int)])
 
-  /** One pruned pass over the (already selection-filtered) main table.
+  /** One constant-TIME run of one (group, file)'s rows within a split:
+    * the range [lo, hi] of its row positions, its row count, ΣINTERVAL
+    * and max |uvw|².
+    */
+  private final class Run(val f: Int, val d: Int, val s: Int, val file: String,
+                          val time: Double, var lo: Long) extends Serializable {
+    var hi: Long = lo
+    var n = 0L
+    var intervalSum = 0.0
+    var maxUvw2 = 0.0
+    def group: Group = (f, d, s)
+  }
+
+  /** One split's runs and the shape of its first row. */
+  private final case class Split(runs: Array[Run], shape: Option[(Int, Int)])
+
+  /** One narrow pass over the (already selection-filtered) main table.
     *
     * Monotonicity is a property of the STORED row order (the reference
     * checks `diff(ds.TIME) >= 0` over each partition's column as read,
     * chunking.py:267). For file-backed frames the row position is
     * (`_metadata.file_path`, `_metadata.row_index`) — the exact
     * in-file position, immune to whatever partition layout sits above
-    * the scan (a repartition/AQE shuffle reorders rows, which would
-    * silently turn a `monotonically_increasing_id()` order into a
-    * check of the SHUFFLE order). Non-file frames (in-memory tests)
-    * fall back to `monotonically_increasing_id()`, valid while the
-    * plan above them stays narrow.
+    * the scan. Non-file frames (in-memory tests) fall back to
+    * `monotonically_increasing_id()`'s (split, ordinal) position, valid
+    * while the plan above them stays narrow.
+    *
+    * Per group, the driver orders the runs by position and counts the
+    * decreasing TIME steps between them. Overlapping runs (rows a
+    * shuffle above the scan interleaved) of equal TIME merge; of
+    * different TIMEs they prove a decrease, so the verdict is exact for
+    * any frame, and the count is exact whenever runs do not interleave.
     */
-  def planStats(main: DataFrame): PlanStats = {
+  def planStats(sel: DataFrame): PlanStats = {
     val fileBacked = scala.util.Try(
-      main.select(col("_metadata.file_path"), col("_metadata.row_index"))
+      sel.select(col("_metadata.file_path"), col("_metadata.row_index"))
     ).isSuccess
-    val ord =
-      if (fileBacked)
-        Seq(col("_metadata.file_path").as("_O1"),
-          col("_metadata.row_index").as("_O2"))
-      else Seq(monotonically_increasing_id().as("_O1"), lit(0L).as("_O2"))
-    val w = Window
-      .partitionBy(TimeAvg.GroupCols.map(col): _*)
-      .orderBy("_O1", "_O2")
+    val shaped = Seq("FLAG", "WEIGHT").forall(sel.columns.contains)
     val uvw2 = col("UVW")(0) * col("UVW")(0) + col("UVW")(1) * col("UVW")(1) +
       col("UVW")(2) * col("UVW")(2)
-    val r = main
-      .select(TimeAvg.GroupCols.map(col) ++
-        Seq(col("TIME"), col("INTERVAL"), uvw2.as("_UVW2")) ++ ord: _*)
-      .withColumn("_PREV", lag(col("TIME"), 1).over(w))
-      .agg(
-        count(lit(1)).as("n_rows"),
-        countDistinct(col("TIME")).as("n_times"),
-        avg(col("INTERVAL")).as("interval_mean"),
-        max(col("_UVW2")).as("max_uvw2"),
-        sum(when(col("_PREV").isNotNull && col("TIME") < col("_PREV"), 1L)
-          .otherwise(0L)).as("n_violations"))
-      .collect()(0)
-    PlanStats(r.getLong(0), r.getLong(1), r.getDouble(2), r.getDouble(3),
-      r.getLong(4))
+    val qe = sel.select(
+      TimeAvg.GroupCols.map(col(_).cast("int")) ++
+        Seq(col("TIME"), col("INTERVAL"), uvw2,
+          if (shaped) size(col("FLAG")) else lit(0),
+          if (shaped) size(col("WEIGHT")) else lit(0)) ++
+        (if (fileBacked) Seq(col("_metadata.file_path"), col("_metadata.row_index"))
+         else Nil): _*).queryExecution
+    val splits = SQLExecution.withNewExecutionId(qe, Some("plan pass")) {
+      qe.toRdd.mapPartitionsWithIndex((i, rows) =>
+        Iterator(summarize(i, rows, fileBacked, shaped))).collect()
+    }
+    val runs = splits.flatMap(_.runs)
+    val nRows = runs.map(_.n).sum
+    PlanStats(nRows, runs.map(_.time).distinct.length.toLong,
+      if (nRows == 0) 0.0 else runs.map(_.intervalSum).sum / nRows,
+      runs.map(_.maxUvw2).maxOption.getOrElse(0.0),
+      runs.groupBy(_.group).values.map(violations).sum,
+      runs.groupMapReduce(_.group)(_.time)(math.min),
+      splits.iterator.flatMap(_.shape).nextOption())
+  }
+
+  /** The runs of split `part`, in its row order. Columns: group (0-2),
+    * TIME, INTERVAL, uvw², FLAG and WEIGHT sizes (3-7), then file path
+    * and row index when file-backed.
+    */
+  private def summarize(part: Int, rows: Iterator[InternalRow],
+                        fileBacked: Boolean, shaped: Boolean): Split = {
+    val open = mutable.HashMap.empty[(Int, Int, Int, String), Run]
+    val done = mutable.ArrayBuffer.empty[Run]
+    var shape: Option[(Int, Int)] = None
+    var path: UTF8String = null
+    var file = ""
+    var run: Run = null
+    var i = -1L
+    rows.foreach { r =>
+      i += 1
+      if (shaped && shape.isEmpty) shape = Some((r.getInt(6), r.getInt(7)))
+      if (fileBacked && !r.getUTF8String(8).equals(path)) {
+        path = r.getUTF8String(8).clone()
+        file = path.toString
+      }
+      require(!r.isNullAt(3), "TIME is null: the input MS main table is malformed")
+      val f = r.getInt(0); val d = r.getInt(1); val s = r.getInt(2)
+      val t = r.getDouble(3)
+      val pos = if (fileBacked) r.getLong(9) else (part.toLong << 33) + i
+      // rows of one key are usually consecutive: look up only on a switch
+      if (run == null || run.f != f || run.d != d || run.s != s || run.file != file)
+        run = open.getOrElse((f, d, s, file), null)
+      if (run == null || run.time != t) {
+        if (run != null) done += run
+        run = new Run(f, d, s, file, t, pos)
+        open((f, d, s, file)) = run
+      }
+      run.lo = math.min(run.lo, pos)
+      run.hi = math.max(run.hi, pos)
+      run.n += 1
+      run.intervalSum += r.getDouble(4)
+      run.maxUvw2 = math.max(run.maxUvw2, r.getDouble(5))
+    }
+    Split((done ++ open.values).toArray, shape)
+  }
+
+  /** Decreasing-TIME steps over one group's runs in stored order. */
+  private def violations(runs: Array[Run]): Long = {
+    val sorted = runs.sortBy(r => (r.file, r.lo))
+    var n = 0L
+    var (file, hi, time) = (sorted.head.file, sorted.head.hi, sorted.head.time)
+    sorted.iterator.drop(1).foreach { r =>
+      if (r.file == file && r.lo <= hi) {
+        if (r.time != time) n += 1
+        if (r.hi > hi) { hi = r.hi; time = r.time }
+      } else {
+        if (r.time < time) n += 1
+        file = r.file; hi = r.hi; time = r.time
+      }
+    }
+    n
   }
 
   /** Validate + log, raising exactly where the reference raises. */
-  def validate(main: DataFrame, label: String): PlanStats = {
-    val s = planStats(main)
+  def validate(main: DataFrame, label: String): PlanStats =
+    validate(planStats(main), label)
+
+  def validate(s: PlanStats, label: String): PlanStats = {
     println(f"[xova] $label plan: rows=${s.nRows} times=${s.nTimes} " +
       f"interval_mean=${s.intervalMean}%.3f max_uvw=${math.sqrt(s.maxUvw2)}%.1f")
     require(s.monotonicViolations == 0,

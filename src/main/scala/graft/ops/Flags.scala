@@ -26,7 +26,8 @@ object Flags {
     * filters, channel selection of every (chan, corr) matrix column, then
     * the row flag FROW — P8 first, so a derived row flag reflects the
     * KEPT channels. Plans that read neither FROW nor the matrix columns
-    * (the validate pass) prune both projections away.
+    * prune both projections away; the plan pass (Chunking) reads only
+    * FLAG's and WEIGHT's sizes.
     */
   def select(df: DataFrame, s: Selection): DataFrame = {
     val rows = selectScans(selectFields(

@@ -12,10 +12,12 @@ import org.apache.spark.sql.expressions.Window
   * Spark formulations, both shuffle-once:
   *
   *  - [[assignGrid]]: bin = floor((TIME - t0) / binSecs) where t0 is the
-  *    group's first time. t0 is a tiny per-group aggregate broadcast back
-  *    — no window over the fact table, so at 100 TB the only full shuffle
-  *    is the groupBy of the averaging itself. This matches the kernel
-  *    whenever sampling is regular (the common case).
+  *    group's first time. Both commands take t0 from the plan pass
+  *    ([[Chunking.planStats]]) and broadcast it back as a #groups-row
+  *    local relation — no window over the fact table and no second scan
+  *    of it, so at 100 TB the only full shuffle is the groupBy of the
+  *    averaging itself. This matches the kernel whenever sampling is
+  *    regular (the common case).
   *
   *  - [[assignRunning]]: bin = (cumsum(INTERVAL) - INTERVAL) div binSecs
   *    per (group, baseline) in TIME order — the accumulate-until-full
@@ -30,31 +32,34 @@ import org.apache.spark.sql.expressions.Window
 object TimeAvg {
   val GroupCols = Seq("FIELD_ID", "DATA_DESC_ID", "SCAN_NUMBER")
 
-  /** Grid binning: broadcast-join the per-group min(TIME) back, then a
-    * pure projection. Adds column BIN (int).
+  /** Grid binning with an in-plan t0: broadcast-join the per-group
+    * min(TIME) of `df` back, then a pure projection. Adds column BIN
+    * (int).
     */
   def assignGrid(df: DataFrame, binSecs: Double): DataFrame =
-    assignGrid(df, lit(binSecs), df)
+    gridBins(df, lit(binSecs),
+      df.groupBy(GroupCols.map(col): _*).agg(min("TIME").as("_T0")))
 
   /** Column form: per-row (in practice per-baseline — BDA's
-    * decorrelation-derived widths) bin size, with t0 taken from `t0Of`:
-    * the same rows as `df` before any bin-width join. BDA's widths come
-    * from its checkpointed sizing frame, whose size estimate is the
-    * planner's (huge) estimate of the aggregate behind it; a t0
-    * aggregate reading it attracts runtime bloom-filter subqueries that
-    * rescan the fact table (5 main-table scans instead of 2).
+    * decorrelation-derived widths) bin size, with the per-group `t0` the
+    * plan pass measured. It joins as a local relation, not as literals,
+    * so the generated code is the same for every input.
     */
-  def assignGrid(df: DataFrame, binSecs: Column, t0Of: DataFrame): DataFrame = {
-    val t0 = t0Of.groupBy(GroupCols.map(col): _*).agg(min("TIME").as("_T0"))
+  def assignGrid(df: DataFrame, binSecs: Column,
+                 t0: Map[Chunking.Group, Double]): DataFrame =
+    gridBins(df, binSecs, df.sparkSession.createDataFrame(
+        t0.toSeq.map { case ((f, d, s), t) => (f, d, s, t) })
+      .toDF(GroupCols :+ "_T0": _*))
+
+  private def gridBins(df: DataFrame, binSecs: Column, t0: DataFrame): DataFrame =
     df.join(broadcast(t0), GroupCols)
       .withColumn("BIN", floor((col("TIME") - col("_T0")) / binSecs).cast("int"))
       .drop("_T0")
-  }
 
   /** W2 as both commands choose it: grid or running binning. */
   def assign(df: DataFrame, binSecs: Column, running: Boolean,
-             t0Of: DataFrame): DataFrame =
-    if (running) assignRunning(df, binSecs) else assignGrid(df, binSecs, t0Of)
+             t0: Map[Chunking.Group, Double]): DataFrame =
+    if (running) assignRunning(df, binSecs) else assignGrid(df, binSecs, t0)
 
   /** Accumulate-until-full binning per (group, baseline). */
   def assignRunning(df: DataFrame, binSecs: Double): DataFrame =
@@ -122,9 +127,8 @@ object TimeAvg {
     * kernels, the output projection and FLAG_CATEGORY.
     *
     *  - `binned`: the selected frame with BIN and whatever `chanBin`
-    *    reads; `sel`: the same frame before binning, probed once
-    *    (limit 1) for the input cell shape — probing `binned` would run
-    *    the t0 aggregate or the running-bin window.
+    *    reads; `cellShape`: the plan pass's input (channels,
+    *    correlations), [[Chunking.PlanStats]].
     *  - `outChanRows(nchan)`: the expected Σ output channels over output
     *    rows, given the input channel count; times the correlation count
     *    and [[StateBytesPerCell]] per data column it is the state
@@ -139,14 +143,13 @@ object TimeAvg {
     * omitted) when absent — the reference's try/except optional-column
     * handling (averaging.py:241-248, output 167-173).
     */
-  def averaged(sel: DataFrame, binned: DataFrame, chanBin: Column,
-               dataCols: Seq[(String, String)], tag: String)(
+  def averaged(binned: DataFrame, chanBin: Column,
+               dataCols: Seq[(String, String)], tag: String,
+               cellShape: Option[(Int, Int)])(
       outChanRows: Int => Long): DataFrame = {
-    val est = sel.select(size(col("FLAG")), size(col("WEIGHT"))).limit(1)
-      .collect().headOption
-      .map(r => outChanRows(r.getInt(0)) * r.getInt(1)).getOrElse(0L) *
-      dataCols.size * StateBytesPerCell
-    val width = widthFromEstimate(sel.sparkSession, tag, est)
+    val est = cellShape.map { case (nchan, ncorr) => outChanRows(nchan) * ncorr }
+      .getOrElse(0L) * dataCols.size * StateBytesPerCell
+    val width = widthFromEstimate(binned.sparkSession, tag, est)
 
     val hasWs = binned.columns.contains("WEIGHT_SPECTRUM")
     val hasSs = binned.columns.contains("SIGMA_SPECTRUM")

@@ -19,9 +19,11 @@ import graft.ms.MsWriter
   * [[Flags.select]], bin through [[TimeAvg.assign]] and average through
   * [[TimeAvg.averaged]].
   *
-  * Scale notes: two wide shuffles — the bin-key groupBy (map-side
-  * partial aggregation via the kernels' merge) and the output
-  * [[layout]]'s repartition by group. The t0-per-group frame, the UVW
+  * Scale notes: one narrow plan pass ([[Chunking.planStats]]: no
+  * shuffle) sizes and validates the run, then the write scans `main`
+  * once and shuffles twice — the bin-key groupBy (map-side partial
+  * aggregation via the kernels' merge) and the output [[layout]]'s
+  * repartition by group. The t0-per-group relation, the UVW
   * position/phase-centre lookups and the SPW rewrite are tiny
   * broadcast/driver-side work. Output partition hygiene (the
   * reference's A3′ row_concatenate, averaging.py:39-77) falls out of AQE
@@ -39,7 +41,7 @@ object Timechannel {
       respectFlagRow: Boolean = false,
       includeAutoCorrs: Boolean = false,
       force: Boolean = false,
-      validate: Boolean = true, // A7/W1 plan pass (reference default)
+      validate: Boolean = true, // A7/W1 stats log + monotonicity gate (reference default)
       // --average-uvw-coordinates (arguments.py:115-120), see Uvw.fixvis
       averageUvw: Boolean = false,
       // W2 variant: grid binning (broadcast t0, zero fact-table window)
@@ -57,19 +59,23 @@ object Timechannel {
 
   /** The averaged main table as a DataFrame (no IO): BDA with constant
     * bins — TIME_BIN_SECS = timeBinSecs and CHAN_BIN = chanBinSize for
-    * every baseline. `nRows`: the selected-row count if known
-    * (Chunking's plan stats count the same rows — channel selection and
-    * FROW drop none), else counted here for the exchange-width estimate
-    * (output rows <= input rows: each row lands in exactly one bin).
+    * every baseline. Runs the plan pass over the selected rows.
     */
-  def averagedMain(main: DataFrame, args: Args,
-                   nRows: Option[Long] = None): DataFrame = {
-    val sel = Flags.select(main, args)
+  def averagedMain(main: DataFrame, args: Args): DataFrame =
+    averagedMain(main, args, Chunking.planStats(Flags.select(main, args)))
+
+  /** [[averagedMain]] given the plan pass `plan` over the selected rows:
+    * its per-group t0 anchors the grid, and its row count and cell shape
+    * size the exchange (output rows <= input rows: each row lands in
+    * exactly one bin).
+    */
+  def averagedMain(main: DataFrame, args: Args, plan: Chunking.PlanStats): DataFrame = {
     val k = args.chanBinSize
-    TimeAvg.averaged(sel,
-      TimeAvg.assign(sel, lit(args.timeBinSecs), args.runningBins, sel), lit(k),
-      args.dataCols, "timechannel") { nchan =>
-      nRows.getOrElse(sel.count()) * ((nchan + k - 1) / k)
+    TimeAvg.averaged(
+      TimeAvg.assign(Flags.select(main, args), lit(args.timeBinSecs),
+        args.runningBins, plan.t0),
+      lit(k), args.dataCols, "timechannel", plan.cellShape) { nchan =>
+      plan.nRows * ((nchan + k - 1) / k)
     }
   }
 
@@ -116,27 +122,28 @@ object Timechannel {
       .sortWithinPartitions((TimeAvg.GroupCols ++
         Seq("TIME", "ANTENNA1", "ANTENNA2")).map(col): _*)
 
-  /** The output main table exactly as [[run]] writes it: averaged, UVW
-    * per [[Uvw.fixvis]], laid out. Runs only the sizing and UVW-gate jobs.
+  /** The output main table exactly as [[run]] writes it: averaged over
+    * the plan pass `plan`, UVW per [[Uvw.fixvis]], laid out. Runs only
+    * the UVW-gate jobs.
     */
   def outputMain(main: DataFrame, inRoot: String, args: Args,
-                 nRows: Option[Long] = None): DataFrame =
-    layout(Uvw.fixvis(averagedMain(main, args, nRows), inRoot, args.averageUvw))
+                 plan: Chunking.PlanStats): DataFrame =
+    layout(Uvw.fixvis(averagedMain(main, args, plan), inRoot, args.averageUvw))
 
   /** Full E1 lifecycle: returns the list of tables written. */
   def run(spark: SparkSession, inRoot: String, outRoot: String, args: Args): Seq[String] = {
     MsWriter.guard(outRoot, args.force)
     val main = spark.read.parquet(s"$inRoot/main")
-    // E1 step 2 (app.py:74-75): eager plan-stats pass over the SELECTED
-    // rows — logs A7 stats, hard-fails on non-monotonic TIME (W1)
-    val stats =
-      if (args.validate) Some(Chunking.validate(Flags.select(main, args), "timechannel"))
-      else None
+    // E1 step 2 (app.py:74-75): the eager plan pass over the SELECTED
+    // rows; with validation on it logs the A7 stats and hard-fails on
+    // non-monotonic TIME (W1)
+    val plan = Chunking.planStats(Flags.select(main, args))
+    if (args.validate) Chunking.validate(plan, "timechannel")
     val spw = averagedSpw(selectSpwChannels(
       spark.read.parquet(s"$inRoot/SPECTRAL_WINDOW"), args.channels),
       args.chanBinSize)
     MsWriter.writeMs(inRoot, outRoot, args.force,
-      outputMain(main, inRoot, args, stats.map(_.nRows)), TimeAvg.GroupCols,
+      outputMain(main, inRoot, args, plan), TimeAvg.GroupCols,
       args.rowChunks.toLong * args.groupRowChunks,
       Seq("SPECTRAL_WINDOW" -> spw))
   }

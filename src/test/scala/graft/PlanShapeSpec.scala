@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 import graft.ms.MsTables
-import graft.ops.{Bda, Timechannel}
+import graft.ops.{Bda, Chunking, Flags, Timechannel}
 import graft.pipeline.{Ann, Dedup}
 
 /** Physical-plan regression guards for the scale properties DESIGN.md
@@ -34,25 +34,35 @@ class PlanShapeSpec extends SparkSpec {
   private lazy val embs =
     spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
 
-  test("timechannel averaging: 2 main-table scans, no global funnel") {
-    val p = plan(Timechannel.averagedMain(MsTables.main(spark),
-      Timechannel.Args(timeBinSecs = 60000.0, chanBinSize = 4,
-        dataCols = Seq("DATA" -> "DATA"))))
-    assert(mainScans(p) == 2, s"expected full pass + t0 pass, got:\n$p")
+  private val tcArgs = Timechannel.Args(timeBinSecs = 60000.0, chanBinSize = 4,
+    dataCols = Seq("DATA" -> "DATA"))
+
+  test("timechannel averaging: 1 main-table scan, no global funnel") {
+    // the plan pass ran at construction; its t0 joins as a local relation
+    val p = plan(Timechannel.averagedMain(MsTables.main(spark), tcArgs))
+    assert(mainScans(p) == 1, s"expected the averaging pass only, got:\n$p")
     assertNoGlobalSort(p, "timechannel")
   }
 
-  test("BDA averaging: 2 main-table scans, no global funnel") {
-    // r12: the sizing frame (bp) is materialized once — its fact-table
+  test("BDA averaging: 1 main-table scan, no global funnel") {
+    // the sizing frame (bp) is materialized once — its fact-table
     // groupBy executes at construction and the returned plan references
-    // the checkpointed k-row RDD, so only the full pass + t0 scans
-    // remain (was 3 when the broadcast side re-planned the sizing scan,
-    // which — together with avgExchangeWidth's eager .head() — executed
-    // the corpus aggregation twice per run).
+    // the checkpointed k-row RDD; t0 comes from the plan pass
     val p = plan(Bda.averagedMain(MsTables.main(spark), MsTables.spw(spark),
       MsTables.ddid(spark), Bda.Args()))
-    assert(mainScans(p) == 2, s"expected full + t0 passes, got:\n$p")
+    assert(mainScans(p) == 1, s"expected the averaging pass only, got:\n$p")
     assertNoGlobalSort(p, "bda")
+  }
+
+  test("the plan pass is one narrow scan: no Exchange, no aggregate, no window") {
+    val sel = Flags.select(MsTables.main(spark), tcArgs)
+    val (_, probe) = JobProbe(spark)(Chunking.planStats(sel))
+    val passes = probe.plans.collect { case ("plan pass", p) => p }
+    val p = passes.mkString("\n")
+    assert(passes.size == 1, s"expected one plan-pass execution, got:\n$p")
+    assert(!p.contains("Exchange") && !p.contains("Aggregate") && !p.contains("Window"),
+      s"the plan pass is not narrow:\n$p")
+    assert(mainScans(p) == 1, s"expected one main-table scan:\n$p")
   }
 
   /** The BDA output main table exactly as Bda.run writes it. */
@@ -64,7 +74,19 @@ class PlanShapeSpec extends SparkSpec {
     val chanls = Bda.channelisationsSized(bp, ddid).collect()
       .map(r => (r.getInt(0), r.getInt(1), r.getInt(2), r.getInt(3))).toSeq
     val (_, _, remapDf) = Bda.regenerate(spark, chanls, spw)
-    Bda.outputMain(main, bp, graft.ms.SyntheticMs.root, args, remapDf)
+    Bda.outputMain(main, bp, Chunking.planStats(Flags.select(main, args)),
+      graft.ms.SyntheticMs.root, args, remapDf)
+  }
+
+  test("BDA write plan: 1 main-table scan, no runtime bloom-filter subquery") {
+    // the checkpointed sizing frame keeps the planner's (huge) size
+    // estimate of the aggregate behind it; nothing in the write plan may
+    // aggregate over a join with it, which would attract bloom-filter
+    // subqueries that rescan main
+    val p = plan(bdaWritePlan())
+    assert(mainScans(p) == 1, s"expected one main-table scan:\n$p")
+    assert(!p.contains("bloom_filter") && !p.contains("might_contain"),
+      s"the BDA write plan carries a runtime bloom filter:\n$p")
   }
 
   test("BDA channelisations read the checkpointed sizing frame: 0 main-table scans") {
@@ -118,9 +140,9 @@ class PlanShapeSpec extends SparkSpec {
   }
 
   test("fused write plans: one averaging shuffle, UVW lookups broadcast, no SMJ/UDF/global sort") {
-    val tc = Timechannel.outputMain(MsTables.main(spark), graft.ms.SyntheticMs.root,
-      Timechannel.Args(timeBinSecs = 60000.0, chanBinSize = 4,
-        dataCols = Seq("DATA" -> "DATA")))
+    val main = MsTables.main(spark)
+    val tc = Timechannel.outputMain(main, graft.ms.SyntheticMs.root, tcArgs,
+      Chunking.planStats(Flags.select(main, tcArgs)))
     assertOneAveragingShuffle(plan(tc))
     assertFusedUvwLookups(tc, "timechannel write")
     assertFusedUvwLookups(bdaWritePlan(), "bda write")

@@ -56,6 +56,86 @@ class ChunkingSpec extends SparkSpec {
     assert(e.getMessage.contains("monotonicity"))
   }
 
+  private val cols = Seq("FIELD_ID", "DATA_DESC_ID", "SCAN_NUMBER",
+    "ANTENNA1", "ANTENNA2", "TIME", "INTERVAL", "UVW")
+
+  /** One (0, 0, 0) baseline row per time, in the order given, as
+    * `splits` input splits (consecutive slices).
+    */
+  private def rowsAt(times: Seq[Double], splits: Int) =
+    spark.sparkContext.parallelize(
+      times.map(t => (0, 0, 0, 1, 2, t, 1.0, Seq(1.0, 0.0, 0.0))), splits)
+      .toDF(cols: _*)
+
+  private def written(name: String, df: org.apache.spark.sql.DataFrame) = {
+    val dir = s"/tmp/graft_test/$name"
+    df.write.mode("overwrite").parquet(dir)
+    spark.read.parquet(dir)
+  }
+
+  test("a group spanning two files is checked across the file boundary") {
+    // two write tasks, two files: part-00000 holds the first slice
+    val inOrder = written("chunking_two_files", rowsAt((0 until 8).map(_.toDouble), 2))
+    assert(inOrder.inputFiles.length == 2)
+    val st = Chunking.planStats(inOrder)
+    assert(st.monotonicViolations == 0)
+    assert(st.nRows == 8 && st.nTimes == 8)
+    assert(st.t0 == Map((0, 0, 0) -> 0.0))
+    // the later times in the first file: one decrease, at the boundary
+    val swapped = written("chunking_two_files_swapped",
+      rowsAt((4 until 8).map(_.toDouble) ++ (0 until 4).map(_.toDouble), 2))
+    assert(Chunking.planStats(swapped).monotonicViolations == 1)
+    assert(Chunking.planStats(swapped.repartition(3)).monotonicViolations == 1,
+      "non-interleaving runs give the exact count under a shuffle")
+  }
+
+  test("interleaved runs of different TIMEs above a shuffle are rejected") {
+    // times 1, 2, 1, 2, ... in one file: a round-robin shuffle deals the
+    // rows to two splits, whose runs then overlap in file position
+    val bad = written("chunking_interleaved",
+      rowsAt((0 until 8).map(i => 1.0 + i % 2), 1)).repartition(2)
+    assert(Chunking.planStats(bad).monotonicViolations > 0)
+    val e = intercept[IllegalArgumentException] {
+      Chunking.validate(bad, "spec")
+    }
+    assert(e.getMessage.contains("monotonicity"))
+  }
+
+  test("t0 is min(TIME) per group, also above a shuffle") {
+    import org.apache.spark.sql.functions._
+    val main = Flags.filterAutocorr(MsTables.main(spark))
+    val expected = main.groupBy(TimeAvg.GroupCols.map(col): _*).agg(min("TIME"))
+      .collect().map(r => (r.getInt(0), r.getInt(1), r.getInt(2)) -> r.getDouble(3)).toMap
+    assert(expected.size > 1)
+    assert(Chunking.planStats(main).t0 == expected)
+    assert(Chunking.planStats(main.repartition(3)).t0 == expected)
+  }
+
+  test("the cell shape is the first scanned row's (FLAG, WEIGHT) sizes") {
+    import org.apache.spark.sql.functions._
+    for (channels <- Seq(Nil, Seq(0, 2, 3))) {
+      val sel = Flags.select(MsTables.main(spark),
+        Timechannel.Args(dataCols = Seq("DATA" -> "DATA"), channels = channels))
+      val first = sel.select(size(col("FLAG")), size(col("WEIGHT"))).limit(1)
+        .collect().map(r => (r.getInt(0), r.getInt(1))).headOption
+      assert(first.isDefined)
+      assert(Chunking.planStats(sel).cellShape == first, s"channels $channels")
+    }
+    assert(Chunking.planStats(rowsAt(Seq(1.0), 1)).cellShape.isEmpty,
+      "a frame without FLAG/WEIGHT has no cell shape")
+  }
+
+  test("in-memory frames fall back to (split, ordinal) row positions") {
+    val times = (0 until 8).map(_.toDouble)
+    val st = Chunking.planStats(rowsAt(times, 2))
+    assert(st.monotonicViolations == 0 && st.nRows == 8 && st.nTimes == 8)
+    assert(st.intervalMean == 1.0 && st.maxUvw2 == 1.0)
+    assert(st.t0 == Map((0, 0, 0) -> 0.0))
+    // the second split's times precede the first's: one decrease
+    assert(Chunking.planStats(rowsAt(times.drop(4) ++ times.take(4), 2))
+      .monotonicViolations == 1)
+  }
+
   test("fixture MS: FLAG/WEIGHT_SPECTRUM/SIGMA_SPECTRUM congruent with DATA") {
     // ADVICE r18 #1: the visCells arrays_zip kernel silently drops a
     // row if FLAG/WEIGHT_SPECTRUM is null and pads if one is longer
