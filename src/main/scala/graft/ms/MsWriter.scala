@@ -24,7 +24,7 @@ import scala.util.{Try, Using}
   * forced overwrite keeps the old output until the new one is complete.
   * The guard, staging, commit and cleanup use `java.nio.file` on local
   * paths, so the output MS must live on a local filesystem; moving them
-  * to Hadoop `FileSystem` is ROADMAP item 3(b).
+  * to Hadoop `FileSystem` is ROADMAP item 3(c).
   */
 object MsWriter {
 

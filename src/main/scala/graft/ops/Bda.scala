@@ -37,16 +37,17 @@ import graft.ms.MsWriter
   * arguments.py:142-146), floored by min_nchan.
   *
   * Selection, binning and averaging are Timechannel's ([[Flags.select]],
-  * [[TimeAvg.assign]], [[TimeAvg.averaged]]) with per-baseline bin
-  * columns in place of constants.
+  * [[TimeAvg.averaged]]) with per-baseline bin columns in place of
+  * constants.
   *
   * Scale: Timechannel's narrow plan pass ([[Chunking.planStats]])
   * validates and gives t0 and the cell shape; the per-baseline sizing
   * frame is one aggregate over the fact table, checkpointed once per run
   * ([[sizing]]) and read by the channelisations, the exchange width and
   * the broadcast bin join. The write then scans `main` once and
-  * shuffles twice — the averaging groupBy and the output layout's
-  * repartition (Timechannel.layout). Driver-side work is bounded by
+  * shuffles once: the averaging aggregate's partials, routed by group
+  * (TimeAvg.averaged), so the remap, fixvis and output layout run
+  * in place (Timechannel.layout). Driver-side work is bounded by
   * #SPWs x #channelisations.
   */
 object Bda {
@@ -197,9 +198,8 @@ object Bda {
     */
   private def averagedMain(main: DataFrame, bp: DataFrame, plan: Chunking.PlanStats,
                            args: Args): DataFrame = {
-    val binned = TimeAvg.assign(joinBinParams(Flags.select(main, args), bp),
-      col("TIME_BIN_SECS"), args.runningBins, plan.t0)
-    TimeAvg.averaged(binned, col("CHAN_BIN"), args.dataCols, "bda", plan.cellShape) { _ =>
+    TimeAvg.averaged(joinBinParams(Flags.select(main, args), bp), col("TIME_BIN_SECS"),
+        args.runningBins, col("CHAN_BIN"), args.dataCols, "bda", plan) { _ =>
       // Σ_baselines (span/bin + 1) x nchan/chan_bin, from the k-row frame
       val est = bp.agg(sum((floor(col("T_SPAN") / col("TIME_BIN_SECS")) + 1) *
         (col("NUM_CHAN") / col("CHAN_BIN")).cast("long"))).head()

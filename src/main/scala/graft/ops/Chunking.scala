@@ -32,7 +32,7 @@ object Chunking {
   type Group = (Int, Int, Int)
 
   /** `t0`: per-group min TIME, the grid-binning origin
-    * ([[TimeAvg.assignGrid]]). `cellShape`: (size(FLAG), size(WEIGHT))
+    * ([[TimeAvg.averaged]]). `cellShape`: (size(FLAG), size(WEIGHT))
     * of the first row in scan order, i.e. (channels, correlations) —
     * None for an empty frame or one without those columns.
     */

@@ -14,10 +14,10 @@ import org.apache.spark.sql.expressions.Window
   *  - [[assignGrid]]: bin = floor((TIME - t0) / binSecs) where t0 is the
   *    group's first time. Both commands take t0 from the plan pass
   *    ([[Chunking.planStats]]) and broadcast it back as a #groups-row
-  *    local relation — no window over the fact table and no second scan
-  *    of it, so at 100 TB the only full shuffle is the groupBy of the
-  *    averaging itself. This matches the kernel whenever sampling is
-  *    regular (the common case).
+  *    local relation ([[averaged]]) — no window over the fact table and
+  *    no second scan of it, so at 100 TB the only full shuffle is the
+  *    exchange of the averaging itself. This matches the kernel whenever
+  *    sampling is regular (the common case).
   *
   *  - [[assignRunning]]: bin = (cumsum(INTERVAL) - INTERVAL) div binSecs
   *    per (group, baseline) in TIME order — the accumulate-until-full
@@ -40,26 +40,10 @@ object TimeAvg {
     gridBins(df, lit(binSecs),
       df.groupBy(GroupCols.map(col): _*).agg(min("TIME").as("_T0")))
 
-  /** Column form: per-row (in practice per-baseline — BDA's
-    * decorrelation-derived widths) bin size, with the per-group `t0` the
-    * plan pass measured. It joins as a local relation, not as literals,
-    * so the generated code is the same for every input.
-    */
-  def assignGrid(df: DataFrame, binSecs: Column,
-                 t0: Map[Chunking.Group, Double]): DataFrame =
-    gridBins(df, binSecs, df.sparkSession.createDataFrame(
-        t0.toSeq.map { case ((f, d, s), t) => (f, d, s, t) })
-      .toDF(GroupCols :+ "_T0": _*))
-
   private def gridBins(df: DataFrame, binSecs: Column, t0: DataFrame): DataFrame =
     df.join(broadcast(t0), GroupCols)
       .withColumn("BIN", floor((col("TIME") - col("_T0")) / binSecs).cast("int"))
       .drop("_T0")
-
-  /** W2 as both commands choose it: grid or running binning. */
-  def assign(df: DataFrame, binSecs: Column, running: Boolean,
-             t0: Map[Chunking.Group, Double]): DataFrame =
-    if (running) assignRunning(df, binSecs) else assignGrid(df, binSecs, t0)
 
   /** Accumulate-until-full binning per (group, baseline). */
   def assignRunning(df: DataFrame, binSecs: Double): DataFrame =
@@ -97,45 +81,49 @@ object TimeAvg {
     */
   val TargetStateBytesPerPartition: Long = 64L << 20
 
-  /** Derived exchange width for the averaging shuffle (the 100× scale
-    * boundary, DESIGN.md "100× point"): per-partition
-    * ObjectHashAggregate state must stay bounded as data grows, so the
-    * partition count is COMPUTED from the estimated state instead of
-    * inherited from the session pin (which sizes partitions to cores,
-    * correct at bench SF and wrong at 100×). Returns None when the
-    * session default already bounds state: the bench-scale plan (and
-    * its map-side partial aggregation) stays untouched, and the
-    * repartition only appears at scales where per-group state dominates
-    * and map-side combine is ~1 row/group anyway.
+  /** Width of the averaging exchange (the 100× scale boundary,
+    * DESIGN.md "100× point"): per-partition ObjectHashAggregate state
+    * must stay bounded as data grows, so the partition count is
+    * COMPUTED from the estimated state, and the session's partition
+    * count (sized to cores) is its floor.
     */
-  def widthFromEstimate(s: SparkSession, tag: String, est: Long): Option[Int] = {
+  def exchangeWidth(s: SparkSession, tag: String, est: Long): Int = {
     val sessionParts = s.conf.get("spark.sql.shuffle.partitions").toInt
     val target = s.conf
       .getOption("spark.graft.avg.statePartitionBytes")
       .map(_.toLong).getOrElse(TargetStateBytesPerPartition)
     val derived = math.ceil(est.toDouble / target).toInt
-    val chosen = if (derived > sessionParts) Some(derived) else None
+    val width = math.max(derived, sessionParts)
     println(s"[xova] $tag averaging-exchange sizing: est_state=${est >> 20} MB " +
-      s"target/part=${target >> 20} MB derived=$derived " +
-      s"session=$sessionParts -> ${chosen.getOrElse(s"session ($sessionParts)")}")
-    chosen
+      s"target/part=${target >> 20} MB derived=$derived session=$sessionParts " +
+      s"-> $width partitions, routed by group")
+    width
   }
 
-  /** A1/A2 + P5–P7, the averaging core of both commands (the
+  /** W2 + A1/A2 + P5–P7, the averaging core of both commands (the
     * reference's output_dataset, xova/apps/xova/averaging.py:97-181):
-    * one aggregate over [[BinKey]] running the RowAvgAgg and VisAvgAgg
-    * kernels, the output projection and FLAG_CATEGORY.
+    * grid or running time bins, one aggregate over [[BinKey]] running
+    * the RowAvgAgg and VisAvgAgg kernels, the output projection and
+    * FLAG_CATEGORY.
     *
-    *  - `binned`: the selected frame with BIN and whatever `chanBin`
-    *    reads; `cellShape`: the plan pass's input (channels,
-    *    correlations), [[Chunking.PlanStats]].
+    *  - `selected`: the selected frame with whatever `binSecs` and
+    *    `chanBin` read; `plan`: the plan pass over it
+    *    ([[Chunking.PlanStats]]), whose per-group t0 and input cell shape
+    *    (channels, correlations) this reads.
     *  - `outChanRows(nchan)`: the expected Σ output channels over output
     *    rows, given the input channel count; times the correlation count
     *    and [[StateBytesPerCell]] per data column it is the state
-    *    estimate behind [[widthFromEstimate]]. When the derived width
-    *    exceeds the session's, the frame is pre-hash-partitioned on the
-    *    FULL bin key: the aggregate's distribution requirement is then
-    *    already met, so that exchange IS the averaging shuffle.
+    *    estimate behind [[exchangeWidth]].
+    *
+    * The call moves its rows once. One #groups-row local relation, not
+    * literals (so the generated code is the same for every input), joins
+    * each row to its group's t0 and `_PID`: the group's dense index in
+    * the plan pass modulo the exchange width. The grouping key includes
+    * `_PID`. Map-side partials form per input split, and the one
+    * exchange routes them by `_PID` (GraftSqlBridge.routeFinalAggregate),
+    * so a bin's merge and eval run on its group's task and every group's
+    * output rows sit in one partition, ready for [[Timechannel.layout]]'s
+    * in-partition sort.
     *
     * WEIGHT_SPECTRUM / SIGMA_SPECTRUM are optional MS columns: WS is the
     * averaging weight and both spectra are averaged through when
@@ -143,13 +131,21 @@ object TimeAvg {
     * omitted) when absent — the reference's try/except optional-column
     * handling (averaging.py:241-248, output 167-173).
     */
-  def averaged(binned: DataFrame, chanBin: Column,
-               dataCols: Seq[(String, String)], tag: String,
-               cellShape: Option[(Int, Int)])(
+  def averaged(selected: DataFrame, binSecs: Column, running: Boolean,
+               chanBin: Column, dataCols: Seq[(String, String)], tag: String,
+               plan: Chunking.PlanStats)(
       outChanRows: Int => Long): DataFrame = {
-    val est = cellShape.map { case (nchan, ncorr) => outChanRows(nchan) * ncorr }
+    val est = plan.cellShape.map { case (nchan, ncorr) => outChanRows(nchan) * ncorr }
       .getOrElse(0L) * dataCols.size * StateBytesPerCell
-    val width = widthFromEstimate(binned.sparkSession, tag, est)
+    val width = exchangeWidth(selected.sparkSession, tag, est)
+    val groups = selected.sparkSession.createDataFrame(
+        plan.t0.toSeq.sortBy(_._1).zipWithIndex.map {
+          case (((f, d, s), t0), i) => (f, d, s, t0, i % width)
+        })
+      .toDF(GroupCols ++ Seq("_T0", "_PID"): _*)
+    val binned =
+      if (running) assignRunning(selected.join(broadcast(groups.drop("_T0")), GroupCols), binSecs)
+      else gridBins(selected, binSecs, groups)
 
     val hasWs = binned.columns.contains("WEIGHT_SPECTRUM")
     val hasSs = binned.columns.contains("SIGMA_SPECTRUM")
@@ -168,10 +164,10 @@ object TimeAvg {
         if (hasSs) col("SIGMA_SPECTRUM") else absent,
         col("WEIGHT"), chanBin).as(s"_V_$to")
     }
-    val agged =
-      width.fold(binned)(n => binned.repartition(n, BinKey.map(col): _*))
-        .groupBy(BinKey.map(col): _*)
-        .agg(rowAgg, visAggs: _*)
+    val agged = org.apache.spark.sql.GraftSqlBridge.routeFinalAggregate(
+      binned.groupBy((BinKey :+ "_PID").map(col): _*)
+        .agg(rowAgg, visAggs: _*),
+      "_PID", width)
 
     // Output FLAG (and spectra) come from the first data column's
     // aggregator: they are weight/flag-derived, the same for every data

@@ -16,18 +16,17 @@ import graft.ms.MsWriter
   * output assembly averaging.py:97-181; SPW rewrite averaging.py:357-406.
   *
   * Timechannel is BDA with constant bins: both commands select through
-  * [[Flags.select]], bin through [[TimeAvg.assign]] and average through
-  * [[TimeAvg.averaged]].
+  * [[Flags.select]], then bin and average through [[TimeAvg.averaged]].
   *
   * Scale notes: one narrow plan pass ([[Chunking.planStats]]: no
   * shuffle) sizes and validates the run, then the write scans `main`
-  * once and shuffles twice — the bin-key groupBy (map-side partial
-  * aggregation via the kernels' merge) and the output [[layout]]'s
-  * repartition by group. The t0-per-group relation, the UVW
+  * once and shuffles once: the bin-key aggregate's map-side partials
+  * (the kernels' merge) are routed by output group, so each bin merges
+  * on its group's task. The t0 and group-index relations, the UVW
   * position/phase-centre lookups and the SPW rewrite are tiny
   * broadcast/driver-side work. Output partition hygiene (the
-  * reference's A3′ row_concatenate, averaging.py:39-77) falls out of AQE
-  * coalescing + that repartition before the write.
+  * reference's A3′ row_concatenate, averaging.py:39-77) falls out of
+  * that routing: the output [[layout]] only sorts within partitions.
   */
 object Timechannel {
 
@@ -71,10 +70,8 @@ object Timechannel {
     */
   def averagedMain(main: DataFrame, args: Args, plan: Chunking.PlanStats): DataFrame = {
     val k = args.chanBinSize
-    TimeAvg.averaged(
-      TimeAvg.assign(Flags.select(main, args), lit(args.timeBinSecs),
-        args.runningBins, plan.t0),
-      lit(k), args.dataCols, "timechannel", plan.cellShape) { nchan =>
+    TimeAvg.averaged(Flags.select(main, args), lit(args.timeBinSecs), args.runningBins,
+      lit(k), args.dataCols, "timechannel", plan) { nchan =>
       plan.nRows * ((nchan + k - 1) / k)
     }
   }
@@ -113,14 +110,15 @@ object Timechannel {
           .filter(spw.columns.contains))
       .withColumn("NUM_CHAN", size(col("CHAN_FREQ")))
 
-  /** Output layout of `main` (A3′ output-size hygiene): sorted with the
-    * partition columns as prefix, so the partitioned writer reuses the
-    * sort and TIME order survives within each file.
+  /** Output layout of `main` (A3′ output-size hygiene). The averaging
+    * exchange already put each group's rows in one partition
+    * ([[TimeAvg.averaged]]), so an in-partition sort with the partition
+    * columns as prefix is all that is left: the partitioned writer reuses
+    * it, writes one file per group and keeps TIME order within it.
     */
   private[ops] def layout(out: DataFrame): DataFrame =
-    out.repartition(TimeAvg.GroupCols.map(col): _*)
-      .sortWithinPartitions((TimeAvg.GroupCols ++
-        Seq("TIME", "ANTENNA1", "ANTENNA2")).map(col): _*)
+    out.sortWithinPartitions((TimeAvg.GroupCols ++
+      Seq("TIME", "ANTENNA1", "ANTENNA2")).map(col): _*)
 
   /** The output main table exactly as [[run]] writes it: averaged over
     * the plan pass `plan`, UVW per [[Uvw.fixvis]], laid out. Runs only

@@ -2,12 +2,13 @@ package graft
 
 import scala.collection.mutable
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{GraftSqlBridge, SparkSession}
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.util.QueryExecutionListener
 
 /** What one piece of driver code cost Spark: jobs started, shuffle bytes
-  * written, and the executed plan of every named SQL execution.
+  * written, and the executed plan of every named SQL execution (with
+  * the routed sub-plans it reads, [[JobProbe.planText]]).
   */
 final class JobProbe extends SparkListener with QueryExecutionListener {
   var jobs = 0
@@ -21,12 +22,18 @@ final class JobProbe extends SparkListener with QueryExecutionListener {
   }
 
   override def onSuccess(name: String, qe: QueryExecution, ns: Long): Unit =
-    synchronized { plans += name -> qe.executedPlan.toString() }
+    synchronized { plans += name -> JobProbe.planText(qe) }
 
   override def onFailure(name: String, qe: QueryExecution, e: Exception): Unit = ()
 }
 
 object JobProbe {
+  /** The executed plan of `qe` followed by every prepared plan it reads
+    * through GraftSqlBridge.routeFinalAggregate: the plan that runs.
+    */
+  def planText(qe: QueryExecution): String =
+    (qe.executedPlan +: GraftSqlBridge.routedPlans(qe.analyzed)).mkString("\n")
+
   /** Runs `body` with a fresh probe attached; returns its result and the
     * probe, read after the listener bus drained.
     */

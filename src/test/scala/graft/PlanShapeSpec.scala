@@ -13,8 +13,7 @@ import graft.pipeline.{Ann, Dedup}
   */
 class PlanShapeSpec extends SparkSpec {
 
-  private def plan(df: DataFrame): String =
-    df.queryExecution.executedPlan.toString()
+  private def plan(df: DataFrame): String = JobProbe.planText(df.queryExecution)
 
   private def mainScans(p: String): Int = p.linesIterator
     .count(l => l.contains("FileScan") && l.contains("fixtures/ms/main"))
@@ -103,12 +102,17 @@ class PlanShapeSpec extends SparkSpec {
   /** One averaging shuffle: with no cross-action persist, the proof that
     * it runs ONCE is exactly two graft_vis_avg ObjectHashAggregate
     * nodes (partial + final; the sizing pre-pass reads the pruned
-    * sizing frame, never the averaged table).
+    * sizing frame, never the averaged table). It is the write path's
+    * only Exchange apart from broadcasts, and it routes by the group
+    * index `_PID`, so the output layout needs no exchange of its own.
     */
   private def assertOneAveragingShuffle(p: String): Unit = {
     val aggs = p.linesIterator.count(l =>
       l.contains("ObjectHashAggregate") && l.contains("graft_vis_avg"))
     assert(aggs == 2, s"expected 2 graft_vis_avg aggregate nodes, got $aggs:\n$p")
+    val exchanges = p.linesIterator.filter(l => "\\bExchange\\b".r.findFirstIn(l).isDefined).toList
+    assert(exchanges.size == 1 && exchanges.head.contains("direct_shuffle_partition_id(_PID"),
+      s"expected one Exchange, routed by _PID, got ${exchanges.size}:\n$p")
   }
 
   /** The fused fixvis adds only broadcast lookups to the write plan:
@@ -123,10 +127,12 @@ class PlanShapeSpec extends SparkSpec {
         s"$what: the $k UVW lookup is not a broadcast join:\n$p")
     }
     assert(!p.contains("SortMergeJoin"), s"$what plans a sort-merge join:\n$p")
+    def udfsIn(e: org.apache.spark.sql.catalyst.expressions.Expression) = e.collect {
+      case u: org.apache.spark.sql.catalyst.expressions.ScalaUDF => u }
     val udfs = df.queryExecution.optimizedPlan.collect { case n =>
-      n.expressions.flatMap(_.collect {
-        case u: org.apache.spark.sql.catalyst.expressions.ScalaUDF => u })
-    }.flatten
+      n.expressions.flatMap(udfsIn) }.flatten ++
+      org.apache.spark.sql.GraftSqlBridge.routedPlans(df.queryExecution.analyzed)
+        .flatMap(_.collect { case n => n.expressions.flatMap(udfsIn) }.flatten)
     assert(udfs.isEmpty, s"$what evaluates Scala UDFs: $udfs")
     assertNoGlobalSort(p, what)
     assert(!p.contains("rangepartitioning") && !"Sort \\[[^\\]]*\\], true".r.findFirstIn(p).isDefined,

@@ -6,8 +6,8 @@ import graft.{JobProbe, SparkSpec}
 import graft.ms.{MsTables, SyntheticMs}
 
 /** The cost of planning an averaging run: the plan pass is one narrow
-  * job, and a run over another input of the same shape reuses every
-  * generated class.
+  * job, the main write moves its rows once, and a run over another
+  * input of the same shape reuses every generated class.
   */
 class PlanBudgetSpec extends SparkSpec {
 
@@ -20,6 +20,24 @@ class PlanBudgetSpec extends SparkSpec {
     assert(st.nRows > 0)
     assert(probe.jobs == 1, s"the plan pass ran ${probe.jobs} jobs")
     assert(probe.shuffleBytes == 0, s"the plan pass shuffled ${probe.shuffleBytes} bytes")
+  }
+
+  test("Timechannel.run's main write executes one Exchange, routed by _PID") {
+    val dir = Files.createTempDirectory("graft_plan_budget")
+    try {
+      val (_, probe) = JobProbe(spark)(
+        Timechannel.run(spark, SyntheticMs.root, dir.resolve("out").toString, args))
+      val writes = probe.plans.map(_._2).filter(p =>
+        p.contains("InsertIntoHadoopFsRelationCommand") && p.contains("graft_vis_avg"))
+      assert(writes.size == 1, s"expected one averaging write, got:\n${writes.mkString("\n")}")
+      val exchanges = writes.head.linesIterator
+        .filter(l => "\\bExchange\\b".r.findFirstIn(l).isDefined).toList
+      assert(exchanges.size == 1 && exchanges.head.contains("direct_shuffle_partition_id(_PID"),
+        s"expected one Exchange, routed by _PID:\n${writes.head}")
+    } finally {
+      Files.walk(dir).sorted(java.util.Comparator.reverseOrder[Path]())
+        .forEach(p => Files.delete(p))
+    }
   }
 
   test("a second Timechannel.run over shifted TIMEs compiles no new classes") {
