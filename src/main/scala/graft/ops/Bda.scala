@@ -41,14 +41,14 @@ import graft.ms.MsWriter
   * constants.
   *
   * Scale: Timechannel's narrow plan pass ([[Chunking.planStats]])
-  * validates and gives t0 and the cell shape; the per-baseline sizing
-  * frame is one aggregate over the fact table, checkpointed once per run
-  * ([[sizing]]) and read by the channelisations, the exchange width and
-  * the broadcast bin join. The write then scans `main` once and
-  * shuffles once: the averaging aggregate's partials, routed by group
-  * (TimeAvg.averaged), so the remap, fixvis and output layout run
-  * in place (Timechannel.layout). Driver-side work is bounded by
-  * #SPWs x #channelisations.
+  * validates and gives t0; the per-baseline sizing frame is one
+  * aggregate over the fact table, checkpointed once per run
+  * ([[sizing]]) and read by the channelisations and the broadcast bin
+  * join. The write then scans `main` once and shuffles once: the
+  * averaging aggregate's partials, routed by group at the session's
+  * shuffle width (TimeAvg.averaged), so the remap, fixvis and output
+  * layout run in place (Timechannel.layout). Driver-side work is
+  * bounded by #SPWs x #channelisations.
   */
 object Bda {
 
@@ -119,10 +119,7 @@ object Bda {
       .agg(max(bl).as("BL_MAX"), min(col("INTERVAL")).as("DT_MIN"),
         first(col("FREQ_MAX")).as("FREQ_MAX"),
         first(col("CHAN_WIDTH_0")).as("CHAN_WIDTH_0"),
-        first(col("NUM_CHAN")).as("NUM_CHAN"),
-        // per-baseline TIME span: rides the same scan for free, feeds
-        // the output-group estimate behind the averaging exchange width
-        (max(col("TIME")) - min(col("TIME"))).as("T_SPAN"))
+        first(col("NUM_CHAN")).as("NUM_CHAN"))
       // Autocorrelations (|uv| = 0) don't smear: no decorrelation limit,
       // so both bounds degenerate to "unconstrained" (the time cap and
       // min_nchan floor still apply). Guarded explicitly rather than
@@ -146,19 +143,19 @@ object Bda {
               (d.cast("double") * col("CHAN_WIDTH_0") <= col("DNU_MAX") &&
                 col("NUM_CHAN") / d >= args.minNchan)))).cast("int"))
       .select((keys.map(col) :+ col("NUM_CHAN") :+
-        col("TIME_BIN_SECS") :+ col("CHAN_BIN") :+ col("T_SPAN")): _*)
+        col("TIME_BIN_SECS") :+ col("CHAN_BIN")): _*)
   }
 
   /** Join the per-baseline sizing back onto the fact table (NUM_CHAN is
     * dropped from the broadcast side — the fact frame may already have
-    * it; T_SPAN is sizing-internal).
+    * it).
     */
   def withBinParams(df: DataFrame, args: Args): DataFrame =
     joinBinParams(df, binParams(df, args))
 
   private def joinBinParams(df: DataFrame, bp: DataFrame): DataFrame =
     df.join(
-      broadcast(bp.drop("NUM_CHAN", "T_SPAN")),
+      broadcast(bp.drop("NUM_CHAN")),
       TimeAvg.GroupCols ++ Seq("ANTENNA1", "ANTENNA2"))
 
   /** J1 + selection/flag prep: join SPW channel metadata onto the
@@ -176,8 +173,8 @@ object Bda {
 
   /** The sizing frame of one run: [[binParams]] over [[prepared]],
     * checkpointed — its fact-table aggregate executes here, once, and
-    * the channelisations, the exchange width and the broadcast bin join
-    * all read the k-row result.
+    * the channelisations and the broadcast bin join both read the k-row
+    * result.
     */
   def sizing(main: DataFrame, spw: DataFrame, ddid: DataFrame, args: Args): DataFrame =
     graft.pipeline.Caches.materialize(binParams(prepared(main, spw, ddid, args), args))
@@ -197,15 +194,10 @@ object Bda {
     * `bp` checkpointed and t0 a local relation, the plan scans main once.
     */
   private def averagedMain(main: DataFrame, bp: DataFrame, plan: Chunking.PlanStats,
-                           args: Args): DataFrame = {
+                           args: Args): DataFrame =
     TimeAvg.averaged(joinBinParams(Flags.select(main, args), bp), col("TIME_BIN_SECS"),
-        args.runningBins, col("CHAN_BIN"), args.dataCols, "bda", plan) { _ =>
-      // Σ_baselines (span/bin + 1) x nchan/chan_bin, from the k-row frame
-      val est = bp.agg(sum((floor(col("T_SPAN") / col("TIME_BIN_SECS")) + 1) *
-        (col("NUM_CHAN") / col("CHAN_BIN")).cast("long"))).head()
-      if (est.isNullAt(0)) 0L else est.getLong(0)
-    }.withColumn("NUM_CHAN", size(col(args.dataCols.head._2))) // W3, for J2
-  }
+        args.runningBins, col("CHAN_BIN"), args.dataCols, "bda", plan)
+      .withColumn("NUM_CHAN", size(col(args.dataCols.head._2))) // W3, for J2
 
   /** A5 from the sizing frame alone. CHAN_BIN is by construction a
     * divisor of NUM_CHAN, so every output row of a baseline carries

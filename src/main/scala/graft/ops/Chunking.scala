@@ -12,19 +12,18 @@ import org.apache.spark.unsafe.types.UTF8String
   * column-pruned scan computing the per-MS plan statistics the
   * reference logs (chunking.py:295-313), the TIME-monotonicity
   * invariant it hard-fails on (chunking.py:287-289), and what the
-  * averaging plan needs from the data: the per-group grid origin t0 and
-  * the input cell shape.
+  * averaging plan needs from the data: the per-group grid origin t0.
   *
   * The reference needs this pass to size dask chunks so no time bin
   * spans two of them; Spark's shuffle routes rows to bins regardless of
   * layout (SURVEY §4 O4), so here the pass keeps its validation,
-  * logging and sizing roles. Like the reference's (chunking.py:13-65,
+  * logging and t0 roles. Like the reference's (chunking.py:13-65,
   * 217-314) it is NARROW: each split summarizes its rows in plain Scala
   * — one summary per constant-TIME run of rows of a (group, file) —
   * and the driver stitches the summaries. No shuffle, window or
-  * aggregate plan: the scan (keys, TIME, INTERVAL, UVW and the FLAG /
-  * WEIGHT sizes) is the pass's only generated code, and the driver holds
-  * about rows / #baselines summaries.
+  * aggregate plan: the scan (keys, TIME, INTERVAL and UVW; no
+  * visibility-sized column) is the pass's only generated code, and the
+  * driver holds about rows / #baselines summaries.
   */
 object Chunking {
 
@@ -32,14 +31,11 @@ object Chunking {
   type Group = (Int, Int, Int)
 
   /** `t0`: per-group min TIME, the grid-binning origin
-    * ([[TimeAvg.averaged]]). `cellShape`: (size(FLAG), size(WEIGHT))
-    * of the first row in scan order, i.e. (channels, correlations) —
-    * None for an empty frame or one without those columns.
+    * ([[TimeAvg.averaged]]).
     */
   case class PlanStats(
       nRows: Long, nTimes: Long, intervalMean: Double, maxUvw2: Double,
-      monotonicViolations: Long, t0: Map[Group, Double],
-      cellShape: Option[(Int, Int)])
+      monotonicViolations: Long, t0: Map[Group, Double])
 
   /** One constant-TIME run of one (group, file)'s rows within a split:
     * the range [lo, hi] of its row positions, its row count, ΣINTERVAL
@@ -53,9 +49,6 @@ object Chunking {
     var maxUvw2 = 0.0
     def group: Group = (f, d, s)
   }
-
-  /** One split's runs and the shape of its first row. */
-  private final case class Split(runs: Array[Run], shape: Option[(Int, Int)])
 
   /** One narrow pass over the (already selection-filtered) main table.
     *
@@ -78,54 +71,47 @@ object Chunking {
     val fileBacked = scala.util.Try(
       sel.select(col("_metadata.file_path"), col("_metadata.row_index"))
     ).isSuccess
-    val shaped = Seq("FLAG", "WEIGHT").forall(sel.columns.contains)
     val uvw2 = col("UVW")(0) * col("UVW")(0) + col("UVW")(1) * col("UVW")(1) +
       col("UVW")(2) * col("UVW")(2)
     val qe = sel.select(
       TimeAvg.GroupCols.map(col(_).cast("int")) ++
-        Seq(col("TIME"), col("INTERVAL"), uvw2,
-          if (shaped) size(col("FLAG")) else lit(0),
-          if (shaped) size(col("WEIGHT")) else lit(0)) ++
+        Seq(col("TIME"), col("INTERVAL"), uvw2) ++
         (if (fileBacked) Seq(col("_metadata.file_path"), col("_metadata.row_index"))
          else Nil): _*).queryExecution
-    val splits = SQLExecution.withNewExecutionId(qe, Some("plan pass")) {
+    val runs = SQLExecution.withNewExecutionId(qe, Some("plan pass")) {
       qe.toRdd.mapPartitionsWithIndex((i, rows) =>
-        Iterator(summarize(i, rows, fileBacked, shaped))).collect()
-    }
-    val runs = splits.flatMap(_.runs)
+        Iterator(summarize(i, rows, fileBacked))).collect()
+    }.flatten
     val nRows = runs.map(_.n).sum
     PlanStats(nRows, runs.map(_.time).distinct.length.toLong,
       if (nRows == 0) 0.0 else runs.map(_.intervalSum).sum / nRows,
       runs.map(_.maxUvw2).maxOption.getOrElse(0.0),
       runs.groupBy(_.group).values.map(violations).sum,
-      runs.groupMapReduce(_.group)(_.time)(math.min),
-      splits.iterator.flatMap(_.shape).nextOption())
+      runs.groupMapReduce(_.group)(_.time)(math.min))
   }
 
   /** The runs of split `part`, in its row order. Columns: group (0-2),
-    * TIME, INTERVAL, uvw², FLAG and WEIGHT sizes (3-7), then file path
-    * and row index when file-backed.
+    * TIME, INTERVAL, uvw² (3-5), then file path and row index when
+    * file-backed.
     */
   private def summarize(part: Int, rows: Iterator[InternalRow],
-                        fileBacked: Boolean, shaped: Boolean): Split = {
+                        fileBacked: Boolean): Array[Run] = {
     val open = mutable.HashMap.empty[(Int, Int, Int, String), Run]
     val done = mutable.ArrayBuffer.empty[Run]
-    var shape: Option[(Int, Int)] = None
     var path: UTF8String = null
     var file = ""
     var run: Run = null
     var i = -1L
     rows.foreach { r =>
       i += 1
-      if (shaped && shape.isEmpty) shape = Some((r.getInt(6), r.getInt(7)))
-      if (fileBacked && !r.getUTF8String(8).equals(path)) {
-        path = r.getUTF8String(8).clone()
+      if (fileBacked && !r.getUTF8String(6).equals(path)) {
+        path = r.getUTF8String(6).clone()
         file = path.toString
       }
       require(!r.isNullAt(3), "TIME is null: the input MS main table is malformed")
       val f = r.getInt(0); val d = r.getInt(1); val s = r.getInt(2)
       val t = r.getDouble(3)
-      val pos = if (fileBacked) r.getLong(9) else (part.toLong << 33) + i
+      val pos = if (fileBacked) r.getLong(7) else (part.toLong << 33) + i
       // rows of one key are usually consecutive: look up only on a switch
       if (run == null || run.f != f || run.d != d || run.s != s || run.file != file)
         run = open.getOrElse((f, d, s, file), null)
@@ -140,7 +126,7 @@ object Chunking {
       run.intervalSum += r.getDouble(4)
       run.maxUvw2 = math.max(run.maxUvw2, r.getDouble(5))
     }
-    Split((done ++ open.values).toArray, shape)
+    (done ++ open.values).toArray
   }
 
   /** Decreasing-TIME steps over one group's runs in stored order. */
@@ -161,9 +147,6 @@ object Chunking {
   }
 
   /** Validate + log, raising exactly where the reference raises. */
-  def validate(main: DataFrame, label: String): PlanStats =
-    validate(planStats(main), label)
-
   def validate(s: PlanStats, label: String): PlanStats = {
     println(f"[xova] $label plan: rows=${s.nRows} times=${s.nTimes} " +
       f"interval_mean=${s.intervalMean}%.3f max_uvw=${math.sqrt(s.maxUvw2)}%.1f")

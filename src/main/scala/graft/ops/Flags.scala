@@ -26,8 +26,8 @@ object Flags {
     * filters, channel selection of every (chan, corr) matrix column, then
     * the row flag FROW — P8 first, so a derived row flag reflects the
     * KEPT channels. Plans that read neither FROW nor the matrix columns
-    * prune both projections away; the plan pass (Chunking) reads only
-    * FLAG's and WEIGHT's sizes.
+    * prune both projections away: the plan pass (Chunking) reads none
+    * of FLAG, WEIGHT or the data columns.
     */
   def select(df: DataFrame, s: Selection): DataFrame = {
     val rows = selectScans(selectFields(

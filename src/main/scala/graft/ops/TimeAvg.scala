@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
@@ -68,62 +68,29 @@ object TimeAvg {
   val BinKey: Seq[String] =
     GroupCols ++ Seq("ANTENNA1", "ANTENNA2", "BIN")
 
-  /** Estimated resident+serialized bytes per aggregation-state cell of
-    * [[graft.expressions.VisAvgAgg]]: 8 double stat arrays + 1 long
-    * count (72 B resident) plus one serialized image alive on the merge
-    * path, which carries one population: 4 doubles and a bitmap bit
-    * (32⅛ B, rounded up to 33).
-    */
-  val StateBytesPerCell = 105L
-  /** Per-partition aggregation-state budget for the averaging shuffle
-    * (default; override with `spark.graft.avg.statePartitionBytes` —
-    * on a cluster this knob tracks executor memory per task slot).
-    */
-  val TargetStateBytesPerPartition: Long = 64L << 20
-
-  /** Width of the averaging exchange (the 100× scale boundary,
-    * DESIGN.md "100× point"): per-partition ObjectHashAggregate state
-    * must stay bounded as data grows, so the partition count is
-    * COMPUTED from the estimated state, and the session's partition
-    * count (sized to cores) is its floor.
-    */
-  def exchangeWidth(s: SparkSession, tag: String, est: Long): Int = {
-    val sessionParts = s.conf.get("spark.sql.shuffle.partitions").toInt
-    val target = s.conf
-      .getOption("spark.graft.avg.statePartitionBytes")
-      .map(_.toLong).getOrElse(TargetStateBytesPerPartition)
-    val derived = math.ceil(est.toDouble / target).toInt
-    val width = math.max(derived, sessionParts)
-    println(s"[xova] $tag averaging-exchange sizing: est_state=${est >> 20} MB " +
-      s"target/part=${target >> 20} MB derived=$derived session=$sessionParts " +
-      s"-> $width partitions, routed by group")
-    width
-  }
-
   /** W2 + A1/A2 + P5–P7, the averaging core of both commands (the
     * reference's output_dataset, xova/apps/xova/averaging.py:97-181):
     * grid or running time bins, one aggregate over [[BinKey]] running
     * the RowAvgAgg and VisAvgAgg kernels, the output projection and
     * FLAG_CATEGORY.
     *
-    *  - `selected`: the selected frame with whatever `binSecs` and
-    *    `chanBin` read; `plan`: the plan pass over it
-    *    ([[Chunking.PlanStats]]), whose per-group t0 and input cell shape
-    *    (channels, correlations) this reads.
-    *  - `outChanRows(nchan)`: the expected Σ output channels over output
-    *    rows, given the input channel count; times the correlation count
-    *    and [[StateBytesPerCell]] per data column it is the state
-    *    estimate behind [[exchangeWidth]].
+    * `selected` is the selected frame with whatever `binSecs` and
+    * `chanBin` read; `plan` is the plan pass over it
+    * ([[Chunking.PlanStats]]), whose per-group t0 this reads.
     *
     * The call moves its rows once. One #groups-row local relation, not
     * literals (so the generated code is the same for every input), joins
     * each row to its group's t0 and `_PID`: the group's dense index in
-    * the plan pass modulo the exchange width. The grouping key includes
-    * `_PID`. Map-side partials form per input split, and the one
-    * exchange routes them by `_PID` (GraftSqlBridge.routeFinalAggregate),
-    * so a bin's merge and eval run on its group's task and every group's
-    * output rows sit in one partition, ready for [[Timechannel.layout]]'s
-    * in-partition sort.
+    * the plan pass modulo the exchange width, the session's
+    * `spark.sql.shuffle.partitions`. The grouping key includes `_PID`.
+    * Map-side partials form per input split, and the one exchange routes
+    * them by `_PID` (GraftSqlBridge.routeFinalAggregate), so a bin's
+    * merge and eval run on its group's task and every group's output
+    * rows sit in one partition, ready for [[Timechannel.layout]]'s
+    * in-partition sort. A group never splits, so a width above #groups
+    * only adds empty partitions, and per-task aggregation state is
+    * bounded by Spark's own sort-based fallback
+    * (`spark.sql.objectHashAggregate.sortBased.fallbackThreshold`).
     *
     * WEIGHT_SPECTRUM / SIGMA_SPECTRUM are optional MS columns: WS is the
     * averaging weight and both spectra are averaged through when
@@ -133,11 +100,10 @@ object TimeAvg {
     */
   def averaged(selected: DataFrame, binSecs: Column, running: Boolean,
                chanBin: Column, dataCols: Seq[(String, String)], tag: String,
-               plan: Chunking.PlanStats)(
-      outChanRows: Int => Long): DataFrame = {
-    val est = plan.cellShape.map { case (nchan, ncorr) => outChanRows(nchan) * ncorr }
-      .getOrElse(0L) * dataCols.size * StateBytesPerCell
-    val width = exchangeWidth(selected.sparkSession, tag, est)
+               plan: Chunking.PlanStats): DataFrame = {
+    val width = selected.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
+    println(s"[xova] $tag averaging exchange: ${plan.t0.size} groups " +
+      s"-> $width partitions, routed by group")
     val groups = selected.sparkSession.createDataFrame(
         plan.t0.toSeq.sortBy(_._1).zipWithIndex.map {
           case (((f, d, s), t0), i) => (f, d, s, t0, i % width)

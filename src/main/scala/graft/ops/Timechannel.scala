@@ -19,14 +19,15 @@ import graft.ms.MsWriter
   * [[Flags.select]], then bin and average through [[TimeAvg.averaged]].
   *
   * Scale notes: one narrow plan pass ([[Chunking.planStats]]: no
-  * shuffle) sizes and validates the run, then the write scans `main`
-  * once and shuffles once: the bin-key aggregate's map-side partials
-  * (the kernels' merge) are routed by output group, so each bin merges
-  * on its group's task. The t0 and group-index relations, the UVW
-  * position/phase-centre lookups and the SPW rewrite are tiny
-  * broadcast/driver-side work. Output partition hygiene (the
-  * reference's A3′ row_concatenate, averaging.py:39-77) falls out of
-  * that routing: the output [[layout]] only sorts within partitions.
+  * shuffle) validates the run and gives t0, then the write scans `main`
+  * once and shuffles once, at the session's shuffle width: the bin-key
+  * aggregate's map-side partials (the kernels' merge) are routed by
+  * output group, so each bin merges on its group's task. The t0 and
+  * group-index relations, the UVW position/phase-centre lookups and the
+  * SPW rewrite are tiny broadcast/driver-side work. Output partition
+  * hygiene (the reference's A3′ row_concatenate, averaging.py:39-77)
+  * falls out of that routing: the output [[layout]] only sorts within
+  * partitions.
   */
 object Timechannel {
 
@@ -63,18 +64,12 @@ object Timechannel {
   def averagedMain(main: DataFrame, args: Args): DataFrame =
     averagedMain(main, args, Chunking.planStats(Flags.select(main, args)))
 
-  /** [[averagedMain]] given the plan pass `plan` over the selected rows:
-    * its per-group t0 anchors the grid, and its row count and cell shape
-    * size the exchange (output rows <= input rows: each row lands in
-    * exactly one bin).
+  /** [[averagedMain]] given the plan pass `plan` over the selected rows,
+    * whose per-group t0 anchors the grid.
     */
-  def averagedMain(main: DataFrame, args: Args, plan: Chunking.PlanStats): DataFrame = {
-    val k = args.chanBinSize
+  def averagedMain(main: DataFrame, args: Args, plan: Chunking.PlanStats): DataFrame =
     TimeAvg.averaged(Flags.select(main, args), lit(args.timeBinSecs), args.runningBins,
-      lit(k), args.dataCols, "timechannel", plan) { nchan =>
-      plan.nRows * ((nchan + k - 1) / k)
-    }
-  }
+      lit(args.chanBinSize), args.dataCols, "timechannel", plan)
 
   /** A3: rebin SPECTRAL_WINDOW channel metadata — CHAN_FREQ mean,
     * CHAN_WIDTH/EFFECTIVE_BW/RESOLUTION sum per output channel, NUM_CHAN

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.ms.MsTables
 import graft.ops.{Bda, Chunking, Flags, Timechannel}
 import graft.pipeline.{Ann, Dedup}
@@ -12,6 +12,7 @@ import graft.pipeline.{Ann, Dedup}
   * re-read an explain dump.
   */
 class PlanShapeSpec extends SparkSpec {
+  import PlanShapeSpec._
 
   private def plan(df: DataFrame): String = JobProbe.planText(df.queryExecution)
 
@@ -33,9 +34,6 @@ class PlanShapeSpec extends SparkSpec {
   private lazy val embs =
     spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
 
-  private val tcArgs = Timechannel.Args(timeBinSecs = 60000.0, chanBinSize = 4,
-    dataCols = Seq("DATA" -> "DATA"))
-
   test("timechannel averaging: 1 main-table scan, no global funnel") {
     // the plan pass ran at construction; its t0 joins as a local relation
     val p = plan(Timechannel.averagedMain(MsTables.main(spark), tcArgs))
@@ -54,27 +52,26 @@ class PlanShapeSpec extends SparkSpec {
   }
 
   test("the plan pass is one narrow scan: no Exchange, no aggregate, no window") {
-    val sel = Flags.select(MsTables.main(spark), tcArgs)
-    val (_, probe) = JobProbe(spark)(Chunking.planStats(sel))
+    // a child session that prints the scan's ReadSchema untruncated
+    val s = spark.newSession()
+    s.conf.set("spark.sql.maxMetadataStringLength", 100000L)
+    val sel = Flags.select(MsTables.main(s), tcArgs)
+    val (_, probe) = JobProbe(s)(Chunking.planStats(sel))
     val passes = probe.plans.collect { case ("plan pass", p) => p }
     val p = passes.mkString("\n")
     assert(passes.size == 1, s"expected one plan-pass execution, got:\n$p")
     assert(!p.contains("Exchange") && !p.contains("Aggregate") && !p.contains("Window"),
       s"the plan pass is not narrow:\n$p")
     assert(mainScans(p) == 1, s"expected one main-table scan:\n$p")
-  }
-
-  /** The BDA output main table exactly as Bda.run writes it. */
-  private def bdaWritePlan(): DataFrame = {
-    val args = graft.queries.BdaQueries.raggedArgs
-    val main = MsTables.main(spark)
-    val spw = MsTables.spw(spark); val ddid = MsTables.ddid(spark)
-    val bp = Bda.sizing(main, spw, ddid, args)
-    val chanls = Bda.channelisationsSized(bp, ddid).collect()
-      .map(r => (r.getInt(0), r.getInt(1), r.getInt(2), r.getInt(3))).toSeq
-    val (_, _, remapDf) = Bda.regenerate(spark, chanls, spw)
-    Bda.outputMain(main, bp, Chunking.planStats(Flags.select(main, args)),
-      graft.ms.SyntheticMs.root, args, remapDf)
+    // it decodes no visibility-sized column (FLAG_ROW is a field of its own)
+    val read = p.linesIterator.filter(l => l.contains("FileScan") && l.contains("fixtures/ms/main"))
+      .flatMap(l => "ReadSchema: (struct<.*>)".r.findFirstMatchIn(l).map(_.group(1)))
+      .map(org.apache.spark.sql.types.DataType.fromDDL(_)
+        .asInstanceOf[org.apache.spark.sql.types.StructType].fieldNames.toSet)
+      .toList
+    assert(read.size == 1, s"expected the main scan's ReadSchema:\n$p")
+    val heavy = Set("FLAG", "WEIGHT", "DATA", "WEIGHT_SPECTRUM", "SIGMA_SPECTRUM") & read.head
+    assert(heavy.isEmpty, s"the plan pass reads $heavy (ReadSchema fields ${read.head})")
   }
 
   test("BDA write plan: 1 main-table scan, no runtime bloom-filter subquery") {
@@ -82,7 +79,7 @@ class PlanShapeSpec extends SparkSpec {
     // estimate of the aggregate behind it; nothing in the write plan may
     // aggregate over a join with it, which would attract bloom-filter
     // subqueries that rescan main
-    val p = plan(bdaWritePlan())
+    val p = plan(bdaWritePlan(spark))
     assert(mainScans(p) == 1, s"expected one main-table scan:\n$p")
     assert(!p.contains("bloom_filter") && !p.contains("might_contain"),
       s"the BDA write plan carries a runtime bloom filter:\n$p")
@@ -142,16 +139,14 @@ class PlanShapeSpec extends SparkSpec {
   test("BDA write plan: one averaging shuffle (one partial+final graft_vis_avg pair)") {
     // The full output main table Bda.run hands to the writer — averaging
     // + remap + fused fixvis + output layout.
-    assertOneAveragingShuffle(plan(bdaWritePlan()))
+    assertOneAveragingShuffle(plan(bdaWritePlan(spark)))
   }
 
   test("fused write plans: one averaging shuffle, UVW lookups broadcast, no SMJ/UDF/global sort") {
-    val main = MsTables.main(spark)
-    val tc = Timechannel.outputMain(main, graft.ms.SyntheticMs.root, tcArgs,
-      Chunking.planStats(Flags.select(main, tcArgs)))
+    val tc = tcWritePlan(spark)
     assertOneAveragingShuffle(plan(tc))
     assertFusedUvwLookups(tc, "timechannel write")
-    assertFusedUvwLookups(bdaWritePlan(), "bda write")
+    assertFusedUvwLookups(bdaWritePlan(spark), "bda write")
   }
 
   test("FIELD_ID selection on a written output MS is a partition filter") {
@@ -899,5 +894,34 @@ class PlanShapeSpec extends SparkSpec {
     assert(p.contains("BroadcastHashJoin"),
       s"position lookups should be broadcast joins:\n$p")
     assertNoGlobalSort(p, "uvw synthesis")
+  }
+}
+
+object PlanShapeSpec {
+  val tcArgs = Timechannel.Args(timeBinSecs = 60000.0, chanBinSize = 4,
+    dataCols = Seq("DATA" -> "DATA"))
+
+  /** The timechannel output main table exactly as Timechannel.run writes
+    * it, over the fixture in session `s`.
+    */
+  def tcWritePlan(s: SparkSession): DataFrame = {
+    val main = MsTables.main(s)
+    Timechannel.outputMain(main, graft.ms.SyntheticMs.root, tcArgs,
+      Chunking.planStats(Flags.select(main, tcArgs)))
+  }
+
+  /** The BDA output main table exactly as Bda.run writes it, over the
+    * fixture in session `s`.
+    */
+  def bdaWritePlan(s: SparkSession): DataFrame = {
+    val args = graft.queries.BdaQueries.raggedArgs
+    val main = MsTables.main(s)
+    val spw = MsTables.spw(s); val ddid = MsTables.ddid(s)
+    val bp = Bda.sizing(main, spw, ddid, args)
+    val chanls = Bda.channelisationsSized(bp, ddid).collect()
+      .map(r => (r.getInt(0), r.getInt(1), r.getInt(2), r.getInt(3))).toSeq
+    val (_, _, remapDf) = Bda.regenerate(s, chanls, spw)
+    Bda.outputMain(main, bp, Chunking.planStats(Flags.select(main, args)),
+      graft.ms.SyntheticMs.root, args, remapDf)
   }
 }

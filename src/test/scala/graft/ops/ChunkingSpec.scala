@@ -12,7 +12,7 @@ class ChunkingSpec extends SparkSpec {
 
   test("fixture MS passes validation with correct plan stats") {
     val main = Flags.filterAutocorr(MsTables.main(spark))
-    val st = Chunking.validate(main, "spec")
+    val st = Chunking.validate(Chunking.planStats(main), "spec")
     assert(st.monotonicViolations == 0)
     assert(st.nRows == main.count())
     assert(st.nTimes == 4)
@@ -51,7 +51,7 @@ class ChunkingSpec extends SparkSpec {
         "ANTENNA2", "TIME", "INTERVAL", "UVW")
       .coalesce(1) // pin the stored order the check runs over
     val e = intercept[IllegalArgumentException] {
-      Chunking.validate(bad, "spec")
+      Chunking.validate(Chunking.planStats(bad), "spec")
     }
     assert(e.getMessage.contains("monotonicity"))
   }
@@ -96,7 +96,7 @@ class ChunkingSpec extends SparkSpec {
       rowsAt((0 until 8).map(i => 1.0 + i % 2), 1)).repartition(2)
     assert(Chunking.planStats(bad).monotonicViolations > 0)
     val e = intercept[IllegalArgumentException] {
-      Chunking.validate(bad, "spec")
+      Chunking.validate(Chunking.planStats(bad), "spec")
     }
     assert(e.getMessage.contains("monotonicity"))
   }
@@ -109,20 +109,6 @@ class ChunkingSpec extends SparkSpec {
     assert(expected.size > 1)
     assert(Chunking.planStats(main).t0 == expected)
     assert(Chunking.planStats(main.repartition(3)).t0 == expected)
-  }
-
-  test("the cell shape is the first scanned row's (FLAG, WEIGHT) sizes") {
-    import org.apache.spark.sql.functions._
-    for (channels <- Seq(Nil, Seq(0, 2, 3))) {
-      val sel = Flags.select(MsTables.main(spark),
-        Timechannel.Args(dataCols = Seq("DATA" -> "DATA"), channels = channels))
-      val first = sel.select(size(col("FLAG")), size(col("WEIGHT"))).limit(1)
-        .collect().map(r => (r.getInt(0), r.getInt(1))).headOption
-      assert(first.isDefined)
-      assert(Chunking.planStats(sel).cellShape == first, s"channels $channels")
-    }
-    assert(Chunking.planStats(rowsAt(Seq(1.0), 1)).cellShape.isEmpty,
-      "a frame without FLAG/WEIGHT has no cell shape")
   }
 
   test("in-memory frames fall back to (split, ordinal) row positions") {
