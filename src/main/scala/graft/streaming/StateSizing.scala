@@ -28,13 +28,13 @@ import org.apache.spark.sql.DataFrame
   * production-scale 2048 fall out of the same computation.
   */
 object StateSizing {
-  val TargetStoreBytes: Long = 32L << 20
+  val TargetStateBytesPerPartition: Long = 32L << 20
   val MinParts = 8
   val MaxParts = 4096
 
   def partitions(estStateBytes: Long): Int =
     math.max(MinParts, math.min(MaxParts,
-      math.ceil(estStateBytes.toDouble / TargetStoreBytes).toInt))
+      math.ceil(estStateBytes.toDouble / TargetStateBytesPerPartition).toInt))
 
   /** Estimate from an input frame: live keys are bounded by
     * `keysPerRow` state keys per input row at `bytesPerKey` bytes each

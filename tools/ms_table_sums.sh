@@ -8,9 +8,7 @@
 # over its rows and its column order. Two outputs are bit-identical when
 # every line matches. One spark-sql JVM runs per MS, not one per table.
 #
-# Runs $SPARK_HOME/bin/spark-sql, else spark-sql from PATH; SUMS_MASTER
-# (default local[2]) is the master the hashing session runs on. The sums
-# do not depend on it.
+# Runs $SPARK_HOME/bin/spark-sql, else spark-sql from PATH, on local[2].
 set -euo pipefail
 [ $# -ge 1 ] || { echo "usage: $0 <out_ms>..." >&2; exit 2; }
 spark_sql="${SPARK_HOME:+$SPARK_HOME/bin/}spark-sql"
@@ -28,7 +26,7 @@ for ms in "$@"; do
     sql+="DESCRIBE QUERY SELECT * FROM $src; "
   done
   echo "# $ms"
-  out="$(cd "$work" && "$spark_sql" --master "${SUMS_MASTER:-local[2]}" \
+  out="$(cd "$work" && "$spark_sql" --master 'local[2]' \
       --conf spark.ui.enabled=false \
       --conf spark.sql.catalogImplementation=in-memory \
       -S -e "$sql" 2>"$work/stderr")" ||
