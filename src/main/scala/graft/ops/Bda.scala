@@ -1,7 +1,9 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import scala.jdk.CollectionConverters._
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import graft.ms.MsWriter
 
 /** Baseline-Dependent Averaging (SURVEY §2.3 A4–A6, §2.4 J2, §3 E2):
@@ -29,7 +31,7 @@ import graft.ms.MsWriter
   *   dt_max  = x* * lambda / (pi * omega_e * bl * sin(fov))
   *   dnu_max = x* * c      / (pi * bl * sin(fov))
   *
-  * Baseline length is the partition-max |uv| per (group, baseline) —
+  * Baseline length is the max |uv| per (group, baseline) —
   * conservative, and it keeps bin sizes constant per baseline so bin
   * assignment stays a broadcast-join + projection (no window needed).
   * Channel bin = largest divisor of NUM_CHAN whose width fits dnu_max
@@ -41,10 +43,11 @@ import graft.ms.MsWriter
   * constants.
   *
   * Scale: Timechannel's narrow plan pass ([[Chunking.planStats]])
-  * validates and gives t0; the per-baseline sizing frame is one
-  * aggregate over the fact table, checkpointed once per run
-  * ([[sizing]]) and read by the channelisations and the broadcast bin
-  * join. The write then scans `main` once and shuffles once: the
+  * validates, gives t0 and yields each baseline's max uvw² and min
+  * INTERVAL; the driver sizes the bins from that summary ([[sizing]]: a
+  * #groups x #baselines local relation, no fact-table job), and the
+  * channelisations and the broadcast bin join read it. The write then
+  * scans `main` once and shuffles once: the
   * averaging aggregate's partials, routed by group at the session's
   * shuffle width (TimeAvg.averaged), so the remap, fixvis and output
   * layout run in place (Timechannel.layout). Driver-side work is
@@ -97,29 +100,16 @@ object Bda {
     (lo + hi) / 2
   }
 
-  /** Per-(group, baseline) sizing frame — one TINY row per baseline with
-    * NUM_CHAN (input), TIME_BIN_SECS and CHAN_BIN. Input must carry UVW,
-    * INTERVAL and the J1-joined SPW metadata (NUM_CHAN, CHAN_WIDTH_0,
-    * FREQ_MAX). Lazy: each action on it is a column-pruned scan of the
-    * fact table, so a run uses it only through [[sizing]].
+  /** Bin widths per (group, baseline): the decorrelation limits as
+    * column arithmetic over `baselines`, one row per (group, baseline)
+    * with its max |uv| BL_MAX, min INTERVAL DT_MIN and the group's SPW
+    * scalars NUM_CHAN (input), CHAN_WIDTH_0 and FREQ_MAX. Adds
+    * TIME_BIN_SECS and CHAN_BIN.
     */
-  def binParams(df: DataFrame, args: Args): DataFrame = {
+  def binParams(baselines: DataFrame, args: Args): DataFrame = {
     val xStar = sincInv(math.sqrt(args.decorrelation))
     val sinFov = math.sin(math.toRadians(args.maxFovDeg))
-    val keys = TimeAvg.GroupCols ++ Seq("ANTENNA1", "ANTENNA2")
-
-    val bl = sqrt(col("UVW")(0) * col("UVW")(0) + col("UVW")(1) * col("UVW")(1) +
-      col("UVW")(2) * col("UVW")(2))
-    // tiny frame: one row per (group, baseline). The J1-joined SPW
-    // scalars are constant per group (DATA_DESC_ID is a group key), so
-    // they ride along as first(...) — ONE scan of the fact table sizes
-    // every baseline (a second distinct() over df would rescan it).
-    df
-      .groupBy(keys.map(col): _*)
-      .agg(max(bl).as("BL_MAX"), min(col("INTERVAL")).as("DT_MIN"),
-        first(col("FREQ_MAX")).as("FREQ_MAX"),
-        first(col("CHAN_WIDTH_0")).as("CHAN_WIDTH_0"),
-        first(col("NUM_CHAN")).as("NUM_CHAN"))
+    baselines
       // Autocorrelations (|uv| = 0) don't smear: no decorrelation limit,
       // so both bounds degenerate to "unconstrained" (the time cap and
       // min_nchan floor still apply). Guarded explicitly rather than
@@ -142,77 +132,69 @@ object Bda {
             (d === 1 ||
               (d.cast("double") * col("CHAN_WIDTH_0") <= col("DNU_MAX") &&
                 col("NUM_CHAN") / d >= args.minNchan)))).cast("int"))
-      .select((keys.map(col) :+ col("NUM_CHAN") :+
-        col("TIME_BIN_SECS") :+ col("CHAN_BIN")): _*)
+      .drop("DT_RAW", "DNU_MAX")
   }
 
-  /** Join the per-baseline sizing back onto the fact table (NUM_CHAN is
-    * dropped from the broadcast side — the fact frame may already have
-    * it).
+  /** The sizing of one run, from its plan pass: [[binParams]] over a
+    * local relation, one row per (group, baseline) of the selected rows
+    * ([[Chunking.PlanStats.baselines]]: BL_MAX is the sqrt of the max
+    * uvw², which is the max |uv| bit for bit, sqrt being monotone),
+    * joined on the driver with the per-DDID SPW metadata (J1,
+    * averaging.py:306-308; P8 applied): SPECTRAL_WINDOW_ID,
+    * POLARIZATION_ID, NUM_CHAN, CHAN_WIDTH_0 and FREQ_MAX. A baseline
+    * whose DATA_DESC_ID has no DATA_DESCRIPTION or SPW row gets no row,
+    * so the bin join drops its rows. No fact-table row is read, and the
+    * relation's size estimate is its real size.
     */
-  def withBinParams(df: DataFrame, args: Args): DataFrame =
-    joinBinParams(df, binParams(df, args))
-
-  private def joinBinParams(df: DataFrame, bp: DataFrame): DataFrame =
-    df.join(
-      broadcast(bp.drop("NUM_CHAN")),
-      TimeAvg.GroupCols ++ Seq("ANTENNA1", "ANTENNA2"))
-
-  /** J1 + selection/flag prep: join SPW channel metadata onto the
-    * selected main table (averaging.py:306-308). P8 applies to main AND
-    * to the SPW metadata the sizing consumes.
-    */
-  def prepared(main: DataFrame, spw: DataFrame, ddid: DataFrame, args: Args): DataFrame = {
-    val spwMeta = ddid.select("DATA_DESC_ID", "SPECTRAL_WINDOW_ID")
+  def sizing(plan: Chunking.PlanStats, spw: DataFrame, ddid: DataFrame,
+             args: Args): DataFrame = {
+    val meta = ddid.select("DATA_DESC_ID", "SPECTRAL_WINDOW_ID", "POLARIZATION_ID")
       .join(Timechannel.selectSpwChannels(spw, args.channels).select(
         col("SPECTRAL_WINDOW_ID"), col("NUM_CHAN"),
         element_at(col("CHAN_WIDTH"), 1).as("CHAN_WIDTH_0"),
         array_max(col("CHAN_FREQ")).as("FREQ_MAX")), "SPECTRAL_WINDOW_ID")
-    Flags.select(main, args).join(broadcast(spwMeta), "DATA_DESC_ID")
+    val byDdid = meta.collect().map(r => r.getAs[Int]("DATA_DESC_ID") -> r).toMap
+    val rows = for {
+      ((f, d, s, a1, a2), (uvw2, dtMin)) <- plan.baselines.toSeq
+      m <- byDdid.get(d)
+    } yield Row.fromSeq(Seq[Any](f, s, a1, a2, math.sqrt(uvw2), dtMin) ++ m.toSeq)
+    val schema = StructType(StructType.fromDDL("FIELD_ID INT, SCAN_NUMBER INT, " +
+      "ANTENNA1 INT, ANTENNA2 INT, BL_MAX DOUBLE, DT_MIN DOUBLE") ++ meta.schema)
+    binParams(spw.sparkSession.createDataFrame(rows.asJava, schema), args)
   }
-
-  /** The sizing frame of one run: [[binParams]] over [[prepared]],
-    * checkpointed — its fact-table aggregate executes here, once, and
-    * the channelisations and the broadcast bin join both read the k-row
-    * result.
-    */
-  def sizing(main: DataFrame, spw: DataFrame, ddid: DataFrame, args: Args): DataFrame =
-    graft.pipeline.Caches.materialize(binParams(prepared(main, spw, ddid, args), args))
 
   /** A4: the ragged averaged main table (pre-remap: still carries the
     * input DATA_DESC_ID plus the transient per-row output channel count
-    * NUM_CHAN, averaging.py:159-164). Runs the plan pass and sizes its
-    * own [[sizing]] frame.
+    * NUM_CHAN, averaging.py:159-164). Runs the plan pass and sizes from
+    * it.
     */
-  def averagedMain(main: DataFrame, spw: DataFrame, ddid: DataFrame, args: Args): DataFrame =
-    averagedMain(main, sizing(main, spw, ddid, args),
-      Chunking.planStats(Flags.select(main, args)), args)
+  def averagedMain(main: DataFrame, spw: DataFrame, ddid: DataFrame, args: Args): DataFrame = {
+    val plan = Chunking.planStats(Flags.select(main, args))
+    averagedMain(main, sizing(plan, spw, ddid, args), plan, args)
+  }
 
-  /** [[averagedMain]] over a run's sizing frame `bp` and plan pass
-    * `plan`. Selection reads `main` directly: after sizing, the averaging
-    * needs only the per-baseline bin columns, not the SPW metadata. With
-    * `bp` checkpointed and t0 a local relation, the plan scans main once.
+  /** [[averagedMain]] over a run's [[sizing]] `bp` and plan pass `plan`.
+    * Selection reads `main` directly and joins `bp` (the averaging reads
+    * only its bin columns); with `bp` and t0 local relations, the plan
+    * scans main once.
     */
   private def averagedMain(main: DataFrame, bp: DataFrame, plan: Chunking.PlanStats,
                            args: Args): DataFrame =
-    TimeAvg.averaged(joinBinParams(Flags.select(main, args), bp), col("TIME_BIN_SECS"),
-        args.runningBins, col("CHAN_BIN"), args.dataCols, "bda", plan)
+    TimeAvg.averaged(Flags.select(main, args).join(broadcast(bp),
+        TimeAvg.GroupCols ++ Seq("ANTENNA1", "ANTENNA2")),
+        col("TIME_BIN_SECS"), args.runningBins, col("CHAN_BIN"), args.dataCols, "bda", plan)
       .withColumn("NUM_CHAN", size(col(args.dataCols.head._2))) // W3, for J2
 
-  /** A5 from the sizing frame alone. CHAN_BIN is by construction a
-    * divisor of NUM_CHAN, so every output row of a baseline carries
-    * exactly NUM_CHAN / CHAN_BIN channels — the distinct channelisation
-    * set is fully determined by the per-baseline sizing frame `bp`
-    * ([[sizing]]). This avoids materialising the averaged DATA/
-    * WEIGHT_SPECTRUM/SIGMA_SPECTRUM arrays just to read their lengths,
-    * and reads no fact-table rows: a tiny distinct over the checkpoint.
+  /** A5 from the sizing alone. CHAN_BIN is by construction a divisor of
+    * NUM_CHAN, so every output row of a baseline carries exactly
+    * NUM_CHAN / CHAN_BIN channels: the distinct (DATA_DESC_ID,
+    * SPECTRAL_WINDOW_ID, POLARIZATION_ID, output NUM_CHAN) are a
+    * driver-side distinct over `bp`'s rows, with no job.
     */
-  def channelisationsSized(bp: DataFrame, ddid: DataFrame): DataFrame =
-    bp.select(col("DATA_DESC_ID"),
-        (col("NUM_CHAN") / col("CHAN_BIN")).cast("int").as("NUM_CHAN"))
-      .distinct()
-      .join(broadcast(ddid), "DATA_DESC_ID")
-      .select("DATA_DESC_ID", "SPECTRAL_WINDOW_ID", "POLARIZATION_ID", "NUM_CHAN")
+  def channelisations(bp: DataFrame): Seq[(Int, Int, Int, Int)] =
+    bp.select(col("DATA_DESC_ID"), col("SPECTRAL_WINDOW_ID"), col("POLARIZATION_ID"),
+        (col("NUM_CHAN") / col("CHAN_BIN")).cast("int"))
+      .collect().map(r => (r.getInt(0), r.getInt(1), r.getInt(2), r.getInt(3))).distinct.toSeq
 
   /** A6 + F3: regenerate SPW + DDID rows for each distinct
     * (spw, nchan_out) and build the {(old_ddid, nchan) -> new_ddid} map
@@ -268,7 +250,7 @@ object Bda {
       .withColumnRenamed("NEW_DDID", "DATA_DESC_ID")
 
   /** The output main table exactly as [[run]] writes it: averaged over
-    * the run's sizing frame `bp` and plan pass `plan`, DATA_DESC_IDs
+    * the run's [[sizing]] `bp` and plan pass `plan`, DATA_DESC_IDs
     * remapped (J2), UVW per [[Uvw.fixvis]], laid out.
     */
   def outputMain(main: DataFrame, bp: DataFrame, plan: Chunking.PlanStats,
@@ -286,17 +268,13 @@ object Bda {
     val plan = Chunking.planStats(Flags.select(main, args))
     if (args.validate) Chunking.validate(plan, "bda")
 
-    // A5 from the sizing frame (channelisationsSized): the distinct
-    // channelisation set is determined by the tiny per-baseline sizing
-    // frame, sized once here, so the expensive averaging shuffle runs
-    // exactly ONCE — at write time — and nothing forces the full
-    // averaged table into the storage layer.
-    val bp = sizing(main, spw, ddid, args)
-    val chanls = channelisationsSized(bp, ddid).collect()
-      .map(r => (r.getInt(0), r.getInt(1), r.getInt(2), r.getInt(3))).toSeq
+    // A5 from the per-baseline sizing, so the expensive averaging
+    // shuffle runs exactly ONCE — at write time — and nothing forces the
+    // full averaged table into the storage layer.
+    val bp = sizing(plan, spw, ddid, args)
     // regenerate from the channel-selected SPW so the new grids span
     // exactly the channels that were averaged
-    val (newSpw, newDdid, remapDf) = regenerate(spark, chanls,
+    val (newSpw, newDdid, remapDf) = regenerate(spark, channelisations(bp),
       Timechannel.selectSpwChannels(spw, args.channels))
     MsWriter.writeMs(inRoot, outRoot, args.force,
       outputMain(main, bp, plan, inRoot, args, remapDf), TimeAvg.GroupCols,

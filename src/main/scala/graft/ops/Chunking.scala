@@ -21,34 +21,50 @@ import org.apache.spark.unsafe.types.UTF8String
   * 217-314) it is NARROW: each split summarizes its rows in plain Scala
   * — one summary per constant-TIME run of rows of a (group, file) —
   * and the driver stitches the summaries. No shuffle, window or
-  * aggregate plan: the scan (keys, TIME, INTERVAL and UVW; no
+  * aggregate plan: the scan (keys, antennas, TIME, INTERVAL and UVW; no
   * visibility-sized column) is the pass's only generated code, and the
   * driver holds about rows / #baselines summaries.
+  *
+  * The same pass yields BDA's sizing inputs: per (group, ANTENNA1,
+  * ANTENNA2), the max uvw² and min INTERVAL, folded per split (at most
+  * #groups × #baselines entries) and merged on the driver
+  * ([[PlanStats.baselines]], read by Bda.sizing).
   */
 object Chunking {
 
   /** (FIELD_ID, DATA_DESC_ID, SCAN_NUMBER), [[TimeAvg.GroupCols]]. */
   type Group = (Int, Int, Int)
 
+  /** (FIELD_ID, DATA_DESC_ID, SCAN_NUMBER, ANTENNA1, ANTENNA2). */
+  type Baseline = (Int, Int, Int, Int, Int)
+
   /** `t0`: per-group min TIME, the grid-binning origin
-    * ([[TimeAvg.averaged]]).
+    * ([[TimeAvg.averaged]]). `baselines`: per baseline, (max uvw², min
+    * INTERVAL) in Spark's `max`/`min` semantics.
     */
   case class PlanStats(
-      nRows: Long, nTimes: Long, intervalMean: Double, maxUvw2: Double,
-      monotonicViolations: Long, t0: Map[Group, Double])
+      nRows: Long, nTimes: Long, intervalMean: Double,
+      monotonicViolations: Long, t0: Map[Group, Double],
+      baselines: Map[Baseline, (Double, Double)])
 
   /** One constant-TIME run of one (group, file)'s rows within a split:
-    * the range [lo, hi] of its row positions, its row count, ΣINTERVAL
-    * and max |uvw|².
+    * the range [lo, hi] of its row positions, its row count and
+    * ΣINTERVAL.
     */
   private final class Run(val f: Int, val d: Int, val s: Int, val file: String,
                           val time: Double, var lo: Long) extends Serializable {
     var hi: Long = lo
     var n = 0L
     var intervalSum = 0.0
-    var maxUvw2 = 0.0
     def group: Group = (f, d, s)
   }
+
+  /** (max uvw², min INTERVAL) of two sets of one baseline's rows. Both
+    * order NaN above every number, as Spark's `max` and `min` do
+    * (`math.min` would propagate it).
+    */
+  private def extremes(a: (Double, Double), b: (Double, Double)): (Double, Double) =
+    (math.max(a._1, b._1), if (a._2.isNaN || b._2 < a._2) b._2 else a._2)
 
   /** One narrow pass over the (already selection-filtered) main table.
     *
@@ -68,50 +84,54 @@ object Chunking {
     * any frame, and the count is exact whenever runs do not interleave.
     */
   def planStats(sel: DataFrame): PlanStats = {
-    val fileBacked = scala.util.Try(
-      sel.select(col("_metadata.file_path"), col("_metadata.row_index"))
-    ).isSuccess
+    val position = Seq(col("_metadata.file_path"), col("_metadata.row_index"))
+    val fileBacked = scala.util.Try(sel.select(position: _*)).isSuccess
     val uvw2 = col("UVW")(0) * col("UVW")(0) + col("UVW")(1) * col("UVW")(1) +
       col("UVW")(2) * col("UVW")(2)
     val qe = sel.select(
       TimeAvg.GroupCols.map(col(_).cast("int")) ++
-        Seq(col("TIME"), col("INTERVAL"), uvw2) ++
-        (if (fileBacked) Seq(col("_metadata.file_path"), col("_metadata.row_index"))
-         else Nil): _*).queryExecution
-    val runs = SQLExecution.withNewExecutionId(qe, Some("plan pass")) {
+        Seq(col("TIME"), col("INTERVAL"), uvw2,
+          col("ANTENNA1").cast("int"), col("ANTENNA2").cast("int")) ++
+        (if (fileBacked) position else Nil): _*).queryExecution
+    val parts = SQLExecution.withNewExecutionId(qe, Some("plan pass")) {
       qe.toRdd.mapPartitionsWithIndex((i, rows) =>
         Iterator(summarize(i, rows, fileBacked))).collect()
-    }.flatten
+    }
+    val runs = parts.flatMap(_._1)
     val nRows = runs.map(_.n).sum
     PlanStats(nRows, runs.map(_.time).distinct.length.toLong,
       if (nRows == 0) 0.0 else runs.map(_.intervalSum).sum / nRows,
-      runs.map(_.maxUvw2).maxOption.getOrElse(0.0),
       runs.groupBy(_.group).values.map(violations).sum,
-      runs.groupMapReduce(_.group)(_.time)(math.min))
+      runs.groupMapReduce(_.group)(_.time)(math.min),
+      parts.flatMap(_._2).groupMapReduce(_._1)(_._2)(extremes))
   }
 
-  /** The runs of split `part`, in its row order. Columns: group (0-2),
-    * TIME, INTERVAL, uvw² (3-5), then file path and row index when
+  /** The runs of split `part`, in its row order, and its per-baseline
+    * extremes. Columns: group (0-2), TIME, INTERVAL, uvw² (3-5),
+    * ANTENNA1, ANTENNA2 (6-7), then file path and row index when
     * file-backed.
     */
-  private def summarize(part: Int, rows: Iterator[InternalRow],
-                        fileBacked: Boolean): Array[Run] = {
+  private def summarize(part: Int, rows: Iterator[InternalRow], fileBacked: Boolean)
+      : (Array[Run], mutable.HashMap[Baseline, (Double, Double)]) = {
     val open = mutable.HashMap.empty[(Int, Int, Int, String), Run]
     val done = mutable.ArrayBuffer.empty[Run]
+    val bl = mutable.HashMap.empty[Baseline, (Double, Double)] // per-baseline extremes
     var path: UTF8String = null
     var file = ""
     var run: Run = null
     var i = -1L
     rows.foreach { r =>
       i += 1
-      if (fileBacked && !r.getUTF8String(6).equals(path)) {
-        path = r.getUTF8String(6).clone()
+      if (fileBacked && !r.getUTF8String(8).equals(path)) {
+        path = r.getUTF8String(8).clone()
         file = path.toString
       }
       require(!r.isNullAt(3), "TIME is null: the input MS main table is malformed")
+      require(!r.isNullAt(4), "INTERVAL is null: the input MS main table is malformed")
+      require(!r.isNullAt(5), "UVW is null: the input MS main table is malformed")
       val f = r.getInt(0); val d = r.getInt(1); val s = r.getInt(2)
       val t = r.getDouble(3)
-      val pos = if (fileBacked) r.getLong(7) else (part.toLong << 33) + i
+      val pos = if (fileBacked) r.getLong(9) else (part.toLong << 33) + i
       // rows of one key are usually consecutive: look up only on a switch
       if (run == null || run.f != f || run.d != d || run.s != s || run.file != file)
         run = open.getOrElse((f, d, s, file), null)
@@ -124,9 +144,10 @@ object Chunking {
       run.hi = math.max(run.hi, pos)
       run.n += 1
       run.intervalSum += r.getDouble(4)
-      run.maxUvw2 = math.max(run.maxUvw2, r.getDouble(5))
+      val x = (r.getDouble(5), r.getDouble(4))
+      bl.updateWith((f, d, s, r.getInt(6), r.getInt(7)))(b => Some(b.fold(x)(extremes(_, x))))
     }
-    (done ++ open.values).toArray
+    ((done ++ open.values).toArray, bl)
   }
 
   /** Decreasing-TIME steps over one group's runs in stored order. */
@@ -148,8 +169,9 @@ object Chunking {
 
   /** Validate + log, raising exactly where the reference raises. */
   def validate(s: PlanStats, label: String): PlanStats = {
+    val maxUvw2 = s.baselines.valuesIterator.map(_._1).foldLeft(0.0)(math.max)
     println(f"[xova] $label plan: rows=${s.nRows} times=${s.nTimes} " +
-      f"interval_mean=${s.intervalMean}%.3f max_uvw=${math.sqrt(s.maxUvw2)}%.1f")
+      f"interval_mean=${s.intervalMean}%.3f max_uvw=${math.sqrt(maxUvw2)}%.1f")
     require(s.monotonicViolations == 0,
       s"${s.monotonicViolations} row(s) break the TIME-monotonicity " +
         "invariant per (field, ddid, scan) group — the input MS is not " +

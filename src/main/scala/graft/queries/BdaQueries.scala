@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.ms.{MsTables, SyntheticMs}
-import graft.ops.Bda
+import graft.ops.{Bda, Chunking, Flags}
 
 /** BDA operators (SURVEY A4/A5/A6/J2) over the parquet MS fixture, each
   * with an exactly-matching DuckDB oracle.
@@ -36,7 +36,7 @@ object BdaQueries {
     */
   val autocorrArgs = raggedArgs.copy(includeAutoCorrs = true)
 
-  /** The SQL mirror of Bda.withBinParams + prepared: CTEs `p` (filtered
+  /** The SQL mirror of Bda.sizing and its bin join: CTEs `p` (filtered
     * main + FROW), `meta` (per-DDID SPW scalars), `sized` (per-baseline
     * BL_MAX / TIME_BIN_SECS / CHAN_BIN), `b` (p ⋈ sized + BIN).
     */
@@ -89,15 +89,14 @@ object BdaQueries {
           JOIN t0 USING (FIELD_ID, DATA_DESC_ID, SCAN_NUMBER))"""
   }
 
-  /** Spark side of the same prep, for entries that expose internals. */
+  /** Spark side of the same sizing: one row per (group, baseline). */
   private def sparkSized(s: SparkSession, a: Bda.Args): DataFrame =
-    Bda.withBinParams(
-      Bda.prepared(MsTables.main(s), MsTables.spw(s), MsTables.ddid(s), a), a)
+    Bda.sizing(Chunking.planStats(Flags.select(MsTables.main(s), a)),
+      MsTables.spw(s), MsTables.ddid(s), a)
 
-  /** A5 at [[sizingArgs]], from a freshly sized frame. */
-  private def channelisations(s: SparkSession): DataFrame = Bda.channelisationsSized(
-    Bda.sizing(MsTables.main(s), MsTables.spw(s), MsTables.ddid(s), sizingArgs),
-    MsTables.ddid(s))
+  /** A5 at [[sizingArgs]]. */
+  private def channelisations(s: SparkSession): Seq[(Int, Int, Int, Int)] =
+    Bda.channelisations(sparkSized(s, sizingArgs))
 
   /** Per-DDID exact stats over the ragged averaged main table (A4 stage
     * 2), shared by the ragged and autocorr entries. `n_autocorr_rows`
@@ -159,8 +158,7 @@ object BdaQueries {
     "ms_a4_bda_sizing" -> ((s, _) =>
       sparkSized(s, sizingArgs)
         .select("FIELD_ID", "DATA_DESC_ID", "SCAN_NUMBER", "ANTENNA1",
-          "ANTENNA2", "TIME_BIN_SECS", "CHAN_BIN")
-        .distinct()),
+          "ANTENNA2", "TIME_BIN_SECS", "CHAN_BIN")),
 
     // A4 stage 2: the ragged averaged main table — per-DDID exact stats
     // (row counts, INTERVAL conservation, per-cell flag semantics,
@@ -176,18 +174,18 @@ object BdaQueries {
     "ms_a4_bda_autocorr" -> ((s, _) => raggedStats(s, autocorrArgs)),
 
     // A5: distinct channelisations of the BDA output, derived from the
-    // sizing frame (CHAN_BIN divides NUM_CHAN, so the output counts are
-    // NUM_CHAN / CHAN_BIN — no need to materialize the averaged arrays;
-    // the oracle computes the same way, NCHAN_IN // chan_bin).
+    // per-baseline sizing (CHAN_BIN divides NUM_CHAN, so the output
+    // counts are NUM_CHAN / CHAN_BIN — no need to materialize the
+    // averaged arrays; the oracle computes the same way,
+    // NCHAN_IN // chan_bin).
     // Reference: xova/apps/xova/averaging.py:409-433.
-    "ms_a5_bda_channelisations" -> ((s, _) => channelisations(s)),
+    "ms_a5_bda_channelisations" -> ((s, _) => s.createDataFrame(channelisations(s))
+      .toDF("DATA_DESC_ID", "SPECTRAL_WINDOW_ID", "POLARIZATION_ID", "NUM_CHAN")),
 
     // A6 + F3: regenerated SPECTRAL_WINDOW rows — linspace grid scalars.
     // Reference: xova/apps/xova/averaging.py:436-542.
     "ms_a6_spw_regen" -> ((s, _) => {
-      val chanls = channelisations(s).collect()
-        .map(r => (r.getInt(0), r.getInt(1), r.getInt(2), r.getInt(3))).toSeq
-      val (newSpw, _, _) = Bda.regenerate(s, chanls, MsTables.spw(s))
+      val (newSpw, _, _) = Bda.regenerate(s, channelisations(s), MsTables.spw(s))
       newSpw.select(
         col("SPECTRAL_WINDOW_ID"), col("NUM_CHAN"),
         element_at(col("CHAN_FREQ"), 1).as("first_freq"),

@@ -42,9 +42,8 @@ class PlanShapeSpec extends SparkSpec {
   }
 
   test("BDA averaging: 1 main-table scan, no global funnel") {
-    // the sizing frame (bp) is materialized once — its fact-table
-    // groupBy executes at construction and the returned plan references
-    // the checkpointed k-row RDD; t0 comes from the plan pass
+    // the plan pass ran at construction; the per-baseline sizing and t0
+    // it yields join as local relations
     val p = plan(Bda.averagedMain(MsTables.main(spark), MsTables.spw(spark),
       MsTables.ddid(spark), Bda.Args()))
     assert(mainScans(p) == 1, s"expected the averaging pass only, got:\n$p")
@@ -75,31 +74,32 @@ class PlanShapeSpec extends SparkSpec {
   }
 
   test("BDA write plan: 1 main-table scan, no runtime bloom-filter subquery") {
-    // the checkpointed sizing frame keeps the planner's (huge) size
-    // estimate of the aggregate behind it; nothing in the write plan may
-    // aggregate over a join with it, which would attract bloom-filter
-    // subqueries that rescan main
+    // a join side whose size estimate is far above its real size (a
+    // checkpoint keeps the estimate of the plan it replaced) attracts
+    // bloom-filter subqueries that rescan main
     val p = plan(bdaWritePlan(spark))
     assert(mainScans(p) == 1, s"expected one main-table scan:\n$p")
     assert(!p.contains("bloom_filter") && !p.contains("might_contain"),
       s"the BDA write plan carries a runtime bloom filter:\n$p")
   }
 
-  test("BDA channelisations read the checkpointed sizing frame: 0 main-table scans") {
-    // Bda.run sizes once: the channelisation frame it collects is a
-    // distinct over the k-row checkpoint, never a fact-table re-plan
-    val args = graft.queries.BdaQueries.raggedArgs
-    val ddid = MsTables.ddid(spark)
-    val bp = Bda.sizing(MsTables.main(spark), MsTables.spw(spark), ddid, args)
-    val p = plan(Bda.channelisationsSized(bp, ddid))
+  test("BDA's broadcast bin relation reports its real size: under 1 MB") {
+    val bytes = bdaSizing(spark)._2.queryExecution.optimizedPlan.stats.sizeInBytes
+    assert(bytes < 1000000, s"the bin relation's size estimate is $bytes B")
+  }
+
+  test("BDA channelisations read the sizing relation: 0 main-table scans") {
+    // Bda.run sizes once, from the plan pass: the channelisations it
+    // collects are a distinct over the local per-baseline relation,
+    // never a fact-table re-plan
+    val p = plan(bdaSizing(spark)._2)
     assert(mainScans(p) == 0, s"channelisations re-scan main:\n$p")
-    assert(p.contains("Scan ExistingRDD"), s"expected the checkpointed sizing frame:\n$p")
   }
 
   /** One averaging shuffle: with no cross-action persist, the proof that
     * it runs ONCE is exactly two graft_vis_avg ObjectHashAggregate
-    * nodes (partial + final; the sizing pre-pass reads the pruned
-    * sizing frame, never the averaged table). It is the write path's
+    * nodes (partial + final; the channelisations read the per-baseline
+    * sizing, never the averaged table). It is the write path's
     * only Exchange apart from broadcasts, and it routes by the group
     * index `_PID`, so the output layout needs no exchange of its own.
     */
@@ -910,18 +910,22 @@ object PlanShapeSpec {
       Chunking.planStats(Flags.select(main, tcArgs)))
   }
 
+  /** Bda.run's plan pass and sizing over the fixture in session `s`, at
+    * `BdaQueries.raggedArgs`.
+    */
+  def bdaSizing(s: SparkSession): (Chunking.PlanStats, DataFrame) = {
+    val args = graft.queries.BdaQueries.raggedArgs
+    val plan = Chunking.planStats(Flags.select(MsTables.main(s), args))
+    (plan, Bda.sizing(plan, MsTables.spw(s), MsTables.ddid(s), args))
+  }
+
   /** The BDA output main table exactly as Bda.run writes it, over the
     * fixture in session `s`.
     */
   def bdaWritePlan(s: SparkSession): DataFrame = {
-    val args = graft.queries.BdaQueries.raggedArgs
-    val main = MsTables.main(s)
-    val spw = MsTables.spw(s); val ddid = MsTables.ddid(s)
-    val bp = Bda.sizing(main, spw, ddid, args)
-    val chanls = Bda.channelisationsSized(bp, ddid).collect()
-      .map(r => (r.getInt(0), r.getInt(1), r.getInt(2), r.getInt(3))).toSeq
-    val (_, _, remapDf) = Bda.regenerate(s, chanls, spw)
-    Bda.outputMain(main, bp, Chunking.planStats(Flags.select(main, args)),
-      graft.ms.SyntheticMs.root, args, remapDf)
+    val (plan, bp) = bdaSizing(s)
+    val (_, _, remapDf) = Bda.regenerate(s, Bda.channelisations(bp), MsTables.spw(s))
+    Bda.outputMain(MsTables.main(s), bp, plan, graft.ms.SyntheticMs.root,
+      graft.queries.BdaQueries.raggedArgs, remapDf)
   }
 }

@@ -24,51 +24,118 @@ class BdaSpec extends SparkSpec {
     assert(Bda.sincInv(0.99) < Bda.sincInv(0.9))
   }
 
-  /** A frame with two baselines of controlled |uv|. */
-  private def frame(blShort: Double, blLong: Double) = {
+  /** One 16-channel SPW (CHAN_WIDTH 1e8, max CHAN_FREQ 1.5e9) behind
+    * DATA_DESC_ID 0.
+    */
+  private lazy val spw16 = Seq((0, 16, (0 until 16).map(i => 1.5e9 - 1.0e8 * (15 - i)),
+      Seq.fill(16)(1.0e8)))
+    .toDF("SPECTRAL_WINDOW_ID", "NUM_CHAN", "CHAN_FREQ", "CHAN_WIDTH")
+  private lazy val ddid0 = Seq((0, 0, 0))
+    .toDF("DATA_DESC_ID", "SPECTRAL_WINDOW_ID", "POLARIZATION_ID")
+
+  /** The sizing of `sel`'s rows through the plan pass, Bda.run's path. */
+  private def sized(sel: DataFrame, args: Bda.Args, spw: DataFrame = spw16,
+                    ddid: DataFrame = ddid0): DataFrame =
+    Bda.sizing(Chunking.planStats(sel), spw, ddid, args)
+
+  /** Rows at four times of baselines (a1, a2) with the given |uv|. */
+  private def rowsOf(baselines: Seq[(Int, Int, Double)]) = {
     val rows = for {
-      (a2, bl) <- Seq((1, blShort), (2, blLong))
+      (a1, a2, bl) <- baselines
       t <- 0 until 4
     } yield (1000.0 + t * 10.0, 10.0, 1000.0 + t * 10.0, 10.0,
-      0, a2, 0, 0, 0, Seq(bl, 0.0, 0.0), false)
+      a1, a2, 0, 0, 0, Seq(bl, 0.0, 0.0), false)
     rows.toDF("TIME", "INTERVAL", "TIME_CENTROID", "EXPOSURE",
-        "ANTENNA1", "ANTENNA2", "FIELD_ID", "DATA_DESC_ID", "SCAN_NUMBER",
-        "UVW", "FROW")
-      .withColumn("NUM_CHAN", lit(16))
-      .withColumn("TOTAL_BANDWIDTH", lit(1.6e9))
-      .withColumn("CHAN_WIDTH_0", lit(1.0e8))
-      .withColumn("FREQ_MAX", lit(1.5e9))
+      "ANTENNA1", "ANTENNA2", "FIELD_ID", "DATA_DESC_ID", "SCAN_NUMBER",
+      "UVW", "FROW")
   }
+
+  /** A frame with two baselines of controlled |uv|. */
+  private def frame(blShort: Double, blLong: Double) =
+    rowsOf(Seq((0, 1, blShort), (0, 2, blLong)))
 
   test("longer baseline gets a time bin no larger and a channel bin no larger") {
     val args = Bda.Args(decorrelation = 0.99, maxFovDeg = 1.0,
       timeBinCapSecs = 1e6, minNchan = 1)
-    val sized = Bda.withBinParams(frame(50.0, 5000.0), args)
+    val bins = sized(frame(50.0, 5000.0), args)
       .select("ANTENNA2", "TIME_BIN_SECS", "CHAN_BIN")
       .distinct().orderBy("ANTENNA2").collect()
-    val (tbShort, cbShort) = (sized(0).getDouble(1), sized(0).getInt(2))
-    val (tbLong, cbLong) = (sized(1).getDouble(1), sized(1).getInt(2))
+    val (tbShort, cbShort) = (bins(0).getDouble(1), bins(0).getInt(2))
+    val (tbLong, cbLong) = (bins(1).getDouble(1), bins(1).getInt(2))
     assert(tbLong <= tbShort)
     assert(cbLong <= cbShort)
     assert(16 % cbShort == 0 && 16 % cbLong == 0) // divisor discipline
   }
 
   test("time bin respects the floor (min INTERVAL) and the user cap") {
-    val capped = Bda.withBinParams(frame(1.0, 2.0),
+    val capped = sized(frame(1.0, 2.0),
       Bda.Args(maxFovDeg = 1.0, timeBinCapSecs = 25.0))
       .select("TIME_BIN_SECS").distinct().as[Double].collect()
     assert(capped.forall(_ == 25.0)) // tiny baselines hit the cap
-    val floored = Bda.withBinParams(frame(1e7, 2e7),
+    val floored = sized(frame(1e7, 2e7),
       Bda.Args(maxFovDeg = 60.0, timeBinCapSecs = 1e6))
       .select("TIME_BIN_SECS").distinct().as[Double].collect()
     assert(floored.forall(_ == 10.0)) // huge baselines floor at INTERVAL
   }
 
   test("minNchan floors the output channelisation") {
-    val sized = Bda.withBinParams(frame(50.0, 60.0),
+    val bins = sized(frame(50.0, 60.0),
       Bda.Args(maxFovDeg = 1e-6, minNchan = 4)) // decorr allows full collapse
       .select("CHAN_BIN").distinct().as[Int].collect()
-    assert(sized.forall(_ == 4)) // 16 / 4 = minNchan
+    assert(bins.forall(_ == 4)) // 16 / 4 = minNchan
+  }
+
+  private val keys = TimeAvg.GroupCols ++ Seq("ANTENNA1", "ANTENNA2")
+
+  /** The fact-table formulation the plan pass replaced: one aggregate
+    * per (group, baseline) over the selection joined with the SPW
+    * metadata, then the same bin arithmetic.
+    */
+  private def factSizing(main: DataFrame, spw: DataFrame, ddid: DataFrame,
+                         a: Bda.Args): DataFrame = {
+    val bl = sqrt(col("UVW")(0) * col("UVW")(0) + col("UVW")(1) * col("UVW")(1) +
+      col("UVW")(2) * col("UVW")(2))
+    val meta = ddid.select("DATA_DESC_ID", "SPECTRAL_WINDOW_ID", "POLARIZATION_ID")
+      .join(Timechannel.selectSpwChannels(spw, a.channels).select(
+        col("SPECTRAL_WINDOW_ID"), col("NUM_CHAN"),
+        element_at(col("CHAN_WIDTH"), 1).as("CHAN_WIDTH_0"),
+        array_max(col("CHAN_FREQ")).as("FREQ_MAX")), "SPECTRAL_WINDOW_ID")
+    Bda.binParams(Flags.select(main, a).join(broadcast(meta), "DATA_DESC_ID")
+      .groupBy(keys.map(col): _*)
+      .agg(max(bl).as("BL_MAX"), min(col("INTERVAL")).as("DT_MIN") +:
+        meta.columns.toSeq.filter(_ != "DATA_DESC_ID").map(c => first(col(c)).as(c)): _*), a)
+  }
+
+  /** A sizing's rows, every double as its raw bits, in key order. */
+  private def bits(bp: DataFrame): Seq[Seq[Any]] =
+    bp.select((keys ++ Seq("SPECTRAL_WINDOW_ID", "POLARIZATION_ID", "NUM_CHAN",
+        "CHAN_WIDTH_0", "FREQ_MAX", "BL_MAX", "DT_MIN", "TIME_BIN_SECS", "CHAN_BIN"))
+        .map(col): _*)
+      .collect().toSeq
+      .map(_.toSeq.map {
+        case d: Double => java.lang.Double.doubleToRawLongBits(d)
+        case v => v
+      })
+      .sortBy(_.take(keys.length).mkString(","))
+
+  test("the plan-pass sizing equals the fact-table aggregate bit for bit") {
+    import graft.queries.BdaQueries.{autocorrArgs, raggedArgs, sizingArgs}
+    val main = graft.ms.MsTables.main(spark)
+    val spw = graft.ms.MsTables.spw(spark)
+    val ddid = graft.ms.MsTables.ddid(spark)
+    val fixture = Bda.Args(dataCols = Seq("DATA" -> "DATA"))
+    val cases = Seq(
+      "fixture" -> (main, fixture),
+      "fixture, 3 splits" -> (main.repartition(3), fixture),
+      "sizingArgs" -> (main, sizingArgs),
+      "raggedArgs" -> (main, raggedArgs),
+      "autocorrArgs" -> (main, autocorrArgs),
+      "P8 channels" -> (main, sizingArgs.copy(channels = 2 until 14)))
+    for ((name, (m, a)) <- cases) {
+      val want = bits(factSizing(main, spw, ddid, a))
+      assert(want.nonEmpty, name)
+      assert(bits(sized(Flags.select(m, a), a, spw, ddid)) == want, name)
+    }
   }
 
   test("BDA without WEIGHT_SPECTRUM weights by broadcast WEIGHT exactly") {
@@ -96,22 +163,13 @@ class BdaSpec extends SparkSpec {
     // an autocorrelation baseline (ANTENNA1 == ANTENNA2, UVW = 0) must
     // not divide by BL_MAX = 0 — time bin degenerates to the user cap,
     // channel factor to the min_nchan floor
-    val rows = (0 until 4).map(t => (1000.0 + t * 10.0, 10.0,
-      1000.0 + t * 10.0, 10.0, 3, 3, 0, 0, 0, Seq(0.0, 0.0, 0.0), false))
-    val auto = rows.toDF("TIME", "INTERVAL", "TIME_CENTROID", "EXPOSURE",
-        "ANTENNA1", "ANTENNA2", "FIELD_ID", "DATA_DESC_ID", "SCAN_NUMBER",
-        "UVW", "FROW")
-      .withColumn("NUM_CHAN", lit(16))
-      .withColumn("TOTAL_BANDWIDTH", lit(1.6e9))
-      .withColumn("CHAN_WIDTH_0", lit(1.0e8))
-      .withColumn("FREQ_MAX", lit(1.5e9))
-    val sized = Bda.withBinParams(auto,
+    val bins = sized(rowsOf(Seq((3, 3, 0.0))),
       Bda.Args(maxFovDeg = 1.0, timeBinCapSecs = 25.0, minNchan = 4,
         includeAutoCorrs = true))
       .select("TIME_BIN_SECS", "CHAN_BIN").distinct().collect()
-    assert(sized.length == 1)
-    assert(sized(0).getDouble(0) == 25.0) // finite: the cap, not Inf/NaN
-    assert(sized(0).getInt(1) == 4)       // full collapse down to minNchan
+    assert(bins.length == 1)
+    assert(bins(0).getDouble(0) == 25.0) // finite: the cap, not Inf/NaN
+    assert(bins(0).getInt(1) == 4)       // full collapse down to minNchan
   }
 
   test("--include-auto-correlations keeps autocorr baselines end-to-end") {
@@ -122,13 +180,13 @@ class BdaSpec extends SparkSpec {
       timeBinCapSecs = 90000.0, includeAutoCorrs = true)
     val isAuto = col("ANTENNA1") === col("ANTENNA2")
     // default (flag off): autocorrs filtered, reference TAQL parity
-    val off = Bda.prepared(main, spw, ddid, on.copy(includeAutoCorrs = false))
-    assert(off.filter(isAuto).count() == 0)
+    val off = on.copy(includeAutoCorrs = false)
+    assert(sized(Flags.select(main, off), off, spw, ddid).filter(isAuto).count() == 0)
     // flag on: sizing is finite for every baseline and the averaged
     // OUTPUT still carries the autocorr population
-    val sized = Bda.withBinParams(Bda.prepared(main, spw, ddid, on), on)
-    assert(sized.filter(isAuto).count() > 0)
-    assert(sized.filter(col("TIME_BIN_SECS").isNull ||
+    val bins = sized(Flags.select(main, on), on, spw, ddid)
+    assert(bins.filter(isAuto).count() > 0)
+    assert(bins.filter(col("TIME_BIN_SECS").isNull ||
       isnan(col("TIME_BIN_SECS")) ||
       col("TIME_BIN_SECS") > 90000.0).count() == 0)
     assert(Bda.averagedMain(main, spw, ddid, on).filter(isAuto).count() > 0)
@@ -178,7 +236,7 @@ class BdaSpec extends SparkSpec {
       val m = main.filter(col("DATA_DESC_ID") === dd)
       val a = Bda.Args(maxFovDeg = 1e-9, timeBinCapSecs = t,
         minNchan = nchan / c, dataCols = Seq("DATA" -> "DATA"))
-      assert(Bda.sizing(m, spw, ddid, a).select("TIME_BIN_SECS", "CHAN_BIN")
+      assert(sized(Flags.select(m, a), a, spw, ddid).select("TIME_BIN_SECS", "CHAN_BIN")
         .distinct().collect().map(r => (r.getDouble(0), r.getInt(1))).toSeq ==
         Seq((t, c)))
       val tc = Timechannel.averagedMain(m, Timechannel.Args(timeBinSecs = t,

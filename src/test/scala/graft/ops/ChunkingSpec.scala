@@ -115,11 +115,44 @@ class ChunkingSpec extends SparkSpec {
     val times = (0 until 8).map(_.toDouble)
     val st = Chunking.planStats(rowsAt(times, 2))
     assert(st.monotonicViolations == 0 && st.nRows == 8 && st.nTimes == 8)
-    assert(st.intervalMean == 1.0 && st.maxUvw2 == 1.0)
+    assert(st.intervalMean == 1.0 && st.baselines == Map((0, 0, 0, 1, 2) -> (1.0, 1.0)))
     assert(st.t0 == Map((0, 0, 0) -> 0.0))
     // the second split's times precede the first's: one decrease
     assert(Chunking.planStats(rowsAt(times.drop(4) ++ times.take(4), 2))
       .monotonicViolations == 1)
+  }
+
+  /** The (0, 0, 0) baseline (1, 2) at times 0-3 with the given INTERVAL
+    * and UVW per row, in one split.
+    */
+  private def baselineRows(rows: Seq[(Option[Double], Option[Seq[Double]])]) =
+    rows.zipWithIndex.map { case ((dt, uvw), t) => (0, 0, 0, 1, 2, t.toDouble, dt, uvw) }
+      .toDF(cols: _*).coalesce(1)
+
+  /** The message of the failure planStats raises on `df`. */
+  private def failure(df: org.apache.spark.sql.DataFrame): String =
+    Iterator.iterate(intercept[Exception](Chunking.planStats(df)): Throwable)(_.getCause)
+      .takeWhile(_ != null).map(e => String.valueOf(e.getMessage)).mkString("\n")
+
+  test("INTERVAL: null is rejected by name; the min orders NaN above numbers") {
+    val one = Some(Seq(1.0, 0.0, 0.0))
+    assert(failure(baselineRows(Seq(Some(1.0) -> one, None -> one)))
+      .contains("INTERVAL is null"))
+    // Spark's min skips NaN unless every value is NaN; math.min would not
+    val mixed = baselineRows(Seq(Some(3.0), Some(Double.NaN), Some(2.0)).map(_ -> one))
+    val sparkMin = mixed.agg(org.apache.spark.sql.functions.min("INTERVAL")).head().getDouble(0)
+    assert(sparkMin == 2.0)
+    assert(Chunking.planStats(mixed).baselines == Map((0, 0, 0, 1, 2) -> (1.0, sparkMin)))
+    val nan = baselineRows(Seq(Some(Double.NaN) -> one))
+    assert(Chunking.planStats(nan).baselines((0, 0, 0, 1, 2))._2.isNaN)
+  }
+
+  test("UVW: null is rejected by name; the max of uvw² is per baseline") {
+    assert(failure(baselineRows(Seq(Some(1.0) -> Some(Seq(1.0, 0.0, 0.0)),
+      Some(1.0) -> None))).contains("UVW is null"))
+    val st = Chunking.planStats(baselineRows(Seq(Seq(1.0, 2.0, 2.0), Seq(3.0, 0.0, 4.0),
+      Seq(0.0, 0.0, 1.0)).map(u => Some(1.0) -> Some(u))))
+    assert(st.baselines == Map((0, 0, 0, 1, 2) -> (25.0, 1.0)))
   }
 
   test("fixture MS: FLAG/WEIGHT_SPECTRUM/SIGMA_SPECTRUM congruent with DATA") {
